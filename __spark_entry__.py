@@ -190,6 +190,16 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(spark.sparkContext.defaultParallelism))
 
 
+def _spark_hidden(name: str) -> bool:
+    """Whether Spark's file listing skips this file or directory name
+    (HadoopFSUtils.shouldFilterOutPathName): '.'-prefixed, '_'-prefixed
+    unless a 'k=v' partition directory or parquet summary metadata, or an
+    in-flight '._COPYING_' copy."""
+    exclude = (name.startswith('.') or name.endswith('._COPYING_')
+               or (name.startswith('_') and '=' not in name))
+    return exclude and not name.startswith(('_common_metadata', '_metadata'))
+
+
 def _parquet_nrows(path: str) -> int:
     """Row count of a parquet file/directory from the footers — exactly
     what a Spark count() over the same path returns, without launching a
@@ -200,9 +210,9 @@ def _parquet_nrows(path: str) -> int:
         return pq.ParquetFile(path).metadata.num_rows
     total = 0
     for root, _dirs, files in _os.walk(path):
-        _dirs[:] = [d for d in _dirs if not d.startswith(('_', '.'))]
+        _dirs[:] = [d for d in _dirs if not _spark_hidden(d)]
         for name in files:
-            if name.endswith('.parquet'):
+            if name.endswith('.parquet') and not _spark_hidden(name):
                 total += pq.ParquetFile(
                     _os.path.join(root, name)).metadata.num_rows
     return total
@@ -255,14 +265,13 @@ _EXTRACTED_CACHE: dict = {}
 
 
 def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the real S1→S2→S3 operators over the injected corpus (cached per
-    session+sf so the kg_* queries share one pass).
+    """Stages 1-3 over the injected corpus (cached per session+sf so the
+    kg_* queries share one pass).
 
-    Uses the fused normalize+sweep+link UDF (make_linked_mentions_udf,
-    source='plain'): ONE ArrowEvalPython node instead of the
-    clean→(rule‖lexicon)→link chain, and the kg_link_* queries read the
-    canonical obj/obj_type/norm columns directly instead of paying a
-    second link pass each."""
+    make_linked_mentions_udf(source='plain') runs normalization, the
+    mention kernel and the linker in ONE Python pass, so the kg_link_*
+    queries read the canonical obj/obj_type/norm columns directly instead
+    of paying a second link pass each."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in _EXTRACTED_CACHE:
         return _EXTRACTED_CACHE[key]
@@ -701,7 +710,7 @@ def q_kg_recognize_location(spark, sf_dir):
         f"concat('先到', {_LOC_SQL}, '。随后去', {_LOC_SQL}, "
         "'。离开北京市海淀区。') as text")
     lex_udf = make_lexicon_linked_udf(build_location_trie(spark),
-                                      build_bundle(spark), normalize=True)
+                                      build_bundle(spark))
     linked = (pages.select('doc_id', F.explode(lex_udf(F.col('text')))
                            .alias('m'))
               .select('doc_id', 'm.obj_type', 'm.norm'))

@@ -12,15 +12,14 @@ import json
 
 import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from jionlp_spark import lexicons
 from jionlp_spark.kernels.cleaner import get_cleaner
-from jionlp_spark.kernels.extractors import get_extractor
 from jionlp_spark.kernels.html_clean import clean_html
 from jionlp_spark.kernels.idcard import IdCardParser
+from jionlp_spark.kernels.mentions import Linker, lexicon_mentions, mentions
 from jionlp_spark.kernels.phone_loc import PhoneLocator
 from jionlp_spark.functions.ndet import ndet as _ndet
 
@@ -38,16 +37,20 @@ from jionlp_spark.functions.ndet import ndet as _ndet
 _BC_VALUE_CACHE: dict = {}
 
 
+def _worker_cached(key, build):
+    v = _BC_VALUE_CACHE.get(key)
+    if v is None:
+        if len(_BC_VALUE_CACHE) >= 8:   # oldest-first eviction
+            _BC_VALUE_CACHE.pop(next(iter(_BC_VALUE_CACHE)))
+        v = _BC_VALUE_CACHE[key] = build()
+    return v
+
+
 def _bc_value(bc):
     path = getattr(bc, '_path', None)
     if path is None:
         return bc.value
-    v = _BC_VALUE_CACHE.get(path)
-    if v is None:
-        if len(_BC_VALUE_CACHE) >= 8:   # oldest-first eviction
-            _BC_VALUE_CACHE.pop(next(iter(_BC_VALUE_CACHE)))
-        v = _BC_VALUE_CACHE[path] = bc.value
-    return v
+    return _worker_cached(path, lambda: bc.value)
 
 
 # ---------------------------------------------------------------------------
@@ -80,6 +83,11 @@ LINK_RESULT = T.StructType([
     T.StructField('obj', T.StringType()),       # canonical entity key
     T.StructField('obj_type', T.StringType()),
     T.StructField('norm', T.StringType()),      # JSON canonical detail
+])
+
+LINKED_MENTION_TYPE = T.StructType(MENTION_FIELDS + [
+    T.StructField('obj', T.StringType()),
+    T.StructField('obj_type', T.StringType()),
 ])
 
 
@@ -123,18 +131,6 @@ def clean_html_text_udf(html: pd.Series) -> pd.DataFrame:
 
 
 @_ndet
-@pandas_udf(T.StringType())
-def extract_text_udf(text: pd.Series) -> pd.Series:
-    """Normalization ONLY (no redaction chain): for stages that consume just
-    extract_text.  Catalyst cannot prune fields inside a struct-returning
-    UDF, so computing `clean` alongside would pay the full redaction regex
-    chain even when nothing reads it."""
-    cleaner = get_cleaner()
-    return text.map(lambda t: _normalize_only(cleaner, t, strip_tags=True)
-                    if t is not None else None)
-
-
-@_ndet
 @pandas_udf(CLEAN_RESULT)
 def clean_plain_text_udf(text: pd.Series) -> pd.DataFrame:
     """text:string (pre-extracted body) → (clean, extract_text, meta=None)."""
@@ -151,82 +147,7 @@ def clean_plain_text_udf(text: pd.Series) -> pd.DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stage-2 mention sweep
-
-@_ndet
-@pandas_udf(MENTIONS_ARRAY)
-def rule_mentions_udf(text: pd.Series, warc_ts: pd.Series) -> pd.Series:
-    """One fused pass per document: all regex extractors + the money and
-    time grid-search extractors (parse results ride along as norm JSON).
-
-    ``warc_ts`` is the per-row time base for time parsing — deterministic
-    and replayable, never wall-clock (north_rule requirement).
-    """
-    from jionlp_spark.kernels.money_extract import get_money_extractor
-    from jionlp_spark.kernels.time_extract import get_time_extractor
-    ex = get_extractor()
-    mex = get_money_extractor()
-    tex = get_time_extractor()
-
-    out_rows = []
-    for t, ts in zip(text, warc_ts):
-        if t is None:
-            out_rows.append([])
-            continue
-        out = [(m['text'], m['offset'][0], m['offset'][1], m['type'], None)
-               for m in ex.sweep(t)]
-        out.extend(
-            (m['text'], m['offset'][0], m['offset'][1], 'money',
-             json.dumps(m['detail'], ensure_ascii=False))
-            for m in mex.extract(t, with_parsing=True))
-        time_base = ts.to_pydatetime() if ts is not None and not pd.isna(ts) \
-            else None
-        if time_base is not None:
-            out.extend(
-                (m['text'], m['offset'][0], m['offset'][1], m['type'],
-                 json.dumps(m['detail'], ensure_ascii=False))
-                for m in tex.extract(t, time_base, with_parsing=True))
-        out_rows.append(out)
-    return pd.Series(out_rows)
-
-
-def make_lexicon_mentions_udf(trie_broadcast, merge_adjacent: bool = True):
-    """FMM dictionary NER over a broadcast CharTrie → mentions array.
-
-    ``merge_adjacent`` fuses contiguous same-type matches into one span —
-    '湖北省'+'襄樊市' → '湖北省襄樊市' — so the location linker sees whole
-    admin phrases.
-    """
-    @_ndet
-    @pandas_udf(MENTIONS_ARRAY)
-    def lexicon_mentions_udf(text: pd.Series) -> pd.Series:
-        trie = _bc_value(trie_broadcast)
-
-        def scan(t):
-            if t is None:
-                return []
-            hits = trie.scan_fmm(t)
-            if merge_adjacent and len(hits) > 1:
-                merged = [hits[0]]
-                for h in hits[1:]:
-                    prev = merged[-1]
-                    if h['type'] == prev['type'] and \
-                            h['offset'][0] == prev['offset'][1]:
-                        prev['text'] += h['text']
-                        prev['offset'][1] = h['offset'][1]
-                    else:
-                        merged.append(h)
-                hits = merged
-            return [(m['text'], m['offset'][0], m['offset'][1],
-                     'lexicon:' + m['type'], None)
-                    for m in hits]
-
-        return text.map(scan)
-    return lexicon_mentions_udf
-
-
-# ---------------------------------------------------------------------------
-# Stage-3 canonicalization (broadcast lexicons)
+# Broadcast lexicons
 
 class LexiconBundle:
     """Driver-side lexicon container; broadcast once per session."""
@@ -264,317 +185,104 @@ def build_location_trie(spark: SparkSession, dict_dir: str | None = None):
     return _TRIE_BC_CACHE[key]
 
 
-def make_link_udf(bundle_broadcast):
-    """(mention_type, text, norm_in) → (obj, obj_type, norm-json).
+# ---------------------------------------------------------------------------
+# Stage-2/3 mentions and linking: per-batch wrappers over kernels/mentions.py
 
-    Canonical keys:
-      cell/landline phone → 'province city' geo + digits-only number
-      id_card             → issuing region 'province/city/county'
-      money               → '<num><case>' from the extraction-time parse
-      email               → lowercased address; url → as-is; others → text
-    """
+def _time_base(ts):
+    """Arrow timestamp cell → datetime, None for a null."""
+    return ts.to_pydatetime() if ts is not None and not pd.isna(ts) else None
+
+
+def _linker(bundle_broadcast) -> Linker:
+    """One Linker per broadcast bundle per worker process (cached beside
+    _bc_value), so its location memo outlives the task."""
+    path = getattr(bundle_broadcast, '_path', None)
+    if path is None:
+        return Linker(bundle_broadcast.value)
+    return _worker_cached((path, 'linker'),
+                          lambda: Linker(_bc_value(bundle_broadcast)))
+
+
+def make_mentions_udf(trie_broadcast=None):
+    """(extract_text, warc_ts) → array<mention>: kernels.mentions.mentions
+    per row.  ``warc_ts`` is the time base for time parsing; lexicon NER
+    runs only when a broadcast CharTrie is given."""
+    @_ndet
+    @pandas_udf(MENTIONS_ARRAY)
+    def mentions_udf(text: pd.Series, warc_ts: pd.Series) -> pd.Series:
+        trie = _bc_value(trie_broadcast) if trie_broadcast is not None \
+            else None
+        return pd.Series([mentions(t, _time_base(ts), trie)
+                          if t is not None else []
+                          for t, ts in zip(text, warc_ts)])
+    return mentions_udf
+
+
+def make_link_udf(bundle_broadcast):
+    """(mention_type, text, norm_in) → (obj, obj_type, norm-json):
+    Linker.link per row (canonical keys listed there)."""
     @_ndet
     @pandas_udf(LINK_RESULT)
     def link_udf(mention_type: pd.Series, text: pd.Series,
                  norm_in: pd.Series) -> pd.DataFrame:
-        bundle = _bc_value(bundle_broadcast)
-        objs, obj_types, norms = [], [], []
-        for mtype, t, pre_norm in zip(mention_type, text, norm_in):
-            if t is None:
-                objs.append(None); obj_types.append(None); norms.append(None)
-                continue
-            if mtype == 'money':
-                detail = json.loads(pre_norm) if pre_norm else {}
-                num = detail.get('num')
-                if isinstance(num, list):
-                    key = '{}~{}{}'.format(num[0], num[1],
-                                           detail.get('case', ''))
-                else:
-                    key = '{}{}'.format(num, detail.get('case', ''))
-                objs.append(key)
-                obj_types.append('money')
-                norms.append(pre_norm)
-                continue
-            if mtype in ('cell_phone', 'landline_phone'):
-                res = bundle.phone.locate(t)
-                geo = ' '.join(x for x in (res['province'], res['city']) if x)
-                objs.append(bundle.phone.canonical_number(t))
-                obj_types.append('phone')
-                norms.append(json.dumps(
-                    {'province': res['province'], 'city': res['city'],
-                     'type': res['type'],
-                     'operator': res.get('operator'),
-                     'geo': geo or None}, ensure_ascii=False))
-            elif mtype == 'id_card':
-                res = bundle.idcard.parse(t)
-                # canonical id form: trailing X lowercased
-                # (id_card_parser.py:91-92)
-                objs.append(t[:-1] + t[-1].lower())
-                obj_types.append('id_card')
-                norms.append(json.dumps(res, ensure_ascii=False)
-                             if res is not None else None)
-            elif mtype == 'email':
-                ex = get_extractor()
-                objs.append(t.lower())
-                obj_types.append('email')
-                dom = ex.email_domain(t)
-                norms.append(json.dumps({'domain_name': dom},
-                                        ensure_ascii=False) if dom else None)
-            elif mtype in ('time_point', 'time_span', 'time_delta',
-                           'time_period'):
-                detail = json.loads(pre_norm) if pre_norm else {}
-                tval = detail.get('time')
-                if isinstance(tval, list) and tval and \
-                        all(isinstance(x, str) for x in tval):
-                    key = '~'.join(tval)
-                else:
-                    key = json.dumps(tval, ensure_ascii=False, sort_keys=True)
-                objs.append(key)
-                obj_types.append('time')
-                norms.append(pre_norm)
-            elif mtype == 'lexicon:location':
-                res = bundle.location.parse(t)
-                key = '/'.join(x for x in (res['province'], res['city'],
-                                           res['county']) if x)
-                objs.append(key or t)
-                obj_types.append('location')
-                norms.append(json.dumps(
-                    {'province': res['province'], 'city': res['city'],
-                     'county': res['county']}, ensure_ascii=False))
-            elif mtype == 'licence_plate':
-                from jionlp_spark.kernels.plate import parse_licence_plate
-                res = parse_licence_plate(t)
-                objs.append(t)
-                obj_types.append('licence_plate')
-                norms.append(json.dumps(res, ensure_ascii=False)
-                             if res is not None else None)
-            elif mtype and mtype.startswith('lexicon:'):
-                objs.append(t)
-                obj_types.append(mtype.split(':', 1)[1])
-                norms.append(pre_norm)
-            else:
-                objs.append(t)
-                obj_types.append(mtype)
-                norms.append(pre_norm)
-        return pd.DataFrame({'obj': objs, 'obj_type': obj_types,
-                             'norm': norms})
+        link = _linker(bundle_broadcast).link
+        return pd.DataFrame(
+            [link(m, t, n) if t is not None else (None, None, None)
+             for m, t, n in zip(mention_type, text, norm_in)],
+            columns=['obj', 'obj_type', 'norm'])
     return link_udf
 
 
-LINKED_MENTION_TYPE = T.StructType(MENTION_FIELDS + [
-    T.StructField('obj', T.StringType()),
-    T.StructField('obj_type', T.StringType()),
-])
-
-
-def make_lexicon_linked_udf(trie_broadcast, bundle_broadcast,
-                            normalize: bool = False):
-    """Fused lexicon NER + LocationParser linking in ONE Python pass
-    (no second ArrowEvalPython node, no self-join): the per-worker memo on
-    parse() exploits that distinct place strings (~10⁵ at crawl scale) are
-    tiny next to mention volume.  ``normalize=True`` folds the extract_text
-    normalization into the same pass — chained ArrowEvalPython stages each
-    pin their own Python workers, which dominates at small inputs."""
+def make_lexicon_linked_udf(trie_broadcast, bundle_broadcast):
+    """Plain text → normalized → lexicon NER → linked, in ONE Python pass
+    (no second ArrowEvalPython node, no self-join)."""
     @_ndet
     @pandas_udf(T.ArrayType(LINKED_MENTION_TYPE))
     def lexicon_linked_udf(text: pd.Series) -> pd.Series:
         trie = _bc_value(trie_broadcast)
-        location = _bc_value(bundle_broadcast).location
-        cleaner = get_cleaner() if normalize else None
-        memo: dict = {}
-
-        def link_loc(t):
-            hit = memo.get(t)
-            if hit is None:
-                res = location.parse(t)
-                key = '/'.join(x for x in (res['province'], res['city'],
-                                           res['county']) if x)
-                hit = (key or t, json.dumps(
-                    {'province': res['province'], 'city': res['city'],
-                     'county': res['county']}, ensure_ascii=False))
-                memo[t] = hit
-            return hit
-
-        def scan(t):
-            if t is None:
-                return []
-            if cleaner is not None:
-                t = _normalize_only(cleaner, t, strip_tags=True)
-            hits = trie.scan_fmm(t)
-            if len(hits) > 1:
-                merged = [hits[0]]
-                for h in hits[1:]:
-                    prev = merged[-1]
-                    if h['type'] == prev['type'] and \
-                            h['offset'][0] == prev['offset'][1]:
-                        prev['text'] += h['text']
-                        prev['offset'][1] = h['offset'][1]
-                    else:
-                        merged.append(h)
-                hits = merged
-            out = []
-            for m in hits:
-                obj, norm = link_loc(m['text'])
-                out.append((m['text'], m['offset'][0], m['offset'][1],
-                            'lexicon:' + m['type'], norm, obj, 'location'))
-            return out
-
-        return text.map(scan)
+        linker = _linker(bundle_broadcast)
+        cleaner = get_cleaner()
+        return pd.Series([
+            linker.linked(lexicon_mentions(
+                _normalize_only(cleaner, t, strip_tags=True), trie))
+            if t is not None else [] for t in text])
     return lexicon_linked_udf
 
 
-def make_linked_mentions_udf(bundle_broadcast, trie_broadcast=None,
-                             source: str | None = None):
-    """Fused stage-2+3: mention sweep AND canonicalization in ONE Python
-    pass per batch → array<linked mention>.
+def make_linked_mentions_udf(bundle_broadcast, trie_broadcast=None, *,
+                             source: str):
+    """Fused stages 1-3 for a triples-only plan: normalization, the mention
+    kernel and the linker in ONE Python pass per batch → array<linked
+    mention>, the same rows as clean_pages → extract_mentions →
+    link_mentions.
 
-    Physically halves the Python hops of the hot stage (each chained
-    ArrowEvalPython node costs a dedicated worker per task); logically the
-    output is identical to extract_mentions → link_mentions.
-
-    ``source``: None = input is already extract_text; 'plain'/'html' fold
-    the normalization (and CleanHTML main-text extraction) into the SAME
-    pass, so a triples-only plan runs ONE ArrowEvalPython node total and
-    never pays the redaction chain that only the `clean` deliverable needs.
+    ``source`` names the input column's form: 'html' runs CleanHTML
+    main-text extraction first, 'plain' only normalizes.  Neither pays the
+    redaction chain that only the `clean` deliverable needs.
     """
-    from jionlp_spark.kernels.money_extract import get_money_extractor
-    from jionlp_spark.kernels.time_extract import get_time_extractor
+    if source not in ('html', 'plain'):
+        raise ValueError(f"source must be 'html' or 'plain', not {source!r}")
 
-    # worker-persistent location-parse memo (the UDF object lives across
-    # batches in a reused worker): distinct place strings are tiny next to
-    # mention volume — same rationale as make_lexicon_linked_udf's memo
-    _loc_memo: dict = {}
+    def extract_text(cleaner, raw):
+        if source == 'plain':
+            return _normalize_only(cleaner, raw, strip_tags=True)
+        if isinstance(raw, (bytes, bytearray)):
+            raw = raw.decode('utf-8', errors='replace')
+        body, _meta = clean_html(raw)
+        return _normalize_only(cleaner, body, strip_tags=False)
 
     @_ndet
     @pandas_udf(T.ArrayType(LINKED_MENTION_TYPE))
     def linked_mentions_udf(text: pd.Series, warc_ts: pd.Series) -> pd.Series:
-        bundle = _bc_value(bundle_broadcast)
-        trie = _bc_value(trie_broadcast) if trie_broadcast is not None else None
-        cleaner = get_cleaner() if source is not None else None
-        ex = get_extractor()
-        mex = get_money_extractor()
-        tex = get_time_extractor()
-
-        def link_one(mtype, t, pre_norm):
-            # same canonicalization as make_link_udf, inline
-            if mtype in ('cell_phone', 'landline_phone'):
-                res = bundle.phone.locate(t)
-                geo = ' '.join(x for x in (res['province'], res['city']) if x)
-                return (bundle.phone.canonical_number(t), 'phone',
-                        json.dumps({'province': res['province'],
-                                    'city': res['city'], 'type': res['type'],
-                                    'operator': res.get('operator'),
-                                    'geo': geo or None}, ensure_ascii=False))
-            if mtype == 'id_card':
-                res = bundle.idcard.parse(t)
-                return (t[:-1] + t[-1].lower(), 'id_card',
-                        json.dumps(res, ensure_ascii=False)
-                        if res is not None else None)
-            if mtype == 'email':
-                dom = ex.email_domain(t)
-                return (t.lower(), 'email',
-                        json.dumps({'domain_name': dom}, ensure_ascii=False)
-                        if dom else None)
-            if mtype == 'money':
-                detail = json.loads(pre_norm) if pre_norm else {}
-                num = detail.get('num')
-                key = ('{}~{}{}'.format(num[0], num[1], detail.get('case', ''))
-                       if isinstance(num, list)
-                       else '{}{}'.format(num, detail.get('case', '')))
-                return key, 'money', pre_norm
-            if mtype in ('time_point', 'time_span', 'time_delta',
-                         'time_period'):
-                detail = json.loads(pre_norm) if pre_norm else {}
-                tval = detail.get('time')
-                key = ('~'.join(tval) if isinstance(tval, list) and tval and
-                       all(isinstance(x, str) for x in tval)
-                       else json.dumps(tval, ensure_ascii=False,
-                                       sort_keys=True))
-                return key, 'time', pre_norm
-            if mtype == 'lexicon:location':
-                hit = _loc_memo.get(t)
-                if hit is None:
-                    res = bundle.location.parse(t)
-                    key = '/'.join(x for x in (res['province'], res['city'],
-                                               res['county']) if x)
-                    hit = (key or t, 'location',
-                           json.dumps({'province': res['province'],
-                                       'city': res['city'],
-                                       'county': res['county']},
-                                      ensure_ascii=False))
-                    if len(_loc_memo) < 200000:
-                        _loc_memo[t] = hit
-                return hit
-            if mtype == 'licence_plate':
-                from jionlp_spark.kernels.plate import parse_licence_plate
-                res = parse_licence_plate(t)
-                return (t, 'licence_plate',
-                        json.dumps(res, ensure_ascii=False)
-                        if res is not None else None)
-            if mtype and mtype.startswith('lexicon:'):
-                return t, mtype.split(':', 1)[1], pre_norm
-            return t, mtype, pre_norm
-
-        out_rows = []
-        for t, ts in zip(text, warc_ts):
-            if t is None:
-                out_rows.append([])
-                continue
-            if source == 'html':
-                if isinstance(t, (bytes, bytearray)):
-                    t = t.decode('utf-8', errors='replace')
-                body, _meta = clean_html(t)
-                t = _normalize_only(cleaner, body, strip_tags=False)
-            elif source == 'plain':
-                t = _normalize_only(cleaner, t, strip_tags=True)
-            raw = [(m['text'], m['offset'][0], m['offset'][1], m['type'],
-                    None) for m in ex.sweep(t)]
-            raw.extend(
-                (m['text'], m['offset'][0], m['offset'][1], 'money',
-                 json.dumps(m['detail'], ensure_ascii=False))
-                for m in mex.extract(t, with_parsing=True))
-            tb = ts.to_pydatetime() if ts is not None and not pd.isna(ts) \
-                else None
-            if tb is not None:
-                raw.extend(
-                    (m['text'], m['offset'][0], m['offset'][1], m['type'],
-                     json.dumps(m['detail'], ensure_ascii=False))
-                    for m in tex.extract(t, tb, with_parsing=True))
-            if trie is not None:
-                hits = trie.scan_fmm(t)
-                if len(hits) > 1:
-                    merged = [hits[0]]
-                    for h in hits[1:]:
-                        prev = merged[-1]
-                        if h['type'] == prev['type'] and \
-                                h['offset'][0] == prev['offset'][1]:
-                            prev['text'] += h['text']
-                            prev['offset'][1] = h['offset'][1]
-                        else:
-                            merged.append(h)
-                    hits = merged
-                raw.extend((m['text'], m['offset'][0], m['offset'][1],
-                            'lexicon:' + m['type'], None) for m in hits)
-            linked = []
-            for mtext, s, e, mtype, pre_norm in raw:
-                obj, obj_type, norm = link_one(mtype, mtext, pre_norm)
-                linked.append((mtext, s, e, mtype, norm, obj, obj_type))
-            out_rows.append(linked)
-        return pd.Series(out_rows)
+        trie = _bc_value(trie_broadcast) if trie_broadcast is not None \
+            else None
+        linker = _linker(bundle_broadcast)
+        cleaner = get_cleaner()
+        return pd.Series([
+            linker.linked(mentions(extract_text(cleaner, t), _time_base(ts),
+                                   trie))
+            if t is not None else [] for t, ts in zip(text, warc_ts)])
     return linked_mentions_udf
-
-
-# ---------------------------------------------------------------------------
-# helpers
-
-def explode_mentions(df, mentions_col: str = 'mentions', keep_cols=('url',)):
-    """array<mention> column → long-format mention rows."""
-    cols = [F.col(c) for c in keep_cols]
-    return (
-        df.select(*cols, F.explode(mentions_col).alias('m'))
-        .select(*cols, 'm.text', 'm.offset_start', 'm.offset_end',
-                'm.mention_type')
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -690,8 +398,8 @@ def make_sentiment_udf(analyzer_broadcast):
 
 
 def make_location_town_udf(bundle_broadcast):
-    """Five-level location parse (province…village; town_village=True mode,
-    ref location_parser.py:488-523)."""
+    """Five-level address parse, province…village (the reference
+    LocationParser's town_village=True mode, :488-523)."""
     schema = T.StructType([
         T.StructField('province', T.StringType()),
         T.StructField('city', T.StringType()),

@@ -49,13 +49,6 @@ def _joined_pinyin(pairs) -> str:
     return ''.join(c + v for c, v in pairs)
 
 
-def _parsed_pairs(pairs) -> list:
-    """[(consonant, vowel), ...] from either form."""
-    if isinstance(pairs, str):
-        return [tuple(p.split(',', 1)) for p in pairs.split('|')]
-    return pairs
-
-
 def build_word_pinyin_dict(word_distribution) -> dict:
     """Reference _construct_word_pinyin_dict (:76-112) over
     [(word, count, pairs)] rows where pairs is [(consonant, vowel), ...]

@@ -18,10 +18,6 @@ _NORM = ("sqrt(aggregate(transform({a}, x -> cast(x as double) * cast(x as doubl
          "cast(0.0 as double), (acc, v) -> acc + v))")
 
 
-def _cosine(a: str, b: str):
-    return F.expr(f"{_DOT.format(a=a, b=b)} / ({_NORM.format(a=a)} * {_NORM.format(a=b)})")
-
-
 def _norm_col(vec_col: str):
     return F.expr(_NORM.format(a=vec_col))
 

@@ -17,42 +17,31 @@ from pyspark.sql import functions as F
 from jionlp_spark.functions.udfs import (
     clean_html_text_udf,
     clean_plain_text_udf,
-    extract_text_udf,
 )
 
 
 def clean_pages(pages: DataFrame, lang: str | None = 'zh',
                 use_html: bool = True,
-                num_partitions: int | None = None,
-                extract_only: bool = False) -> DataFrame:
+                num_partitions: int | None = None) -> DataFrame:
     """→ (url, warc_ts, clean, extract_text, meta).
 
     ``clean`` is the reference clean_text output (redacted, byte-identical
     per url); ``extract_text`` keeps urls/emails/phones/brackets for the
     stage-2 mention sweep.
-
-    ``extract_only=True`` (plain-text sources) emits just extract_text:
-    downstream stages that never read ``clean`` skip the redaction regex
-    chain entirely — Catalyst can't prune fields inside a struct UDF, so
-    this has to be a separate kernel call.
     """
     df = pages
     if lang is not None and 'lang' in df.columns:
         df = df.filter(F.col('lang') == lang)
 
     keep = ['url'] + (['warc_ts'] if 'warc_ts' in df.columns else [])
-    if extract_only and not (use_html and 'html' in df.columns):
-        df = df.select(*keep, extract_text_udf(F.col('text'))
-                       .alias('extract_text'))
-    else:
-        src = clean_html_text_udf(F.col('html')) \
-            if use_html and 'html' in df.columns \
-            else clean_plain_text_udf(F.col('text'))
-        df = df.select(*keep, src.alias('c')) \
-            .select(*keep,
-                    F.col('c.clean').alias('clean'),
-                    F.col('c.extract_text').alias('extract_text'),
-                    F.col('c.meta').alias('meta'))
+    src = clean_html_text_udf(F.col('html')) \
+        if use_html and 'html' in df.columns \
+        else clean_plain_text_udf(F.col('text'))
+    df = df.select(*keep, src.alias('c')) \
+        .select(*keep,
+                F.col('c.clean').alias('clean'),
+                F.col('c.extract_text').alias('extract_text'),
+                F.col('c.meta').alias('meta'))
 
     if num_partitions:
         df = df.repartition(num_partitions, F.xxhash64('url'))

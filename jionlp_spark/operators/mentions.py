@@ -1,13 +1,12 @@
 """Stage 2 — mention detection.
 
 clean(url, warc_ts, clean) → mentions(url, warc_ts, text, offset_start,
-offset_end, mention_type): one row per typed mention, long format.
+offset_end, mention_type, norm): one row per typed mention, long format.
 
-The rule sweep is a single fused pandas UDF (all extractor types in one pass
-per Arrow batch); lexicon NER (FMM over a broadcast trie) is a second UDF
-only when a lexicon is supplied.  Both produce the same mention struct and
-are unioned column-wise (array concat) BEFORE the explode, so each document
-row is scanned exactly once per family and exploded exactly once.
+One pandas UDF over kernels/mentions.py runs the rule sweep, the money and
+time extractors and, when a lexicon trie is supplied, FMM lexicon NER in a
+single pass per Arrow batch; each document row is scanned once and exploded
+once.
 """
 
 from __future__ import annotations
@@ -15,10 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jionlp_spark.functions.udfs import (
-    make_lexicon_mentions_udf,
-    rule_mentions_udf,
-)
+from jionlp_spark.functions.udfs import make_mentions_udf
 
 
 def extract_mentions(clean_df: DataFrame,
@@ -27,12 +23,8 @@ def extract_mentions(clean_df: DataFrame,
                      keep_cols=('url', 'warc_ts')) -> DataFrame:
     ts_col = F.col('warc_ts') if 'warc_ts' in clean_df.columns \
         else F.lit(None).cast('timestamp')
-    arrays = [rule_mentions_udf(F.col(text_col), ts_col)]
-    if lexicon_trie_broadcast is not None:
-        lex_udf = make_lexicon_mentions_udf(lexicon_trie_broadcast)
-        arrays.append(lex_udf(F.col(text_col)))
-
-    mention_array = arrays[0] if len(arrays) == 1 else F.concat(*arrays)
+    mention_array = make_mentions_udf(lexicon_trie_broadcast)(
+        F.col(text_col), ts_col)
 
     keep = [F.col(c) for c in keep_cols if c in clean_df.columns]
     return (

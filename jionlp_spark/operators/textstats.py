@@ -96,9 +96,9 @@ def keyword_flags(docs: DataFrame, keywords, text_col: str = 'text',
     via pornography_loader, dictionary_loader.py; lexicons.load_wordset
     reads it).  Pure JVM path for list-sized sets: filter an array of
     literals by `contains` — stays in whole-stage codegen, no UDF.  For
-    10⁴⁺-word dictionaries use the broadcast-trie lexicon UDF instead
-    (functions/udfs.make_lexicon_mentions_udf — same mechanism as
-    location NER with a different dictionary)."""
+    10⁴⁺-word dictionaries broadcast a CharTrie (kernels/trie.build_trie)
+    and scan it with kernels/mentions.lexicon_mentions in a pandas UDF —
+    the same FMM mechanism as location NER with a different dictionary."""
     # literal array via column APIs (never expr-text interpolation: a
     # keyword containing a backslash or quote must not corrupt the plan)
     arr = F.array(*[F.lit(str(w)) for w in keywords])
@@ -280,19 +280,6 @@ def token_idf(docs: DataFrame, text_col: str = 'text',
     )
 
 
-def word_freq_by_class(docs: DataFrame, class_col: str = 'source',
-                       text_col: str = 'text',
-                       min_freq: int = 10) -> DataFrame:
-    """Per-class token frequencies (analyse_freq_words analog)."""
-    return (
-        docs.select(class_col, F.explode(
-            F.split(F.col(text_col), ' ')).alias('word'))
-        .groupBy(class_col, 'word')
-        .agg(F.count('*').cast('long').alias('freq'))
-        .filter(F.col('freq') >= min_freq)
-    )
-
-
 def bigram_pmi(docs: DataFrame, text_col: str = 'text',
                min_pair_freq: int = 5) -> DataFrame:
     """Corpus bigram PMI — the distributed analog of the reference's
@@ -327,16 +314,6 @@ def bigram_pmi(docs: DataFrame, text_col: str = 'text',
                 F.round(F.log(F.col('c12') * F.col('n').cast('double')
                               / (F.col('c1') * F.col('c2'))), 6).alias('pmi'))
     )
-
-
-def stopword_filter(docs: DataFrame, stopwords: list,
-                    text_col: str = 'text') -> DataFrame:
-    """Token-level stopword removal (remove_stopwords analog, array_except
-    keeps it JVM-side)."""
-    return docs.withColumn(
-        'tokens_clean',
-        F.array_except(F.split(F.col(text_col), ' '),
-                       F.array(*[F.lit(w) for w in stopwords])))
 
 
 def new_word_scores(docs: DataFrame, text_col: str = 'text',

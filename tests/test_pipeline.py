@@ -1,6 +1,7 @@
 """End-to-end pipeline tests: mention P/R vs the reference extractors run on
 the same text (north_star gate ≥0.95; kernels are ports so target is 1.0),
-cross-run determinism, and checkpoint resume."""
+cross-run determinism, lazy-vs-published shape parity and checkpoint
+resume."""
 
 import hashlib
 import os
@@ -117,6 +118,30 @@ def test_triples_deterministic_across_parallelism(spark, pipeline_result):
     pages2 = generate_pages(spark, N_PAGES, num_partitions=13)
     res2 = run_pipeline(spark, pages2, num_partitions=3)
     assert _digest(res2['triples']) == d1
+
+
+ENTITY_COLS = ('url', 'warc_ts', 'text', 'offset_start', 'offset_end',
+               'mention_type', 'obj', 'obj_type', 'norm')
+
+
+@pytest.mark.parametrize('use_html', [True, False], ids=['html', 'plain'])
+def test_lazy_and_published_shapes_agree(spark, tmp_path, pipeline_result,
+                                         use_html):
+    """The fused lazy plan and the four published stages give the same
+    entities (every column) and the same triples."""
+    from jionlp_spark.plans.pipeline import run_pipeline
+    pages, _res = pipeline_result
+    lazy = run_pipeline(spark, pages, use_html=use_html)
+    published = run_pipeline(spark, pages, use_html=use_html,
+                             out_dir=str(tmp_path / 'kg'),
+                             input_fingerprint='parity')
+    for res in (lazy, published):
+        assert sorted(res['entities'].columns) == sorted(ENTITY_COLS)
+    want = sorted(map(repr, lazy['entities'].select(*ENTITY_COLS).collect()))
+    got = sorted(map(repr,
+                     published['entities'].select(*ENTITY_COLS).collect()))
+    assert len(want) > N_PAGES and got == want
+    assert _digest(published['triples']) == _digest(lazy['triples'])
 
 
 def test_checkpoint_resume(spark, tmp_path_factory):
