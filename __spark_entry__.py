@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from jionlp_spark.functions.ndet import ndet as _ndet
+from jionlp_spark.sources.catalog import parquet_rows
 
 # ---------------------------------------------------------------------------
 # shared deterministic injection formulas (Spark SQL + DuckDB dialects agree
@@ -190,34 +191,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(spark.sparkContext.defaultParallelism))
 
 
-def _spark_hidden(name: str) -> bool:
-    """Whether Spark's file listing skips this file or directory name
-    (HadoopFSUtils.shouldFilterOutPathName): '.'-prefixed, '_'-prefixed
-    unless a 'k=v' partition directory or parquet summary metadata, or an
-    in-flight '._COPYING_' copy."""
-    exclude = (name.startswith('.') or name.endswith('._COPYING_')
-               or (name.startswith('_') and '=' not in name))
-    return exclude and not name.startswith(('_common_metadata', '_metadata'))
-
-
-def _parquet_nrows(path: str) -> int:
-    """Row count of a parquet file/directory from the footers — exactly
-    what a Spark count() over the same path returns, without launching a
-    job (used only to SIZE parameters like k ∝ N; recomputed from the
-    input every call)."""
-    import pyarrow.parquet as pq
-    if _os.path.isfile(path):
-        return pq.ParquetFile(path).metadata.num_rows
-    total = 0
-    for root, _dirs, files in _os.walk(path):
-        _dirs[:] = [d for d in _dirs if not _spark_hidden(d)]
-        for name in files:
-            if name.endswith('.parquet') and not _spark_hidden(name):
-                total += pq.ParquetFile(
-                    _os.path.join(root, name)).metadata.num_rows
-    return total
-
-
 # the injected text as an ordered parts list, so redaction oracles can
 # reconstruct the text with any single part substituted (safer than SQL
 # replace(), which would also hit accidental substring collisions)
@@ -268,31 +241,19 @@ def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stages 1-3 over the injected corpus (cached per session+sf so the
     kg_* queries share one pass).
 
-    make_linked_mentions_udf(source='plain') runs normalization, the
-    mention kernel and the linker in ONE Python pass, so the kg_link_*
-    queries read the canonical obj/obj_type/norm columns directly instead
-    of paying a second link pass each."""
+    linked_mentions runs normalization, the mention kernel and the linker
+    in ONE Python pass, so the kg_link_* queries read the canonical
+    obj/obj_type/norm columns directly instead of paying a second link
+    pass each."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _EXTRACTED_CACHE:
-        return _EXTRACTED_CACHE[key]
-
-    from jionlp_spark.functions.udfs import (build_location_trie,
-                                             make_linked_mentions_udf)
-    from jionlp_spark.operators.link import build_bundle
-
-    pages = _injected_docs(spark, sf_dir)
-    fused = make_linked_mentions_udf(build_bundle(spark),
-                                     build_location_trie(spark),
-                                     source='plain')
-    m = (pages
-         .select('doc_id',
-                 F.explode(fused(F.col('text'), F.col('warc_ts')))
-                 .alias('m'))
-         .select('doc_id', 'm.text', 'm.offset_start', 'm.offset_end',
-                 'm.mention_type', 'm.norm', 'm.obj', 'm.obj_type')
-         .cache())
-    _EXTRACTED_CACHE[key] = m
-    return m
+    if key not in _EXTRACTED_CACHE:
+        from jionlp_spark.functions.udfs import build_location_trie
+        from jionlp_spark.operators.link import build_bundle
+        from jionlp_spark.operators.mentions import linked_mentions
+        _EXTRACTED_CACHE[key] = linked_mentions(
+            _injected_docs(spark, sf_dir), build_bundle(spark),
+            build_location_trie(spark), keep_cols=('doc_id',)).cache()
+    return _EXTRACTED_CACHE[key]
 
 
 def _extracted_qq_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,24 +261,16 @@ def _extracted_qq_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalize→sweep pipeline (one fused UDF pass) over a text whose only
     6-11 digit run is the qq."""
     key = (spark.sparkContext.applicationId, sf_dir, 'qq_ip')
-    if key in _EXTRACTED_CACHE:
-        return _EXTRACTED_CACHE[key]
-    from jionlp_spark.functions.udfs import make_linked_mentions_udf
-    from jionlp_spark.operators.link import build_bundle
-    pages = _docs(spark, sf_dir).selectExpr(
-        'doc_id',
-        f"concat('加QQ：', {_QQ_SQL}, '，服务器地址', "
-        f"{_IP_SQL}, '，再见。') as text")
-    fused = make_linked_mentions_udf(build_bundle(spark), source='plain')
-    m = (pages
-         .select('doc_id',
-                 F.explode(fused(F.col('text'),
-                                 F.lit(None).cast('timestamp'))).alias('m'))
-         .select('doc_id', 'm.text', 'm.offset_start', 'm.offset_end',
-                 'm.mention_type', 'm.norm', 'm.obj', 'm.obj_type')
-         .cache())
-    _EXTRACTED_CACHE[key] = m
-    return m
+    if key not in _EXTRACTED_CACHE:
+        from jionlp_spark.operators.link import build_bundle
+        from jionlp_spark.operators.mentions import linked_mentions
+        pages = _docs(spark, sf_dir).selectExpr(
+            'doc_id',
+            f"concat('加QQ：', {_QQ_SQL}, '，服务器地址', "
+            f"{_IP_SQL}, '，再见。') as text")
+        _EXTRACTED_CACHE[key] = linked_mentions(
+            pages, build_bundle(spark), keep_cols=('doc_id',)).cache()
+    return _EXTRACTED_CACHE[key]
 
 
 _TIME_START_SQL = (
@@ -1763,7 +1716,7 @@ def q_semdedup_keep(spark, sf_dir):
     from jionlp_spark.operators.dedup import semantic_dedup
     emb = spark.read.parquet(f'{sf_dir}/embeddings.parquet') \
         .repartition(spark.sparkContext.defaultParallelism)
-    k = max(8, _parquet_nrows(f'{sf_dir}/embeddings.parquet') // 250)
+    k = max(8, parquet_rows(f'{sf_dir}/embeddings.parquet') // 250)
     return semantic_dedup(emb, threshold=0.4, n_centroids=k).select(
         F.col('vec_id').cast('long').alias('vec_id'),
         F.col('keep_id').cast('long').alias('keep_id'), 'kept')
@@ -3987,7 +3940,7 @@ def q_dedup_embedding_pairs(spark, sf_dir):
     from jionlp_spark.operators.dedup import embedding_near_dups
     emb = spark.read.parquet(f'{sf_dir}/embeddings.parquet') \
         .repartition(spark.sparkContext.defaultParallelism)
-    k = max(8, _parquet_nrows(f'{sf_dir}/embeddings.parquet') // 250)
+    k = max(8, parquet_rows(f'{sf_dir}/embeddings.parquet') // 250)
     return embedding_near_dups(emb, threshold=0.4, n_centroids=k).select(
         F.col('vec_a').cast('long').alias('vec_a'),
         F.col('vec_b').cast('long').alias('vec_b'), 'cos')
@@ -5177,7 +5130,7 @@ def q_streaming_dedup(spark, sf_dir):
     # query tests; volume adds nothing (doc_id is contiguous from 0).  The
     # input is synthesized with range() — documents only supplies the row
     # count (a metadata-only parquet read)
-    n = min(_parquet_nrows(f'{sf_dir}/documents.parquet'), 3000)
+    n = min(parquet_rows(f'{sf_dir}/documents.parquet'), 3000)
     docs = spark.range(n).selectExpr(
         'id as doc_id',
         "concat('stream doc ', cast(id % 100 as string)) as text",
@@ -5230,7 +5183,7 @@ def q_streaming_url_dedup(spark, sf_dir):
     src_dir, ckpt = f'{base}/src', f'{base}/ckpt'
     os.makedirs(src_dir)
 
-    n = min(_parquet_nrows(f'{sf_dir}/documents.parquet'), 3000)
+    n = min(parquet_rows(f'{sf_dir}/documents.parquet'), 3000)
     docs = spark.range(n).selectExpr(
         'id as doc_id',
         "case when id % 5 = 0 then concat('http://h',"
@@ -5298,7 +5251,7 @@ def q_streaming_curate(spark, sf_dir):
     src_dir, ckpt = f'{base}/src', f'{base}/ckpt'
     os.makedirs(src_dir)
 
-    n = min(_parquet_nrows(f'{sf_dir}/documents.parquet'), 3000)
+    n = min(parquet_rows(f'{sf_dir}/documents.parquet'), 3000)
     docs = spark.range(n).selectExpr(
         'id as doc_id',
         "case when id % 7 = 0 then 'rep rep rep rep'"
@@ -5354,7 +5307,7 @@ def q_streaming_conflicts(spark, sf_dir):
     src_dir, ckpt = f'{base}/src', f'{base}/ckpt'
     os.makedirs(src_dir)
 
-    n = min(_parquet_nrows(f'{sf_dir}/documents.parquet'), 3000)
+    n = min(parquet_rows(f'{sf_dir}/documents.parquet'), 3000)
     half = n // 2
     trips = spark.range(n).selectExpr(
         'id as tid',
@@ -5411,7 +5364,7 @@ def q_streaming_fact_intervals(spark, sf_dir):
     src_dir, ckpt = f'{base}/src', f'{base}/ckpt'
     os.makedirs(src_dir)
 
-    n = min(_parquet_nrows(f'{sf_dir}/documents.parquet'), 3000)
+    n = min(parquet_rows(f'{sf_dir}/documents.parquet'), 3000)
     half = n // 2
     trips = spark.range(n).selectExpr(
         'id as tid',
@@ -5474,7 +5427,7 @@ def q_streaming_ingest(spark, sf_dir):
     src_dir, ckpt = f'{base}/src', f'{base}/ckpt'
     os.makedirs(src_dir)
 
-    n = min(_parquet_nrows(f'{sf_dir}/documents.parquet'),
+    n = min(parquet_rows(f'{sf_dir}/documents.parquet'),
             2000)
     pages = spark.range(n).selectExpr(
         'id as doc_id',
@@ -5592,7 +5545,7 @@ def q_streaming_window_counts(spark, sf_dir):
     src_dir, ckpt = f'{base}/src', f'{base}/ckpt'
     os.makedirs(src_dir)
 
-    n = min(_parquet_nrows(f'{sf_dir}/documents.parquet'), 3000)
+    n = min(parquet_rows(f'{sf_dir}/documents.parquet'), 3000)
     docs = spark.range(n).withColumnRenamed('id', 'doc_id')
     t = (n // 3 // 10) * 10
     fresh_ts = ("timestamp'2021-09-01 00:00:00' "
@@ -5660,7 +5613,7 @@ def q_streaming_state_bounded(spark, sf_dir):
     # by enough to show growth (500 at sf0.01 → 1500 at sf0.1+); every
     # key is its own applyInPandasWithState group (~4ms of state-store +
     # pandas overhead each), so the cap directly bounds wall time
-    n = min(_parquet_nrows(f'{sf_dir}/documents.parquet'), 1500)
+    n = min(parquet_rows(f'{sf_dir}/documents.parquet'), 1500)
     docs = spark.range(n).selectExpr(
         'id as doc_id',
         "concat('unique doc ', cast(id as string)) as text",

@@ -29,15 +29,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from scripts.benchlib import force_full, materialize_pages  # noqa: E402
+
 SF_DIR = os.environ.get('SPARK_GRAFT_SF_DIR', '/root/testdata/sf0.1')
 CPUS = int(os.environ.get('SPARK_GRAFT_CPUS', '32'))
-
-
-def _force_full(df):
-    # identical to bench.py's digest force: row count depends on every column
-    from pyspark.sql import functions as F
-    return (df.withColumn('__d', F.md5(F.to_json(F.struct('*'))))
-            .filter(F.col('__d') >= '0'))
 
 
 def main() -> int:
@@ -62,18 +57,11 @@ def main() -> int:
 
     if args.e2e:
         from jionlp_spark.plans.pipeline import run_pipeline
-        from jionlp_spark.sources.pages import generate_pages, write_pages
+        from jionlp_spark.sources.pages import generate_pages
         # same materialize-then-read protocol as bench.py
         run_pipeline(spark, generate_pages(spark, 2048))['triples'].count()
-        pages_path = f'/tmp/bench_pages_{args.e2e}_p256'
-        if not os.path.exists(pages_path):
-            tmp = f'{pages_path}.tmp{os.getpid()}'
-            write_pages(spark, tmp, args.e2e, num_partitions=256)
-            try:
-                os.rename(tmp, pages_path)
-            except OSError:
-                import shutil
-                shutil.rmtree(tmp, ignore_errors=True)
+        pages_path = materialize_pages(
+            spark, f'/tmp/bench_pages_{args.e2e}_p256', args.e2e)
         runs, loads = [], []
         for _ in range(args.runs):
             loads.append(round(os.getloadavg()[0], 2))
@@ -101,7 +89,7 @@ def main() -> int:
         spark.sparkContext.setJobDescription(f'bench_extra: {name}')
         if args.explain:
             os.makedirs('plans/r08', exist_ok=True)
-            plan = _force_full(fn(spark, SF_DIR))._jdf.queryExecution() \
+            plan = force_full(fn(spark, SF_DIR))._jdf.queryExecution() \
                 .explainString(spark._jvm.org.apache.spark.sql.execution
                                .ExplainMode.fromString('formatted'))
             with open(f'plans/r08/{name}_{args.explain}.txt', 'w') as f:
@@ -110,7 +98,7 @@ def main() -> int:
         for _ in range(args.runs):
             loads.append(round(os.getloadavg()[0], 2))
             t0 = time.time()
-            n = _force_full(fn(spark, SF_DIR)).count()
+            n = force_full(fn(spark, SF_DIR)).count()
             runs.append(round(time.time() - t0, 3))
         if runs:     # --runs 0 = explain-only capture
             results[name] = {'min': min(runs), 'runs': runs, 'loads': loads,

@@ -92,13 +92,40 @@ LINKED_MENTION_TYPE = T.StructType(MENTION_FIELDS + [
 
 
 # ---------------------------------------------------------------------------
-# Stage-1 cleaning
+# Stage-1 cleaning: the one derivation of page text, shared by the clean
+# UDF and every fused mention UDF
 
-def _normalize_only(cleaner, body: str, strip_tags: bool) -> str:
-    """Normalization without redaction (keeps brackets/urls/emails/phones)."""
-    return cleaner.clean_text(
-        body, remove_html_tag=strip_tags, remove_parentheses=False,
-        remove_url=False, remove_email=False, remove_phone_number=False)
+def _check_source(source: str) -> None:
+    if source not in ('html', 'plain'):
+        raise ValueError(f"source must be 'html' or 'plain', not {source!r}")
+
+
+def _page_body(raw, source: str):
+    """Page cell → (body, meta dict or None).  Source 'html' is raw page
+    bytes (CleanHTML main-text extraction), 'plain' an extracted body."""
+    if source == 'plain':
+        return raw, None
+    if isinstance(raw, (bytes, bytearray)):
+        raw = raw.decode('utf-8', errors='replace')
+    return clean_html(raw)
+
+
+_KEEP_SPANS = dict(remove_parentheses=False, remove_url=False,
+                  remove_email=False, remove_phone_number=False)
+
+
+def _clean_body(cleaner, body: str, source: str, redact: bool = False) -> str:
+    """The reference clean_text chain over a page body.  ``redact`` gives
+    the `clean` deliverable; without it brackets/urls/emails/phones stay
+    for the stage-2 sweep.  Tags are stripped from a plain body only:
+    CleanHTML already removed an html page's."""
+    return cleaner.clean_text(body, remove_html_tag=source == 'plain',
+                              **({} if redact else _KEEP_SPANS))
+
+
+def _page_text(cleaner, raw, source: str) -> str:
+    """Page cell → the text stage 2 scans (clean_pages' extract_text)."""
+    return _clean_body(cleaner, _page_body(raw, source)[0], source)
 
 
 @_ndet
@@ -108,42 +135,27 @@ def clean_text_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda t: cleaner.clean_text(t) if t is not None else None)
 
 
-@_ndet
-@pandas_udf(CLEAN_RESULT)
-def clean_html_text_udf(html: pd.Series) -> pd.DataFrame:
-    """html:binary → (clean, extract_text, meta json).  Fused kernel: strip
-    html boilerplate (CleanHTML) once, then derive both text variants from
-    the same body, so the expensive html pass runs once per row."""
-    cleaner = get_cleaner()
-    cleans, extracts, metas = [], [], []
-    for raw in html:
-        if raw is None:
-            cleans.append(None); extracts.append(None); metas.append(None)
-            continue
-        if isinstance(raw, (bytes, bytearray)):
-            raw = raw.decode('utf-8', errors='replace')
-        body, meta = clean_html(raw)
-        cleans.append(cleaner.clean_text(body, remove_html_tag=False))
-        extracts.append(_normalize_only(cleaner, body, strip_tags=False))
-        metas.append(json.dumps(meta, ensure_ascii=False) if meta else None)
-    return pd.DataFrame({'clean': cleans, 'extract_text': extracts,
-                         'meta': metas})
+def make_clean_udf(source: str):
+    """page → (clean, extract_text, meta json).  Both text variants come
+    from one body, so the expensive html pass runs once per row."""
+    _check_source(source)
 
-
-@_ndet
-@pandas_udf(CLEAN_RESULT)
-def clean_plain_text_udf(text: pd.Series) -> pd.DataFrame:
-    """text:string (pre-extracted body) → (clean, extract_text, meta=None)."""
-    cleaner = get_cleaner()
-    cleans, extracts = [], []
-    for t in text:
-        if t is None:
-            cleans.append(None); extracts.append(None)
-            continue
-        cleans.append(cleaner.clean_text(t))
-        extracts.append(_normalize_only(cleaner, t, strip_tags=True))
-    return pd.DataFrame({'clean': cleans, 'extract_text': extracts,
-                         'meta': [None] * len(cleans)})
+    @_ndet
+    @pandas_udf(CLEAN_RESULT)
+    def clean_udf(page: pd.Series) -> pd.DataFrame:
+        cleaner = get_cleaner()
+        rows = []
+        for raw in page:
+            if raw is None:
+                rows.append((None, None, None))
+                continue
+            body, meta = _page_body(raw, source)
+            rows.append((
+                _clean_body(cleaner, body, source, redact=True),
+                _clean_body(cleaner, body, source),
+                json.dumps(meta, ensure_ascii=False) if meta else None))
+        return pd.DataFrame(rows, columns=['clean', 'extract_text', 'meta'])
+    return clean_udf
 
 
 # ---------------------------------------------------------------------------
@@ -244,7 +256,7 @@ def make_lexicon_linked_udf(trie_broadcast, bundle_broadcast):
         cleaner = get_cleaner()
         return pd.Series([
             linker.linked(lexicon_mentions(
-                _normalize_only(cleaner, t, strip_tags=True), trie))
+                _page_text(cleaner, t, 'plain'), trie))
             if t is not None else [] for t in text])
     return lexicon_linked_udf
 
@@ -256,20 +268,11 @@ def make_linked_mentions_udf(bundle_broadcast, trie_broadcast=None, *,
     mention>, the same rows as clean_pages → extract_mentions →
     link_mentions.
 
-    ``source`` names the input column's form: 'html' runs CleanHTML
-    main-text extraction first, 'plain' only normalizes.  Neither pays the
-    redaction chain that only the `clean` deliverable needs.
+    ``source`` names the input column's form ('html' or 'plain', see
+    _page_body).  Neither pays the redaction chain that only the `clean`
+    deliverable needs.
     """
-    if source not in ('html', 'plain'):
-        raise ValueError(f"source must be 'html' or 'plain', not {source!r}")
-
-    def extract_text(cleaner, raw):
-        if source == 'plain':
-            return _normalize_only(cleaner, raw, strip_tags=True)
-        if isinstance(raw, (bytes, bytearray)):
-            raw = raw.decode('utf-8', errors='replace')
-        body, _meta = clean_html(raw)
-        return _normalize_only(cleaner, body, strip_tags=False)
+    _check_source(source)
 
     @_ndet
     @pandas_udf(T.ArrayType(LINKED_MENTION_TYPE))
@@ -279,8 +282,8 @@ def make_linked_mentions_udf(bundle_broadcast, trie_broadcast=None, *,
         linker = _linker(bundle_broadcast)
         cleaner = get_cleaner()
         return pd.Series([
-            linker.linked(mentions(extract_text(cleaner, t), _time_base(ts),
-                                   trie))
+            linker.linked(mentions(_page_text(cleaner, t, source),
+                                   _time_base(ts), trie))
             if t is not None else [] for t, ts in zip(text, warc_ts)])
     return linked_mentions_udf
 

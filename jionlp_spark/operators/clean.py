@@ -14,10 +14,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jionlp_spark.functions.udfs import (
-    clean_html_text_udf,
-    clean_plain_text_udf,
-)
+from jionlp_spark.functions.udfs import make_clean_udf
+
+
+def page_source(pages: DataFrame, lang: str | None = 'zh',
+                use_html: bool = True) -> tuple:
+    """→ (rows of ``lang``, source, column): raw 'html' when asked for and
+    present (source 'html'), else the extracted 'text' (source 'plain')."""
+    if lang is not None and 'lang' in pages.columns:
+        pages = pages.filter(F.col('lang') == lang)
+    if use_html and 'html' in pages.columns:
+        return pages, 'html', 'html'
+    return pages, 'plain', 'text'
 
 
 def clean_pages(pages: DataFrame, lang: str | None = 'zh',
@@ -29,19 +37,10 @@ def clean_pages(pages: DataFrame, lang: str | None = 'zh',
     per url); ``extract_text`` keeps urls/emails/phones/brackets for the
     stage-2 mention sweep.
     """
-    df = pages
-    if lang is not None and 'lang' in df.columns:
-        df = df.filter(F.col('lang') == lang)
-
+    df, source, column = page_source(pages, lang, use_html)
     keep = ['url'] + (['warc_ts'] if 'warc_ts' in df.columns else [])
-    src = clean_html_text_udf(F.col('html')) \
-        if use_html and 'html' in df.columns \
-        else clean_plain_text_udf(F.col('text'))
-    df = df.select(*keep, src.alias('c')) \
-        .select(*keep,
-                F.col('c.clean').alias('clean'),
-                F.col('c.extract_text').alias('extract_text'),
-                F.col('c.meta').alias('meta'))
+    df = df.select(*keep, make_clean_udf(source)(F.col(column)).alias('c')) \
+        .select(*keep, 'c.*')
 
     if num_partitions:
         df = df.repartition(num_partitions, F.xxhash64('url'))

@@ -41,10 +41,7 @@ def link_mentions(mentions: DataFrame, bundle_broadcast) -> DataFrame:
         mentions
         .withColumn('l', link_udf(F.col('mention_type'), F.col('text'),
                                   norm_in))
-        .select(*keep,
-                F.col('l.obj').alias('obj'),
-                F.col('l.obj_type').alias('obj_type'),
-                F.col('l.norm').alias('norm'))
+        .select(*keep, 'l.*')
     )
 
 

@@ -1,4 +1,4 @@
-"""Stage 2 — mention detection.
+"""Stage 2 — mention detection (and stages 1-3 fused: linked_mentions).
 
 clean(url, warc_ts, clean) → mentions(url, warc_ts, text, offset_start,
 offset_end, mention_type, norm): one row per typed mention, long format.
@@ -14,22 +14,41 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jionlp_spark.functions.udfs import make_mentions_udf
+from jionlp_spark.functions.udfs import (make_linked_mentions_udf,
+                                         make_mentions_udf)
+from jionlp_spark.operators.clean import page_source
+
+
+def _time_base(df: DataFrame):
+    """The time base of time parsing: warc_ts, or a null timestamp."""
+    return F.col('warc_ts') if 'warc_ts' in df.columns \
+        else F.lit(None).cast('timestamp')
+
+
+def _explode(df: DataFrame, mention_array, keep_cols) -> DataFrame:
+    """One row per mention: the ``keep_cols`` of ``df``, then its fields."""
+    keep = [F.col(c) for c in keep_cols if c in df.columns]
+    return (df.select(*keep, F.explode(mention_array).alias('m'))
+            .select(*keep, 'm.*'))
 
 
 def extract_mentions(clean_df: DataFrame,
                      text_col: str = 'extract_text',
                      lexicon_trie_broadcast=None,
                      keep_cols=('url', 'warc_ts')) -> DataFrame:
-    ts_col = F.col('warc_ts') if 'warc_ts' in clean_df.columns \
-        else F.lit(None).cast('timestamp')
     mention_array = make_mentions_udf(lexicon_trie_broadcast)(
-        F.col(text_col), ts_col)
+        F.col(text_col), _time_base(clean_df))
+    return _explode(clean_df, mention_array, keep_cols)
 
-    keep = [F.col(c) for c in keep_cols if c in clean_df.columns]
-    return (
-        clean_df
-        .select(*keep, F.explode(mention_array).alias('m'))
-        .select(*keep, 'm.text', 'm.offset_start', 'm.offset_end',
-                'm.mention_type', 'm.norm')
-    )
+
+def linked_mentions(pages: DataFrame, bundle_broadcast,
+                    lexicon_trie_broadcast=None, lang: str | None = 'zh',
+                    use_html: bool = True,
+                    keep_cols=('url', 'warc_ts')) -> DataFrame:
+    """pages → the rows of link_mentions(extract_mentions(clean_pages(...)))
+    from ONE ArrowEvalPython node straight off the page column, without the
+    redaction chain that only the `clean` column needs."""
+    df, source, column = page_source(pages, lang, use_html)
+    fused = make_linked_mentions_udf(bundle_broadcast, lexicon_trie_broadcast,
+                                     source=source)
+    return _explode(df, fused(F.col(column), _time_base(df)), keep_cols)

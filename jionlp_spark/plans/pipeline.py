@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from jionlp_spark.operators.clean import clean_pages
 from jionlp_spark.operators.link import build_bundle, link_mentions
-from jionlp_spark.operators.mentions import extract_mentions
+from jionlp_spark.operators.mentions import (extract_mentions,
+                                             linked_mentions)
 from jionlp_spark.operators.triples import build_triples
 from jionlp_spark.sources import catalog
 
@@ -56,36 +57,13 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
         else s1(repartition=False)
 
     if out_dir is None:
-        # lazy single-plan mode: normalization + mention sweep + linking in
-        # ONE Python pass straight off the source column — chained
-        # ArrowEvalPython nodes each pin a worker per task (2× Python
-        # oversubscription), and the redaction chain behind the `clean`
-        # deliverable would otherwise run inside a triples-only plan that
-        # never reads it (Catalyst can't prune struct-UDF fields).  clean_df
-        # stays available lazily for callers that consume it.
-        from pyspark.sql import functions as F
-
-        from jionlp_spark.functions.udfs import make_linked_mentions_udf
-        src = pages
-        if lang is not None and 'lang' in src.columns:
-            src = src.filter(F.col('lang') == lang)
-        if use_html and 'html' in src.columns:
-            fused = make_linked_mentions_udf(bundle, loc_trie,
-                                             source='html')
-            src_col = F.col('html')
-        else:
-            fused = make_linked_mentions_udf(bundle, loc_trie,
-                                             source='plain')
-            src_col = F.col('text')
-        keep = [c for c in ('url', 'warc_ts') if c in src.columns]
-        ts_col = F.col('warc_ts') if 'warc_ts' in src.columns \
-            else F.lit(None).cast('timestamp')
-        entities_df = (
-            src
-            .select(*keep, F.explode(fused(src_col, ts_col)).alias('m'))
-            .select(*keep, 'm.text', 'm.offset_start', 'm.offset_end',
-                    'm.mention_type', 'm.norm', 'm.obj', 'm.obj_type')
-        )
+        # lazy single-plan mode: one fused Python pass straight off the
+        # source column (see linked_mentions) — chained ArrowEvalPython
+        # nodes each pin a worker per task, and Catalyst can't prune the
+        # redaction chain out of clean_pages' struct UDF.  clean_df stays
+        # available lazily for callers that consume it.
+        entities_df = linked_mentions(pages, bundle, loc_trie, lang=lang,
+                                      use_html=use_html)
         mentions_df = entities_df.drop('obj', 'obj_type')
         triples_df = build_triples(entities_df)
     else:

@@ -35,18 +35,35 @@ MANIFEST = '_manifest.json'
 SNAPSHOT_DIR = '_snapshots'
 
 
-def _file_lineage(path: str) -> list:
-    out = []
+def _spark_hidden(name: str) -> bool:
+    """Whether Spark's file listing skips this file or directory name
+    (HadoopFSUtils.shouldFilterOutPathName): '.'-prefixed, '_'-prefixed
+    unless a 'k=v' partition directory or parquet summary metadata, or an
+    in-flight '._COPYING_' copy (so also the '_snapshots' store)."""
+    exclude = (name.startswith('.') or name.endswith('._COPYING_')
+               or (name.startswith('_') and '=' not in name))
+    return exclude and not name.startswith(('_common_metadata', '_metadata'))
+
+
+def _parquet_files(path: str):
+    """Paths, relative to ``path``, of the parquet files a Spark scan of
+    the directory ``path`` reads (recursive — partitioned layouts nest)."""
     for root, dirs, files in os.walk(path):
-        # prune metadata dirs (the snapshot store lives under '_snapshots';
-        # lineage lists the CURRENT snapshot's data files only)
-        dirs[:] = [d for d in dirs if not d.startswith(('_', '.'))]
+        dirs[:] = [d for d in dirs if not _spark_hidden(d)]
         for fn in sorted(files):
-            if fn.endswith('.parquet'):
-                fp = os.path.join(root, fn)
-                out.append({'file': os.path.relpath(fp, path),
-                            'bytes': os.path.getsize(fp)})
-    return out
+            if fn.endswith('.parquet') and not _spark_hidden(fn):
+                yield os.path.relpath(os.path.join(root, fn), path)
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of a parquet file or directory from the footers — exactly
+    what a Spark count() over the same path returns, without launching a
+    job."""
+    import pyarrow.parquet as pq
+    if os.path.isfile(path):
+        return pq.ParquetFile(path).metadata.num_rows
+    return sum(pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+               for f in _parquet_files(path))
 
 
 def _snapshot_entry(manifest: dict) -> dict:
@@ -79,7 +96,9 @@ def write_manifest(path: str, stage: str, rows: int, schema_json: str,
         'rows': rows,
         'schema': json.loads(schema_json),
         'input_fingerprint': input_fingerprint,
-        'files': _file_lineage(path),
+        # lineage: the current snapshot's data files
+        'files': [{'file': f, 'bytes': os.path.getsize(os.path.join(path, f))}
+                  for f in _parquet_files(path)],
         'metrics': metrics or {},
         'current_snapshot_id': snapshot_id,
         'parent_snapshot_id': parent,
@@ -209,20 +228,6 @@ def _link_tree(src: str, dst: str) -> None:
 _READ_TABLE_REG: dict = {}
 
 
-def _parquet_rows(path: str) -> int:
-    """Sum of footer row counts over every parquet part under ``path``
-    (recursive — partitioned layouts nest directories).  Identical to a
-    Spark count() over the same files, without launching a job."""
-    import pyarrow.parquet as pq
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for name in files:
-            if name.endswith('.parquet'):
-                total += pq.ParquetFile(
-                    os.path.join(root, name)).metadata.num_rows
-    return total
-
-
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     """Manifest-aware read of a catalog table.  Plain tables come back
     as a parquet scan; tables published with ``bucket_by`` come back as
@@ -272,7 +277,6 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 
 def run_stage(spark: SparkSession, path: str, stage: str, build,
               input_fingerprint: str | None = None,
-              partition_by: tuple = (),
               resume: bool = True,
               bucket_by: tuple = (),
               n_buckets: int = 32) -> DataFrame:
@@ -302,8 +306,6 @@ def run_stage(spark: SparkSession, path: str, stage: str, build,
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     if bucket_by:
-        if partition_by:
-            raise ValueError('bucket_by and partition_by are exclusive')
         # bucketed parquet needs a catalog writer (plain .parquet(path)
         # can't emit bucket ids); an external temp table writes the
         # bucket-id-named files into tmp, then the metadata-only entry
@@ -327,15 +329,12 @@ def run_stage(spark: SparkSession, path: str, stage: str, build,
          .option('path', os.path.abspath(tmp)).saveAsTable(wtbl))
         spark.sql(f'DROP TABLE IF EXISTS {wtbl}')
     else:
-        writer = df.write.mode('overwrite')
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        df.write.mode('overwrite').parquet(tmp)
 
     out = spark.read.parquet(tmp)
     # manifest row count from the parquet footers (exact, and no Spark
     # job — a count() here was one extra cluster round-trip per publish)
-    rows = _parquet_rows(tmp)
+    rows = parquet_rows(tmp)
 
     prev = read_manifest(path)
     history: list = []

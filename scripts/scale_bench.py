@@ -46,6 +46,8 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from scripts.benchlib import force_full  # noqa: E402
+
 BASE_SF = '/root/testdata/sf0.1'
 WORK = '/tmp/jionlp_scale_bench'
 
@@ -146,49 +148,26 @@ def build_scale_dir(spark, factor: int) -> str:
     return out
 
 
-def _force_full(df):
-    """Make ``.count()`` evaluate EVERY column of ``df``.
-
-    The bare count action lets Catalyst prune anything that doesn't
-    change cardinality: value columns of aggregates vanish (a
-    countDistinct pair measured as a flat 35-record skeleton), UNUSED
-    WINDOW nodes are eliminated wholesale — taking their exchange and
-    any expensive expressions with them (asof_join/training_shards
-    measured as '1/32/32 flat' when their real plans shuffle
-    corpus-sized records), and a keyless final aggregate folds to one
-    row without evaluating at all.  A data-dependent filter on an
-    all-columns digest defeats every variant: the row count now
-    depends on every value, so the full plan must run.  The md5+json
-    per OUTPUT row is a small, factor-uniform overhead."""
-    from pyspark.sql import functions as F
-    return (df.withColumn('__d', F.md5(F.to_json(F.struct('*'))))
-            .filter(F.col('__d') >= '0'))
-
-
 class Recorder:
     """Shared run/record implementation: cold run (with shuffle-record
     delta), optional best-of-2 warm repeat, one JSON line per row, all
     rows collected for the artifact.  Every measured plan is
-    digest-forced (see _force_full) so pruning can't gut it; pass
-    raw=True only for a plan whose count must stay bare."""
+    digest-forced (see benchlib.force_full) so pruning can't gut it."""
 
     def __init__(self, spark, family: str):
         self.spark = spark
         self.family = family
         self.rows: list[dict] = []
 
-    def __call__(self, name, fn, cold_only=False, extra=None, raw=False):
-        force = (lambda d: d) if raw else _force_full
+    def __call__(self, name, fn, cold_only=False):
         s0 = shuffle_records(self.spark)
         t0 = time.time()
-        rows = force(fn()).count()
+        rows = force_full(fn()).count()
         cold = time.time() - t0
         s1 = shuffle_records(self.spark)
         rec = (s1 - s0) if (s0 >= 0 and s1 >= 0) else -1
-        out = {'family': self.family, 'op': name,
-               'cold_sec': round(cold, 2), 'rows': rows,
-               'shuffle_records': rec,
-               'load1': round(os.getloadavg()[0], 2)}
+        out = {'op': name, 'cold_sec': round(cold, 2), 'rows': rows,
+               'shuffle_records': rec, 'load1': round(os.getloadavg()[0], 2)}
         if not cold_only:
             # warm repeat: several operators persist() intermediates and
             # Spark reuses shuffle files across identical stages — the
@@ -196,15 +175,18 @@ class Recorder:
             best = None
             for _ in range(2):
                 t0 = time.time()
-                force(fn()).count()
+                force_full(fn()).count()
                 dt = time.time() - t0
                 best = dt if best is None or dt < best else best
             out['warm_sec'] = round(best, 2)
-        if extra:
-            out.update(extra)
-        print(json.dumps(out), flush=True)
-        self.rows.append(out)
-        return out
+        return self.note(**out)
+
+    def note(self, **row):
+        """Record a row: one JSON line, kept for the artifact."""
+        row = {'family': self.family, **row}
+        print(json.dumps(row), flush=True)
+        self.rows.append(row)
+        return row
 
 
 # ---------------------------------------------------------------- families
@@ -365,18 +347,8 @@ def family_kg(spark, factors, run):
         for mode, kw in (('cap=4 fixed', {}),
                          ('df_frac=0.011', {'df_frac': 0.011})):
             if kw and factor > 10:
-                print(json.dumps({
-                    'family': 'kg',
-                    'op': f'containment_pairs@x{factor} ({mode})',
-                    'skipped': 'cap ∝ N ⇒ join ∝ frac·N·postings — '
-                               'the stated price of scale-stable '
-                               'semantics (operator docstring); '
-                               '≥50× the 10× work at this point'}),
-                    flush=True)
-                run.rows.append({
-                    'family': 'kg',
-                    'op': f'containment_pairs@x{factor} ({mode})',
-                    'skipped': 'join ∝ frac·N·postings (stated trade)'})
+                run.note(op=f'containment_pairs@x{factor} ({mode})',
+                         skipped='join ∝ frac·N·postings (stated trade)')
                 continue
             run(f'containment_pairs@x{factor} ({mode})',
                 lambda i=inj, k=kw: containment_pairs(
@@ -396,21 +368,11 @@ def family_kg(spark, factors, run):
                 elif mode in base_pairs:
                     base = base_pairs[mode]
                     inter = len(base & got)
-                    print(json.dumps({
-                        'family': 'kg',
-                        'op': f'containment_base_pair_retention@x10 '
-                              f'({mode})',
-                        'base_pairs': len(base),
-                        'retained': inter,
-                        'retention': round(inter / max(len(base), 1), 4),
-                        'new_copy0_pairs': len(got - base)}), flush=True)
-                    run.rows.append({
-                        'family': 'kg',
-                        'op': f'containment_base_pair_retention@x10 '
-                              f'({mode})',
-                        'base_pairs': len(base), 'retained': inter,
-                        'retention': round(inter / max(len(base), 1), 4),
-                        'new_copy0_pairs': len(got - base)})
+                    run.note(
+                        op=f'containment_base_pair_retention@x10 ({mode})',
+                        base_pairs=len(base), retained=inter,
+                        retention=round(inter / max(len(base), 1), 4),
+                        new_copy0_pairs=len(got - base))
 
         from jionlp_spark.operators.graph import (negative_samples,
                                                   transe_scores)

@@ -32,11 +32,11 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _CHILD = r'''
-import json, os, shutil, sys, time
+import json, os, sys, time
 sys.path.insert(0, {repo!r})
 from jionlp_spark.config import get_spark
 from jionlp_spark.plans.pipeline import run_pipeline
-from jionlp_spark.sources.pages import write_pages
+from scripts.benchlib import materialize_pages
 
 cpus = {cpus}
 n_pages = {n_pages}
@@ -48,10 +48,8 @@ spark.sparkContext.setLogLevel('ERROR')
 # (BASELINE.md protocol), not corpus synthesis.  256 files so the scan
 # yields enough splits for either parallelism level (a production table
 # always does).
-pages_path = '/tmp/scaling_pages_{n_pages}_p256'
-if not os.path.exists(pages_path):
-    write_pages(spark, pages_path + '.tmp', n_pages, num_partitions=256)
-    os.rename(pages_path + '.tmp', pages_path)
+pages_path = materialize_pages(spark, '/tmp/scaling_pages_{n_pages}_p256',
+                               n_pages)
 
 times, loads = [], []
 for run in range(4):  # run 0 = warmup, discarded

@@ -1,4 +1,4 @@
-"""_parquet_nrows (footer row count) must equal Spark's count() over the
+"""catalog.parquet_rows (footer row count) must equal Spark's count() over the
 same path, including files and directories Spark's listing skips."""
 
 import os
@@ -13,7 +13,7 @@ def _write(path, n):
 
 
 def test_parquet_nrows_matches_spark_count(spark, tmp_path):
-    import __spark_entry__ as entry
+    from jionlp_spark.sources.catalog import parquet_rows
 
     root = str(tmp_path / 'tbl')
     _write(f'{root}/part-00000.parquet', 3)
@@ -30,12 +30,12 @@ def test_parquet_nrows_matches_spark_count(spark, tmp_path):
     want = spark.read.option('recursiveFileLookup', 'true') \
         .parquet(root).count()
     assert want == 7
-    assert entry._parquet_nrows(root) == want
-    assert entry._parquet_nrows(f'{root}/part-00000.parquet') == 3
+    assert parquet_rows(root) == want
+    assert parquet_rows(f'{root}/part-00000.parquet') == 3
 
 
 def test_parquet_nrows_partition_dirs(spark, tmp_path):
-    import __spark_entry__ as entry
+    from jionlp_spark.sources.catalog import parquet_rows
 
     # '_'-prefixed 'k=v' partition directories are read, not skipped
     root = str(tmp_path / 'parts')
@@ -44,4 +44,4 @@ def test_parquet_nrows_partition_dirs(spark, tmp_path):
     _write(f'{root}/_k=2/_x.parquet', 5)
     want = spark.read.parquet(root).count()
     assert want == 7
-    assert entry._parquet_nrows(root) == want
+    assert parquet_rows(root) == want

@@ -313,3 +313,42 @@ def test_rule_mining_broadcast_and_no_python(spark):
     plan = _plan(entry.queries()['kg_rule_mining'](
         spark, '/root/testdata/sf0.01'))
     assert 'BroadcastHashJoin' in plan or 'BroadcastExchange' in plan
+
+
+def _python_nodes(df):
+    return re.findall(r'ArrowEvalPython \[([^\]]*)\]', _plan(df))
+
+
+@pytest.mark.parametrize('use_html', [True, False], ids=['html', 'plain'])
+def test_lazy_pipeline_is_one_fused_python_pass(spark, use_html):
+    """The lazy pipeline exists to run normalization, the mention kernel
+    and the linker as ONE Python pass straight off the page column: its
+    triples plan has exactly one ArrowEvalPython node, the fused
+    linked_mentions_udf, and no stage-1 clean UDF (the redaction chain
+    behind the `clean` column never runs in a triples-only plan)."""
+    from jionlp_spark.plans.pipeline import run_pipeline
+    from jionlp_spark.sources.pages import generate_pages
+    pages = generate_pages(spark, 20, num_partitions=2)
+    nodes = _python_nodes(
+        run_pipeline(spark, pages, use_html=use_html)['triples'])
+    assert len(nodes) == 1, nodes
+    assert nodes[0].startswith('linked_mentions_udf('), nodes
+    assert 'clean' not in nodes[0], nodes
+
+
+def test_extract_mentions_adds_one_python_node(spark):
+    """Stage 2 of the published path is one mentions UDF over the stage-1
+    table: stacked on clean_pages it adds exactly one ArrowEvalPython
+    node to the plan (the clean UDF's own node stays separate, because
+    the mention UDF reads a field of its struct)."""
+    from jionlp_spark.functions.udfs import build_location_trie
+    from jionlp_spark.operators.clean import clean_pages
+    from jionlp_spark.operators.mentions import extract_mentions
+    from jionlp_spark.sources.pages import generate_pages
+    clean_df = clean_pages(generate_pages(spark, 20, num_partitions=2))
+    before = _python_nodes(clean_df)
+    after = _python_nodes(extract_mentions(
+        clean_df, lexicon_trie_broadcast=build_location_trie(spark)))
+    assert len(before) == 1, before
+    assert len(after) == 2, after
+    assert sum(n.startswith('mentions_udf(') for n in after) == 1, after
