@@ -90,6 +90,17 @@ LINKED_MENTION_TYPE = T.StructType(MENTION_FIELDS + [
     T.StructField('obj_type', T.StringType()),
 ])
 
+# a linked mention that also keeps the extractor's own norm (the stage-2
+# column; `norm` is the linked detail)
+PAGE_MENTION_TYPE = T.StructType(LINKED_MENTION_TYPE.fields + [
+    T.StructField('pre_norm', T.StringType()),
+])
+
+# everything the published stages 1-3 need of one page
+PAGE_RESULT = T.StructType(CLEAN_RESULT.fields + [
+    T.StructField('mentions', T.ArrayType(PAGE_MENTION_TYPE)),
+])
+
 
 # ---------------------------------------------------------------------------
 # Stage-1 cleaning: the one derivation of page text, shared by the clean
@@ -128,6 +139,15 @@ def _page_text(cleaner, raw, source: str) -> str:
     return _clean_body(cleaner, _page_body(raw, source)[0], source)
 
 
+def _clean_row(cleaner, raw, source: str) -> tuple:
+    """Page cell → (clean, extract_text, meta json).  Both text variants
+    come from one body, so the expensive html pass runs once per row."""
+    body, meta = _page_body(raw, source)
+    return (_clean_body(cleaner, body, source, redact=True),
+            _clean_body(cleaner, body, source),
+            json.dumps(meta, ensure_ascii=False) if meta else None)
+
+
 @_ndet
 @pandas_udf(T.StringType())
 def clean_text_udf(text: pd.Series) -> pd.Series:
@@ -136,25 +156,17 @@ def clean_text_udf(text: pd.Series) -> pd.Series:
 
 
 def make_clean_udf(source: str):
-    """page → (clean, extract_text, meta json).  Both text variants come
-    from one body, so the expensive html pass runs once per row."""
+    """page → (clean, extract_text, meta json), see _clean_row."""
     _check_source(source)
 
     @_ndet
     @pandas_udf(CLEAN_RESULT)
     def clean_udf(page: pd.Series) -> pd.DataFrame:
         cleaner = get_cleaner()
-        rows = []
-        for raw in page:
-            if raw is None:
-                rows.append((None, None, None))
-                continue
-            body, meta = _page_body(raw, source)
-            rows.append((
-                _clean_body(cleaner, body, source, redact=True),
-                _clean_body(cleaner, body, source),
-                json.dumps(meta, ensure_ascii=False) if meta else None))
-        return pd.DataFrame(rows, columns=['clean', 'extract_text', 'meta'])
+        return pd.DataFrame(
+            [_clean_row(cleaner, raw, source) if raw is not None
+             else (None, None, None) for raw in page],
+            columns=CLEAN_RESULT.names)
     return clean_udf
 
 
@@ -213,6 +225,13 @@ def _linker(bundle_broadcast) -> Linker:
         return Linker(bundle_broadcast.value)
     return _worker_cached((path, 'linker'),
                           lambda: Linker(_bc_value(bundle_broadcast)))
+
+
+def _mentions_linked(linker: Linker, trie, text: str, ts) -> tuple:
+    """One page's extract_text → (its mentions, the same mentions linked):
+    the per-page mention-and-link step of every fused UDF."""
+    found = mentions(text, _time_base(ts), trie)
+    return found, linker.linked(found)
 
 
 def make_mentions_udf(trie_broadcast=None):
@@ -282,10 +301,38 @@ def make_linked_mentions_udf(bundle_broadcast, trie_broadcast=None, *,
         linker = _linker(bundle_broadcast)
         cleaner = get_cleaner()
         return pd.Series([
-            linker.linked(mentions(_page_text(cleaner, t, source),
-                                   _time_base(ts), trie))
+            _mentions_linked(linker, trie, _page_text(cleaner, t, source),
+                             ts)[1]
             if t is not None else [] for t, ts in zip(text, warc_ts)])
     return linked_mentions_udf
+
+
+def make_page_udf(bundle_broadcast, trie_broadcast=None, *, source: str):
+    """Fused stages 1-3 for the published path: (page, warc_ts) → the
+    clean_udf columns plus the page's linked mentions, each also carrying
+    its pre-link norm, in ONE Python pass per batch.  Stage 2 and 3 rows
+    are projections of `mentions` (the rows of extract_mentions and
+    link_mentions over clean_pages)."""
+    _check_source(source)
+
+    @_ndet
+    @pandas_udf(PAGE_RESULT)
+    def page_udf(page: pd.Series, warc_ts: pd.Series) -> pd.DataFrame:
+        trie = _bc_value(trie_broadcast) if trie_broadcast is not None \
+            else None
+        linker = _linker(bundle_broadcast)
+        cleaner = get_cleaner()
+        rows = []
+        for raw, ts in zip(page, warc_ts):
+            if raw is None:
+                rows.append((None, None, None, []))
+                continue
+            clean, text, meta = _clean_row(cleaner, raw, source)
+            found, linked = _mentions_linked(linker, trie, text, ts)
+            rows.append((clean, text, meta,
+                         [lm + (m[4],) for m, lm in zip(found, linked)]))
+        return pd.DataFrame(rows, columns=PAGE_RESULT.names)
+    return page_udf
 
 
 # ---------------------------------------------------------------------------

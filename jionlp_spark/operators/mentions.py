@@ -1,4 +1,5 @@
-"""Stage 2 — mention detection (and stages 1-3 fused: linked_mentions).
+"""Stage 2 — mention detection (and stages 1-3 fused: linked_mentions for
+the lazy path, page_frame for the published one).
 
 clean(url, warc_ts, clean) → mentions(url, warc_ts, text, offset_start,
 offset_end, mention_type, norm): one row per typed mention, long format.
@@ -15,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jionlp_spark.functions.udfs import (make_linked_mentions_udf,
-                                         make_mentions_udf)
+                                         make_mentions_udf, make_page_udf)
 from jionlp_spark.operators.clean import page_source
 
 
@@ -52,3 +53,31 @@ def linked_mentions(pages: DataFrame, bundle_broadcast,
     fused = make_linked_mentions_udf(bundle_broadcast, lexicon_trie_broadcast,
                                      source=source)
     return _explode(df, fused(F.col(column), _time_base(df)), keep_cols)
+
+
+def page_frame(pages: DataFrame, bundle_broadcast,
+               lexicon_trie_broadcast=None, lang: str | None = 'zh',
+               use_html: bool = True) -> DataFrame:
+    """pages → (url, warc_ts, clean, extract_text, meta, mentions): the
+    clean_pages columns plus each page's linked mentions (PAGE_MENTION_TYPE)
+    from ONE ArrowEvalPython node; stage_tables projects stages 1-3."""
+    df, source, column = page_source(pages, lang, use_html)
+    keep = ['url'] + (['warc_ts'] if 'warc_ts' in df.columns else [])
+    page = make_page_udf(bundle_broadcast, lexicon_trie_broadcast,
+                         source=source)
+    return (df.select(*keep, page(F.col(column), _time_base(df)).alias('p'))
+            .select(*keep, 'p.*'))
+
+
+MENTION_COLS = ('text', 'offset_start', 'offset_end', 'mention_type')
+
+
+def stage_tables(frame: DataFrame) -> tuple:
+    """page_frame → (clean, mentions, entities) with the columns of
+    clean_pages, extract_mentions and link_mentions: stage 2 keeps the
+    extractor's pre-link norm, stage 3 the linked one."""
+    keep = [c for c in ('url', 'warc_ts') if c in frame.columns]
+    rows = _explode(frame, F.col('mentions'), keep)
+    return (frame.drop('mentions'),
+            rows.select(*keep, *MENTION_COLS, F.col('pre_norm').alias('norm')),
+            rows.select(*keep, *MENTION_COLS, 'obj', 'obj_type', 'norm'))

@@ -4,7 +4,8 @@ requirement).
 
 No Iceberg runtime jar ships in this sandbox, so the catalog degrades to
 partitioned Parquet + a ``_manifest.json`` per table: row count, schema,
-per-file lineage (name, bytes), input fingerprint, stage name, and a
+per-file lineage (name, bytes), input fingerprint, stage name, the
+publish's ``metrics`` (``write_s``: write wall seconds), and a
 ``snapshots`` list recording every publish (id, parent, rows,
 fingerprint) — the Iceberg metadata shape, so a real cluster can swap in
 a real catalog without touching the stages.
@@ -27,9 +28,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = '_manifest.json'
 SNAPSHOT_DIR = '_snapshots'
@@ -64,6 +67,43 @@ def parquet_rows(path: str) -> int:
         return pq.ParquetFile(path).metadata.num_rows
     return sum(pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
                for f in _parquet_files(path))
+
+
+# the writer's schema JSON, stored in the footer of every parquet file
+# Spark writes
+SPARK_SCHEMA_KEY = b'org.apache.spark.sql.parquet.row.metadata'
+
+
+def _as_nullable(t):
+    """DataType.asNullable over schema JSON: every struct field, array
+    element and map value nullable."""
+    if not isinstance(t, dict):
+        return t
+    if t['type'] == 'struct':
+        return {**t, 'fields': [{**f, 'nullable': True,
+                                 'type': _as_nullable(f['type'])}
+                                for f in t['fields']]}
+    if t['type'] == 'array':
+        return {**t, 'elementType': _as_nullable(t['elementType']),
+                'containsNull': True}
+    if t['type'] == 'map':
+        return {**t, 'keyType': _as_nullable(t['keyType']),
+                'valueType': _as_nullable(t['valueType']),
+                'valueContainsNull': True}
+    return t
+
+
+def parquet_schema(path: str) -> StructType:
+    """The schema a Spark scan of the Spark-written parquet directory
+    ``path`` infers — the writer's schema from a footer, made nullable —
+    without the inference job such a scan launches."""
+    import pyarrow.parquet as pq
+    first = next(_parquet_files(path), None)
+    if first is None:    # e.g. an empty bucketed write
+        raise ValueError(f'no parquet files to read a schema from: {path}')
+    meta = pq.ParquetFile(os.path.join(path, first)).metadata.metadata
+    written = meta[SPARK_SCHEMA_KEY]
+    return StructType.fromJson(_as_nullable(json.loads(written)))
 
 
 def _snapshot_entry(manifest: dict) -> dict:
@@ -230,15 +270,20 @@ _READ_TABLE_REG: dict = {}
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     """Manifest-aware read of a catalog table.  Plain tables come back
-    as a parquet scan; tables published with ``bucket_by`` come back as
+    as a parquet scan with the manifest's schema (no inference job);
+    tables published with ``bucket_by`` come back as
     a bucketed catalog table (re-declared per session — the in-memory
     session catalog forgets DDL across processes, but the bucket ids
     live in the FILE NAMES, so an external-table declaration over the
     same path restores exchange-free joins in any session)."""
-    m = read_manifest(path)
-    spec = (m or {}).get('bucket_spec')
+    m = read_manifest(path) or {}
+    # the manifest records the published schema — re-deriving it per read
+    # is a Spark job (parquet footer inference) of pure overhead
+    schema = StructType.fromJson(m['schema']) if m.get('schema') else None
+    spec = m.get('bucket_spec')
     if not spec:
-        return spark.read.parquet(path)
+        return (spark.read.schema(schema) if schema else spark.read) \
+            .parquet(path)
     import hashlib
     tbl = '_cat_' + hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:12]
     # DDL round trips are driver-side overhead (~3 SQL commands per read);
@@ -254,13 +299,7 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
                         .encode()).hexdigest())
     if _READ_TABLE_REG.get(reg_key) == snap:
         return spark.table(tbl)
-    if m.get('schema'):
-        # the manifest records the published schema — re-deriving it via a
-        # JVM parquet footer inference per read was pure overhead
-        from pyspark.sql.types import StructType
-        fields = StructType.fromJson(m['schema']).fields
-    else:
-        fields = spark.read.parquet(path).schema.fields
+    fields = (schema or spark.read.parquet(path).schema).fields
     ddl = ', '.join(f'`{f.name}` {f.dataType.simpleString()}'
                     for f in fields)
     cols = ', '.join(f'`{c}`' for c in spec['columns'])
@@ -305,6 +344,7 @@ def run_stage(spark: SparkSession, path: str, stage: str, build,
     df = build()
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
+    t0 = time.perf_counter()
     if bucket_by:
         # bucketed parquet needs a catalog writer (plain .parquet(path)
         # can't emit bucket ids); an external temp table writes the
@@ -330,10 +370,12 @@ def run_stage(spark: SparkSession, path: str, stage: str, build,
         spark.sql(f'DROP TABLE IF EXISTS {wtbl}')
     else:
         df.write.mode('overwrite').parquet(tmp)
+    # wall seconds of the write jobs (the stage's compute runs inside them)
+    metrics = {'write_s': round(time.perf_counter() - t0, 6)}
 
-    out = spark.read.parquet(tmp)
-    # manifest row count from the parquet footers (exact, and no Spark
-    # job — a count() here was one extra cluster round-trip per publish)
+    # manifest row count and schema from the parquet footers (exact, and
+    # no Spark job — a count() or a read-back schema inference here was
+    # one extra cluster round-trip per publish)
     rows = parquet_rows(tmp)
 
     prev = read_manifest(path)
@@ -364,7 +406,8 @@ def run_stage(spark: SparkSession, path: str, stage: str, build,
                     except OSError:
                         shutil.copy2(src, dst)
 
-    write_manifest(tmp, stage, rows, out.schema.json(), input_fingerprint,
+    write_manifest(tmp, stage, rows, parquet_schema(tmp).json(),
+                   input_fingerprint, metrics=metrics,
                    snapshot_id=snapshot_id, history=history,
                    bucket_spec=({'columns': list(bucket_by),
                                  'n_buckets': n_buckets}

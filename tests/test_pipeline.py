@@ -188,6 +188,147 @@ def test_checkpoint_resume(spark, tmp_path_factory):
     assert _digest(fresh['triples']) == want
 
 
+STAGES = ('s1_clean', 's2_mentions', 's3_entities', 's4_triples')
+
+
+@pytest.fixture(scope='module')
+def published(spark, tmp_path_factory):
+    """A fresh published run over 60 pages → (pages, out_dir, triples
+    digest).  Tests that publish again work on a copy of out_dir."""
+    from jionlp_spark.plans.pipeline import run_pipeline
+    from jionlp_spark.sources.pages import generate_pages
+    pages = generate_pages(spark, 60, num_partitions=3)
+    out = str(tmp_path_factory.mktemp('published') / 'kg')
+    res = run_pipeline(spark, pages, out_dir=out, input_fingerprint='fp1')
+    return pages, out, _digest(res['triples'])
+
+
+def test_resume_after_s1_takes_chained_path(spark, tmp_path, monkeypatch,
+                                            published):
+    """Kill after S1 (only s1_clean published), resume: S1 is read back,
+    S2-S4 come from the chained operators over it (the fused page pass
+    never runs), and the triples equal the full run's."""
+    from jionlp_spark.plans import pipeline
+    from jionlp_spark.sources import catalog
+    pages, out, want = published
+    part = str(tmp_path / 'part')
+    shutil.copytree(os.path.join(out, 's1_clean'),
+                    os.path.join(part, 's1_clean'))
+
+    def no_fused_pass(*a, **kw):
+        raise AssertionError('fused page pass ran on a resumed S1')
+    monkeypatch.setattr(pipeline, 'page_frame', no_fused_pass)
+    resumed = pipeline.run_pipeline(spark, pages, out_dir=part,
+                                    input_fingerprint='fp1')
+    assert _digest(resumed['triples']) == want
+    ids = {st: catalog.read_manifest(os.path.join(part, st))
+           ['current_snapshot_id'] for st in STAGES}
+    assert ids == dict.fromkeys(STAGES, 1), ids
+
+
+def test_no_resume_recomputes_through_fused_pass(spark, tmp_path,
+                                                 monkeypatch, published):
+    """resume=False over four complete manifests republishes every stage
+    from the fused page pass: each snapshot id advances, and the triples
+    are unchanged."""
+    from jionlp_spark.plans import pipeline
+    from jionlp_spark.sources import catalog
+    pages, out, want = published
+    again = str(tmp_path / 'again')
+    shutil.copytree(out, again)
+    calls = []
+    inner = pipeline.page_frame
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return inner(*a, **kw)
+    monkeypatch.setattr(pipeline, 'page_frame', counted)
+    res = pipeline.run_pipeline(spark, pages, out_dir=again,
+                                input_fingerprint='fp1', resume=False)
+    assert calls == [1]
+    assert _digest(res['triples']) == want
+    for st in STAGES:
+        m = catalog.read_manifest(os.path.join(again, st))
+        assert m['current_snapshot_id'] == 2, (st, m['snapshots'])
+
+
+def test_published_stages_equal_chained_operators(spark, published):
+    """Each published stage 1-3 table equals its chained operator over the
+    same pages on every column; s2_mentions keeps the extractors' pre-link
+    norm, which is null for the mention types only the linker parses."""
+    from pyspark.sql import functions as F
+
+    from jionlp_spark.functions.udfs import build_location_trie
+    from jionlp_spark.operators.clean import clean_pages
+    from jionlp_spark.operators.link import build_bundle, link_mentions
+    from jionlp_spark.operators.mentions import extract_mentions
+    pages, out, _ = published
+    clean = clean_pages(pages).cache()
+    mentions = extract_mentions(
+        clean, lexicon_trie_broadcast=build_location_trie(spark)).cache()
+    chained = {'s1_clean': clean, 's2_mentions': mentions,
+               's3_entities': link_mentions(mentions, build_bundle(spark))}
+    try:
+        for st, want in chained.items():
+            got = spark.read.parquet(os.path.join(out, st))
+            assert got.columns == want.columns, st
+            assert got.exceptAll(want).count() == 0, st
+            assert want.exceptAll(got).count() == 0, st
+        linker_only = ('cell_phone', 'landline_phone', 'id_card', 'email',
+                       'lexicon:location')
+        rows = (spark.read.parquet(os.path.join(out, 's2_mentions'))
+                .filter(F.col('mention_type').isin(*linker_only))
+                .groupBy('mention_type')
+                .agg(F.count('norm').alias('norms')).collect())
+        assert {r['mention_type'] for r in rows} == set(linker_only), rows
+        assert all(r['norms'] == 0 for r in rows), rows
+        assert spark.read.parquet(os.path.join(out, 's2_mentions')) \
+            .filter(F.col('mention_type') == 'money') \
+            .filter(F.col('norm').isNotNull()).count() > 0
+    finally:
+        clean.unpersist()
+        mentions.unpersist()
+
+
+def test_published_manifests_record_write_seconds(published):
+    """Every manifest of a run records its publish's write wall time."""
+    from jionlp_spark.sources import catalog
+    _pages, out, _ = published
+    for st in STAGES:
+        metrics = catalog.read_manifest(os.path.join(out, st))['metrics']
+        assert set(metrics) == {'write_s'}, (st, metrics)
+        assert metrics['write_s'] > 0, (st, metrics)
+
+
+def test_published_run_releases_page_frame(spark, tmp_path, monkeypatch):
+    """The persisted page frame is released when run_pipeline returns, and
+    also when a publish raises."""
+    from jionlp_spark.plans.pipeline import run_pipeline
+    from jionlp_spark.sources import catalog
+    from jionlp_spark.sources.pages import generate_pages
+
+    def persisted():
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    pages = generate_pages(spark, 20, num_partitions=2)
+    before = persisted()
+    run_pipeline(spark, pages, out_dir=str(tmp_path / 'ok'),
+                 input_fingerprint='leak')
+    assert persisted() == before
+
+    inner = catalog.run_stage
+
+    def failing(spark_, path, stage, *a, **kw):
+        if stage == 's2_mentions':   # after the s1 write built the cache
+            raise RuntimeError('publish failed')
+        return inner(spark_, path, stage, *a, **kw)
+    monkeypatch.setattr(catalog, 'run_stage', failing)
+    with pytest.raises(RuntimeError, match='publish failed'):
+        run_pipeline(spark, pages, out_dir=str(tmp_path / 'fail'),
+                     input_fingerprint='leak')
+    assert persisted() == before
+
+
 def test_bucketed_join_is_exchange_free(spark, tmp_path):
     """A self-join on the bucket key of a bucketed table must plan without
     Exchange on either side (co-located sort-merge join)."""
@@ -360,6 +501,41 @@ def test_catalog_snapshot_history(spark, tmp_path):
     m['snapshots'][1]['parent'] = 99
     json.dump(m, open(mf, 'w'))
     assert not catalog.is_complete(path, 'fp3')
+
+
+@pytest.mark.parametrize('rows', [5, 0], ids=['rows', 'empty'])
+def test_publish_and_read_table_launch_no_schema_jobs(spark, tmp_path, rows):
+    """A publish reads its schema from the parquet footers and a plain
+    table reads back with the manifest's schema: the same schema and rows
+    as a bare parquet read (non-null, nested, map and annotated fields
+    included), and no Spark job besides the write (a bare read launches a
+    schema-inference job per call)."""
+    from pyspark.sql import functions as F
+
+    from jionlp_spark.sources import catalog
+
+    path = str(tmp_path / 'tbl')
+    df = spark.range(rows).select(
+        F.col('id').alias('id', metadata={'unit': 'row'}),
+        F.expr('cast(id as string)').alias('s'),
+        F.expr("array(named_struct('k', id, 'v', cast(null as string)))")
+        .alias('a'),
+        F.expr("map('k', id)").alias('m'),
+        F.expr("timestamp'2020-01-01'").alias('ts'))
+    sc = spark.sparkContext
+    group = f'catalog_probe_{rows}'
+    sc.setJobGroup(group, 'publish + read_table')
+    try:
+        catalog.run_stage(spark, path, 'stage', lambda: df,
+                          input_fingerprint='fp1')
+        got = catalog.read_table(spark, path)
+    finally:
+        sc.setLocalProperty('spark.jobGroup.id', None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    bare = spark.read.parquet(path)
+    assert got.schema == bare.schema
+    assert got.schema.fields[0].metadata == {'unit': 'row'}
+    assert sorted(got.collect()) == sorted(bare.collect())
 
 
 def test_catalog_v1_manifest_compat(spark, tmp_path):

@@ -352,3 +352,57 @@ def test_extract_mentions_adds_one_python_node(spark):
     assert len(before) == 1, before
     assert len(after) == 2, after
     assert sum(n.startswith('mentions_udf(') for n in after) == 1, after
+
+
+def _python_nodes_run(df):
+    """Names of the ArrowEvalPython nodes a job over ``df`` runs: its
+    executed plan, read through an adaptive wrapper, and through a cached
+    relation only while that cache is not yet built (a built cache is a
+    column-buffer scan, whatever plan produced it)."""
+    def walk(p):
+        name = p.nodeName()
+        if name == 'AdaptiveSparkPlan':
+            return walk(p.executedPlan())
+        if name == 'InMemoryTableScan':
+            rel = p.relation()
+            return [] if rel.cacheBuilder().isCachedColumnBuffersLoaded() \
+                else walk(rel.cachedPlan())
+        out = [p.simpleString(1000)] if name == 'ArrowEvalPython' else []
+        kids = p.children()
+        for i in range(kids.size()):
+            out += walk(kids.apply(i))
+        return out
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+@pytest.mark.parametrize('use_html', [True, False], ids=['html', 'plain'])
+def test_published_pipeline_is_one_python_pass(spark, tmp_path,
+                                               monkeypatch, use_html):
+    """A fresh published run pays ONE Python pass per page: the s1 write
+    runs the page UDF (clean, extract_text, meta and the linked
+    mentions together), and the s2 and s3 writes are projections of that
+    persisted frame with no Python node of their own.  s4 is Catalyst
+    only, as ever."""
+    from jionlp_spark.plans.pipeline import run_pipeline
+    from jionlp_spark.sources import catalog
+    from jionlp_spark.sources.pages import generate_pages
+
+    inner = catalog.run_stage
+    nodes = {}
+
+    def spy(spark_, path, stage, build, *a, **kw):
+        def traced():
+            df = build()
+            nodes[stage] = _python_nodes_run(df)
+            return df
+        return inner(spark_, path, stage, traced, *a, **kw)
+
+    monkeypatch.setattr(catalog, 'run_stage', spy)
+    pages = generate_pages(spark, 20, num_partitions=2)
+    run_pipeline(spark, pages, use_html=use_html,
+                 out_dir=str(tmp_path / 'kg'), input_fingerprint='guard')
+    assert sorted(nodes) == ['s1_clean', 's2_mentions', 's3_entities',
+                             's4_triples'], nodes
+    assert len(nodes['s1_clean']) == 1, nodes
+    assert nodes['s2_mentions'] == [] and nodes['s3_entities'] == [], nodes
+    assert nodes['s4_triples'] == [], nodes
