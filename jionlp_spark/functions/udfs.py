@@ -227,11 +227,12 @@ def _linker(bundle_broadcast) -> Linker:
                           lambda: Linker(_bc_value(bundle_broadcast)))
 
 
-def _mentions_linked(linker: Linker, trie, text: str, ts) -> tuple:
-    """One page's extract_text → (its mentions, the same mentions linked):
-    the per-page mention-and-link step of every fused UDF."""
+def _mentions_linked(linker: Linker, trie, text: str, ts) -> list:
+    """One page's extract_text → its linked mentions (PAGE_MENTION_TYPE),
+    each also carrying the extractor's own norm: the per-page
+    mention-and-link step of every fused UDF."""
     found = mentions(text, _time_base(ts), trie)
-    return found, linker.linked(found)
+    return [lm + (m[4],) for m, lm in zip(found, linker.linked(found))]
 
 
 def make_mentions_udf(trie_broadcast=None):
@@ -283,9 +284,9 @@ def make_lexicon_linked_udf(trie_broadcast, bundle_broadcast):
 def make_linked_mentions_udf(bundle_broadcast, trie_broadcast=None, *,
                              source: str):
     """Fused stages 1-3 for a triples-only plan: normalization, the mention
-    kernel and the linker in ONE Python pass per batch → array<linked
-    mention>, the same rows as clean_pages → extract_mentions →
-    link_mentions.
+    kernel and the linker in ONE Python pass per batch → array of
+    PAGE_MENTION_TYPE, the rows of clean_pages → extract_mentions →
+    link_mentions, each also carrying its pre-link norm.
 
     ``source`` names the input column's form ('html' or 'plain', see
     _page_body).  Neither pays the redaction chain that only the `clean`
@@ -294,25 +295,23 @@ def make_linked_mentions_udf(bundle_broadcast, trie_broadcast=None, *,
     _check_source(source)
 
     @_ndet
-    @pandas_udf(T.ArrayType(LINKED_MENTION_TYPE))
+    @pandas_udf(T.ArrayType(PAGE_MENTION_TYPE))
     def linked_mentions_udf(text: pd.Series, warc_ts: pd.Series) -> pd.Series:
         trie = _bc_value(trie_broadcast) if trie_broadcast is not None \
             else None
         linker = _linker(bundle_broadcast)
         cleaner = get_cleaner()
         return pd.Series([
-            _mentions_linked(linker, trie, _page_text(cleaner, t, source),
-                             ts)[1]
+            _mentions_linked(linker, trie, _page_text(cleaner, t, source), ts)
             if t is not None else [] for t, ts in zip(text, warc_ts)])
     return linked_mentions_udf
 
 
 def make_page_udf(bundle_broadcast, trie_broadcast=None, *, source: str):
     """Fused stages 1-3 for the published path: (page, warc_ts) → the
-    clean_udf columns plus the page's linked mentions, each also carrying
-    its pre-link norm, in ONE Python pass per batch.  Stage 2 and 3 rows
-    are projections of `mentions` (the rows of extract_mentions and
-    link_mentions over clean_pages)."""
+    clean_udf columns plus the page's mentions as make_linked_mentions_udf
+    gives them, in ONE Python pass per batch.  Stage 2 and 3 rows are
+    projections of `mentions` (operators.mentions.mention_tables)."""
     _check_source(source)
 
     @_ndet
@@ -328,9 +327,8 @@ def make_page_udf(bundle_broadcast, trie_broadcast=None, *, source: str):
                 rows.append((None, None, None, []))
                 continue
             clean, text, meta = _clean_row(cleaner, raw, source)
-            found, linked = _mentions_linked(linker, trie, text, ts)
             rows.append((clean, text, meta,
-                         [lm + (m[4],) for m, lm in zip(found, linked)]))
+                         _mentions_linked(linker, trie, text, ts)))
         return pd.DataFrame(rows, columns=PAGE_RESULT.names)
     return page_udf
 

@@ -5,8 +5,9 @@ pages(url, warc_ts, html, text, lang) → clean(url, warc_ts, clean, meta).
 Spark-first notes: the lang filter is a plain Catalyst predicate (pushed to
 the parquet/Iceberg scan together with column pruning — only the columns
 named here are read); the heavy work is one fused Arrow-batched UDF per row
-batch.  Output is repartitioned by xxhash64(url) so downstream stages see a
-stable, url-colocated layout (north_rule requirement).
+batch.  The published pipeline repartitions its page frame by xxhash64(url)
+so the stage tables share a stable, url-colocated layout (north_rule
+requirement).
 """
 
 from __future__ import annotations
@@ -29,8 +30,7 @@ def page_source(pages: DataFrame, lang: str | None = 'zh',
 
 
 def clean_pages(pages: DataFrame, lang: str | None = 'zh',
-                use_html: bool = True,
-                num_partitions: int | None = None) -> DataFrame:
+                use_html: bool = True) -> DataFrame:
     """→ (url, warc_ts, clean, extract_text, meta).
 
     ``clean`` is the reference clean_text output (redacted, byte-identical
@@ -39,9 +39,5 @@ def clean_pages(pages: DataFrame, lang: str | None = 'zh',
     """
     df, source, column = page_source(pages, lang, use_html)
     keep = ['url'] + (['warc_ts'] if 'warc_ts' in df.columns else [])
-    df = df.select(*keep, make_clean_udf(source)(F.col(column)).alias('c')) \
-        .select(*keep, 'c.*')
-
-    if num_partitions:
-        df = df.repartition(num_partitions, F.xxhash64('url'))
-    return df
+    clean = make_clean_udf(source)(F.col(column))
+    return df.select(*keep, clean.alias('c')).select(*keep, 'c.*')

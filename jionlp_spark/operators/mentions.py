@@ -1,5 +1,6 @@
 """Stage 2 — mention detection (and stages 1-3 fused: linked_mentions for
-the lazy path, page_frame for the published one).
+the lazy path, page_frame for the published one; mention_tables projects
+both into the same stage-2 and stage-3 tables).
 
 clean(url, warc_ts, clean) → mentions(url, warc_ts, text, offset_start,
 offset_end, mention_type, norm): one row per typed mention, long format.
@@ -15,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jionlp_spark.functions.udfs import (make_linked_mentions_udf,
+from jionlp_spark.functions.udfs import (PAGE_MENTION_TYPE,
+                                         make_linked_mentions_udf,
                                          make_mentions_udf, make_page_udf)
 from jionlp_spark.operators.clean import page_source
 
@@ -34,21 +36,20 @@ def _explode(df: DataFrame, mention_array, keep_cols) -> DataFrame:
 
 
 def extract_mentions(clean_df: DataFrame,
-                     text_col: str = 'extract_text',
-                     lexicon_trie_broadcast=None,
-                     keep_cols=('url', 'warc_ts')) -> DataFrame:
+                     lexicon_trie_broadcast=None) -> DataFrame:
     mention_array = make_mentions_udf(lexicon_trie_broadcast)(
-        F.col(text_col), _time_base(clean_df))
-    return _explode(clean_df, mention_array, keep_cols)
+        F.col('extract_text'), _time_base(clean_df))
+    return _explode(clean_df, mention_array, ('url', 'warc_ts'))
 
 
 def linked_mentions(pages: DataFrame, bundle_broadcast,
                     lexicon_trie_broadcast=None, lang: str | None = 'zh',
                     use_html: bool = True,
                     keep_cols=('url', 'warc_ts')) -> DataFrame:
-    """pages → the rows of link_mentions(extract_mentions(clean_pages(...)))
-    from ONE ArrowEvalPython node straight off the page column, without the
-    redaction chain that only the `clean` column needs."""
+    """pages → one row per linked mention (the ``keep_cols``, then the
+    PAGE_MENTION_TYPE fields) from ONE ArrowEvalPython node straight off
+    the page column, without the redaction chain that only the `clean`
+    column needs; mention_tables projects stages 2 and 3."""
     df, source, column = page_source(pages, lang, use_html)
     fused = make_linked_mentions_udf(bundle_broadcast, lexicon_trie_broadcast,
                                      source=source)
@@ -72,12 +73,18 @@ def page_frame(pages: DataFrame, bundle_broadcast,
 MENTION_COLS = ('text', 'offset_start', 'offset_end', 'mention_type')
 
 
+def mention_tables(rows: DataFrame) -> tuple:
+    """Linked mention rows (linked_mentions, or page_frame's `mentions`
+    exploded) → (mentions, entities) with the columns of extract_mentions
+    and link_mentions: stage 2 keeps the extractor's pre-link norm,
+    stage 3 the linked one."""
+    keep = [c for c in rows.columns if c not in PAGE_MENTION_TYPE.names]
+    return (rows.select(*keep, *MENTION_COLS, F.col('pre_norm').alias('norm')),
+            rows.select(*keep, *MENTION_COLS, 'obj', 'obj_type', 'norm'))
+
+
 def stage_tables(frame: DataFrame) -> tuple:
     """page_frame → (clean, mentions, entities) with the columns of
-    clean_pages, extract_mentions and link_mentions: stage 2 keeps the
-    extractor's pre-link norm, stage 3 the linked one."""
-    keep = [c for c in ('url', 'warc_ts') if c in frame.columns]
-    rows = _explode(frame, F.col('mentions'), keep)
-    return (frame.drop('mentions'),
-            rows.select(*keep, *MENTION_COLS, F.col('pre_norm').alias('norm')),
-            rows.select(*keep, *MENTION_COLS, 'obj', 'obj_type', 'norm'))
+    clean_pages, extract_mentions and link_mentions."""
+    rows = _explode(frame, F.col('mentions'), ('url', 'warc_ts'))
+    return (frame.drop('mentions'), *mention_tables(rows))

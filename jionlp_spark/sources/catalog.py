@@ -419,27 +419,6 @@ def run_stage(spark: SparkSession, path: str, stage: str, build,
     return read_table(spark, path)
 
 
-def write_bucketed(df: DataFrame, table_name: str, bucket_col: str,
-                   n_buckets: int = 32, sort_col: str | None = None) -> None:
-    """Publish a table bucketed (and optionally sorted) by a join key —
-    repeated joins/aggregations on that key then run exchange-free
-    (sort-merge join reads co-located buckets; no shuffle at query time).
-    The 100 TB use case: the mentions and triples tables are re-joined on
-    url/doc keys by every downstream consumer, so paying one bucketed write
-    amortizes the shuffle across all of them.
-
-    Uses the session warehouse (saveAsTable — bucketing metadata lives in
-    the catalog, plain parquet paths can't carry it).
-    """
-    # one file per bucket (see run_stage's bucketed write)
-    w = df.repartition(n_buckets, F.col(bucket_col)) \
-        .write.format('parquet').mode('overwrite') \
-        .bucketBy(n_buckets, bucket_col)
-    if sort_col is not None:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table_name)
-
-
 def snapshot_diff(spark: SparkSession, path: str, from_id: int,
                   to_id: int, key_cols: tuple,
                   compare_cols: tuple = ()) -> DataFrame:

@@ -162,6 +162,8 @@ def test_phone_loc_unknown_prefix(jio):
     assert crashed, 'reference no longer crashes; revisit the divergence'
 
 
+@pytest.mark.skipif(not os.path.isdir(REF_DICTS),
+                    reason='full dictionaries unavailable')
 def test_env_full_dict_swap_in(monkeypatch):
     """JIONLP_SPARK_DICT_DIR swaps every loader to the full JioNLP
     dictionary tree (the production path): rare chars resolve, town/village
@@ -183,3 +185,14 @@ def test_env_full_dict_swap_in(monkeypatch):
 
     assert len(lexicons.load_sentiment_lexicons()[0]) > 30000
     assert len(lexicons.load_idioms()) > 30000
+
+
+def test_missing_env_dict_dir_raises(monkeypatch, tmp_path):
+    """JIONLP_SPARK_DICT_DIR naming a missing directory fails loudly,
+    naming the path, instead of falling back to the vendored subsets."""
+    from jionlp_spark import lexicons
+    monkeypatch.setenv('JIONLP_SPARK_DICT_DIR',
+                       str(tmp_path / 'no-such-dicts'))
+    for load in (lexicons.load_char_info, lexicons.load_phone_location):
+        with pytest.raises(FileNotFoundError, match='no-such-dicts'):
+            load()

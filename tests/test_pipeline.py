@@ -128,19 +128,24 @@ ENTITY_COLS = ('url', 'warc_ts', 'text', 'offset_start', 'offset_end',
 def test_lazy_and_published_shapes_agree(spark, tmp_path, pipeline_result,
                                          use_html):
     """The fused lazy plan and the four published stages give the same
-    entities (every column) and the same triples."""
+    clean, mentions and entities tables (same column lists, every column
+    compared, mentions with the pre-link norm) and the same triples."""
     from jionlp_spark.plans.pipeline import run_pipeline
     pages, _res = pipeline_result
     lazy = run_pipeline(spark, pages, use_html=use_html)
     published = run_pipeline(spark, pages, use_html=use_html,
                              out_dir=str(tmp_path / 'kg'),
                              input_fingerprint='parity')
-    for res in (lazy, published):
-        assert sorted(res['entities'].columns) == sorted(ENTITY_COLS)
-    want = sorted(map(repr, lazy['entities'].select(*ENTITY_COLS).collect()))
-    got = sorted(map(repr,
-                     published['entities'].select(*ENTITY_COLS).collect()))
-    assert len(want) > N_PAGES and got == want
+    assert published['entities'].columns == list(ENTITY_COLS)
+    for name in ('clean', 'mentions', 'entities'):
+        want, got = lazy[name].cache(), published[name]
+        try:
+            assert got.columns == want.columns, name
+            assert want.exceptAll(got).count() == 0, name
+            assert got.exceptAll(want).count() == 0, name
+        finally:
+            want.unpersist()
+    assert published['entities'].count() > N_PAGES
     assert _digest(published['triples']) == _digest(lazy['triples'])
 
 
@@ -203,23 +208,34 @@ def published(spark, tmp_path_factory):
     return pages, out, _digest(res['triples'])
 
 
-def test_resume_after_s1_takes_chained_path(spark, tmp_path, monkeypatch,
-                                            published):
-    """Kill after S1 (only s1_clean published), resume: S1 is read back,
-    S2-S4 come from the chained operators over it (the fused page pass
-    never runs), and the triples equal the full run's."""
+def _count_page_frames(monkeypatch):
+    """Count run_pipeline's page_frame calls → the list that grows."""
     from jionlp_spark.plans import pipeline
+    calls = []
+    inner = pipeline.page_frame
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return inner(*a, **kw)
+    monkeypatch.setattr(pipeline, 'page_frame', counted)
+    return calls
+
+
+def test_resume_after_s1_reruns_fused_pass(spark, tmp_path, monkeypatch,
+                                           published):
+    """Kill after S1 (only s1_clean published), resume: S1 is read back,
+    not republished, S2 and S3 are projections of one fresh page pass,
+    and the triples equal the full run's."""
+    from jionlp_spark.plans.pipeline import run_pipeline
     from jionlp_spark.sources import catalog
     pages, out, want = published
     part = str(tmp_path / 'part')
     shutil.copytree(os.path.join(out, 's1_clean'),
                     os.path.join(part, 's1_clean'))
-
-    def no_fused_pass(*a, **kw):
-        raise AssertionError('fused page pass ran on a resumed S1')
-    monkeypatch.setattr(pipeline, 'page_frame', no_fused_pass)
-    resumed = pipeline.run_pipeline(spark, pages, out_dir=part,
-                                    input_fingerprint='fp1')
+    calls = _count_page_frames(monkeypatch)
+    resumed = run_pipeline(spark, pages, out_dir=part,
+                           input_fingerprint='fp1')
+    assert calls == [1]
     assert _digest(resumed['triples']) == want
     ids = {st: catalog.read_manifest(os.path.join(part, st))
            ['current_snapshot_id'] for st in STAGES}
@@ -231,20 +247,14 @@ def test_no_resume_recomputes_through_fused_pass(spark, tmp_path,
     """resume=False over four complete manifests republishes every stage
     from the fused page pass: each snapshot id advances, and the triples
     are unchanged."""
-    from jionlp_spark.plans import pipeline
+    from jionlp_spark.plans.pipeline import run_pipeline
     from jionlp_spark.sources import catalog
     pages, out, want = published
     again = str(tmp_path / 'again')
     shutil.copytree(out, again)
-    calls = []
-    inner = pipeline.page_frame
-
-    def counted(*a, **kw):
-        calls.append(1)
-        return inner(*a, **kw)
-    monkeypatch.setattr(pipeline, 'page_frame', counted)
-    res = pipeline.run_pipeline(spark, pages, out_dir=again,
-                                input_fingerprint='fp1', resume=False)
+    calls = _count_page_frames(monkeypatch)
+    res = run_pipeline(spark, pages, out_dir=again,
+                       input_fingerprint='fp1', resume=False)
     assert calls == [1]
     assert _digest(res['triples']) == want
     for st in STAGES:
@@ -330,37 +340,34 @@ def test_published_run_releases_page_frame(spark, tmp_path, monkeypatch):
 
 
 def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    """A self-join on the bucket key of a bucketed table must plan without
-    Exchange on either side (co-located sort-merge join)."""
+    """A self-join on the bucket key of a table published with
+    run_stage(bucket_by=...) plans without Exchange on either side
+    (co-located sort-merge join): on the frame run_stage returns and on a
+    fresh read_table of the same path."""
     from pyspark.sql import functions as F
 
-    from jionlp_spark.sources.catalog import write_bucketed
-    import shutil
-    spark.sql('drop table if exists bucketed_docs_test')
-    # the Derby metastore is per-session but the warehouse DIRECTORY
-    # persists across test runs — clear the stale location too
-    wh = spark.conf.get('spark.sql.warehouse.dir').replace('file:', '')
-    shutil.rmtree(f'{wh}/bucketed_docs_test', ignore_errors=True)
+    from jionlp_spark.sources import catalog
     df = spark.range(0, 1000).select(
         F.col('id').alias('doc_id'),
         (F.col('id') % 7).alias('grp'))
-    write_bucketed(df, 'bucketed_docs_test', 'doc_id', n_buckets=8,
-                   sort_col='doc_id')
+    path = str(tmp_path / 'bucketed_docs')
+    published = catalog.run_stage(spark, path, 'bucketed_docs', lambda: df,
+                                  bucket_by=('doc_id',), n_buckets=8)
+    assert len(list(catalog._parquet_files(path))) == 8
     # force the sort-merge path (tiny test tables broadcast otherwise,
     # which bypasses bucket pruning entirely)
     prev = spark.conf.get('spark.sql.autoBroadcastJoinThreshold', '10485760')
     spark.conf.set('spark.sql.autoBroadcastJoinThreshold', '-1')
     try:
-        t = spark.table('bucketed_docs_test')
-        joined = t.alias('a').join(t.alias('b'), 'doc_id')
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert 'Exchange hashpartitioning' not in plan, plan
-        assert 'SortMergeJoin' in plan, plan
-        assert 'Bucketed: true' in plan, plan
-        assert joined.count() == 1000
+        for t in (published, catalog.read_table(spark, path)):
+            joined = t.alias('a').join(t.alias('b'), 'doc_id')
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert 'Exchange hashpartitioning' not in plan, plan
+            assert 'SortMergeJoin' in plan, plan
+            assert 'Bucketed: true' in plan, plan
+            assert joined.count() == 1000
     finally:
         spark.conf.set('spark.sql.autoBroadcastJoinThreshold', prev)
-        spark.sql('drop table bucketed_docs_test')
 
 
 def test_source_format_adapters(spark, tmp_path):

@@ -2,7 +2,9 @@
 reach the parquet scan (the BENCH/PLANS.md audit, protected by CI), and
 the bench/oracle registries must stay complete."""
 
+import os
 import re
+import shutil
 
 import pytest
 
@@ -375,18 +377,11 @@ def _python_nodes_run(df):
     return walk(df._jdf.queryExecution().executedPlan())
 
 
-@pytest.mark.parametrize('use_html', [True, False], ids=['html', 'plain'])
-def test_published_pipeline_is_one_python_pass(spark, tmp_path,
-                                               monkeypatch, use_html):
-    """A fresh published run pays ONE Python pass per page: the s1 write
-    runs the page UDF (clean, extract_text, meta and the linked
-    mentions together), and the s2 and s3 writes are projections of that
-    persisted frame with no Python node of their own.  s4 is Catalyst
-    only, as ever."""
-    from jionlp_spark.plans.pipeline import run_pipeline
+def _spy_stage_builds(monkeypatch):
+    """Record, per stage that catalog.run_stage BUILDS (a complete stage it
+    reads back is not recorded), the ArrowEvalPython nodes its write
+    runs → the dict that fills."""
     from jionlp_spark.sources import catalog
-    from jionlp_spark.sources.pages import generate_pages
-
     inner = catalog.run_stage
     nodes = {}
 
@@ -398,6 +393,21 @@ def test_published_pipeline_is_one_python_pass(spark, tmp_path,
         return inner(spark_, path, stage, traced, *a, **kw)
 
     monkeypatch.setattr(catalog, 'run_stage', spy)
+    return nodes
+
+
+@pytest.mark.parametrize('use_html', [True, False], ids=['html', 'plain'])
+def test_published_pipeline_is_one_python_pass(spark, tmp_path,
+                                               monkeypatch, use_html):
+    """A fresh published run pays ONE Python pass per page: the s1 write
+    runs the page UDF (clean, extract_text, meta and the linked
+    mentions together), and the s2 and s3 writes are projections of that
+    persisted frame with no Python node of their own.  s4 is Catalyst
+    only, as ever."""
+    from jionlp_spark.plans.pipeline import run_pipeline
+    from jionlp_spark.sources.pages import generate_pages
+
+    nodes = _spy_stage_builds(monkeypatch)
     pages = generate_pages(spark, 20, num_partitions=2)
     run_pipeline(spark, pages, use_html=use_html,
                  out_dir=str(tmp_path / 'kg'), input_fingerprint='guard')
@@ -406,3 +416,19 @@ def test_published_pipeline_is_one_python_pass(spark, tmp_path,
     assert len(nodes['s1_clean']) == 1, nodes
     assert nodes['s2_mentions'] == [] and nodes['s3_entities'] == [], nodes
     assert nodes['s4_triples'] == [], nodes
+
+
+def test_resume_with_s1_to_s3_complete_builds_only_s4(spark, tmp_path,
+                                                      monkeypatch):
+    """A resume whose S1-S3 are complete and S4 missing builds s4_triples
+    alone, with no Python node: the page frame is never computed."""
+    from jionlp_spark.plans.pipeline import run_pipeline
+    from jionlp_spark.sources.pages import generate_pages
+
+    pages = generate_pages(spark, 20, num_partitions=2)
+    out = str(tmp_path / 'kg')
+    run_pipeline(spark, pages, out_dir=out, input_fingerprint='guard')
+    shutil.rmtree(os.path.join(out, 's4_triples'))
+    nodes = _spy_stage_builds(monkeypatch)
+    run_pipeline(spark, pages, out_dir=out, input_fingerprint='guard')
+    assert nodes == {'s4_triples': []}, nodes
