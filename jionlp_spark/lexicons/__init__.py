@@ -27,15 +27,17 @@ _DATA_DIR = os.path.join(os.path.dirname(__file__), 'data')
 
 def _dict_dir(dict_dir: str | None) -> str | None:
     """The full dictionary directory to load from, or None for the vendored
-    subsets.  ``JIONLP_SPARK_DICT_DIR`` naming a missing directory raises:
-    it is deployment configuration, so a typo must not silently swap in
-    the subsets."""
-    env = os.environ.get('JIONLP_SPARK_DICT_DIR')
-    if not dict_dir and env and not os.path.isdir(env):
-        raise FileNotFoundError(
-            f'JIONLP_SPARK_DICT_DIR names a missing directory: {env}')
-    d = dict_dir or env
-    return d if d and os.path.isdir(d) else None
+    subsets.  A ``dict_dir=`` argument (the CLI's ``--dict-dir``) or, without
+    one, ``JIONLP_SPARK_DICT_DIR`` naming a missing directory raises: it is
+    configuration, so a typo must not silently swap in the subsets."""
+    if dict_dir:
+        source, d = 'dict_dir', dict_dir
+    else:
+        source, d = 'JIONLP_SPARK_DICT_DIR', os.environ.get(
+            'JIONLP_SPARK_DICT_DIR')
+    if d and not os.path.isdir(d):
+        raise FileNotFoundError(f'{source} names a missing directory: {d}')
+    return d or None
 
 
 # ---------------------------------------------------------------------------

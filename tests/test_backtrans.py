@@ -1,6 +1,8 @@
 """Back-translation orchestration parity vs the reference (network
 clients stubbed with the same deterministic fake on both sides)."""
 
+import importlib
+
 import pytest
 
 TEXT = '用户可选择是否愿意多等外卖员五分钟，你愿意多等这五分钟吗？'
@@ -12,30 +14,34 @@ def fake_api():
     return DeterministicFakeApi('a')
 
 
-def test_iter_api_parity(jio, fake_api):
+def _ref_bt(jio):
+    return importlib.import_module(
+        'jionlp.textaug.back_translation.back_translation').BackTranslation
+
+
+def test_iter_api_parity(reference, fake_api):
     """Per-api language round-trip loop — exact list equality against the
     reference instance method driving the SAME fake client."""
-    from jionlp.textaug.back_translation.back_translation import \
-        BackTranslation as RefBT
-
     from jionlp_spark.kernels.backtrans import iter_api_by_language
-    ref = RefBT(mt_apis=[])
-    assert ref.iter_api_by_language(TEXT, fake_api) == \
-        iter_api_by_language(TEXT, fake_api)
+    reference.check(
+        'iter_api_by_language', [TEXT],
+        ref=lambda jio, t: _ref_bt(jio)(mt_apis=[]).iter_api_by_language(
+            t, fake_api),
+        ours=lambda t: iter_api_by_language(t, fake_api))
 
 
-def test_filter_parity(jio):
+def test_filter_parity(reference):
     """filter_results membership parity (the reference iterates a hash
     set — order nondeterministic — so compare as sets; our port sorts)."""
-    from jionlp.textaug.back_translation.back_translation import \
-        BackTranslation as RefBT
-
     from jionlp_spark.kernels.backtrans import filter_back_translations
     results = ['短', TEXT + 'x', TEXT + 'x', '',
                TEXT * 4, TEXT[:len(TEXT) // 2]]
-    ref = RefBT.filter_results(TEXT, list(results))
+    reference.check(
+        'filter_results', [results],
+        ref=lambda jio, r: sorted(set(
+            _ref_bt(jio).filter_results(TEXT, list(r)))),
+        ours=lambda r: sorted(set(filter_back_translations(TEXT, list(r)))))
     got = filter_back_translations(TEXT, list(results))
-    assert set(ref) == set(got)
     assert got == sorted(got)
 
 
@@ -75,8 +81,6 @@ def test_api_failure_swallowed():
 def test_query_literals():
     """Pin the textaug_backtrans oracle literals to the kernel (two fake
     clients 'a'/'b', same as the operator default)."""
-    import sys
-    sys.path.insert(0, '/root/repo')
     import __spark_entry__ as entry
     from jionlp_spark.kernels.backtrans import (BackTranslation,
                                                 DeterministicFakeApi)

@@ -5,15 +5,21 @@ TEXTS = ['メトロ', '中文字符', 'hello world', '¡Ωmega™', 'a', '',
          'русский', '😀 emoji', '\x00control\x07', 'ĠħŃ']
 
 
-def test_byte_codec_parity(jio):
+def test_byte_codec_parity(reference):
     from jionlp_spark.kernels.bpe import byte_level_decode, byte_level_encode
-    for t in TEXTS:
-        enc = byte_level_encode(t)
-        assert enc == jio.bpe.byte_level_bpe.encode(t), t
-        assert byte_level_decode(enc) == jio.bpe.byte_level_bpe.decode(enc)
+    reference.check(
+        'encode', TEXTS,
+        ref=lambda jio, t: jio.bpe.byte_level_bpe.encode(t),
+        ours=byte_level_encode)
+    encoded = [byte_level_encode(t) for t in TEXTS]
+    reference.check(
+        'decode', encoded + ['ã'],
+        ref=lambda jio, e: jio.bpe.byte_level_bpe.decode(e),
+        ours=byte_level_decode)
+    for t, enc in zip(TEXTS, encoded):
         assert byte_level_decode(enc) == t, t
     # undecodable input → U+FFFD per position (encoder_decoder.py:119-121)
-    assert byte_level_decode('ã') == jio.bpe.byte_level_bpe.decode('ã') == '�'
+    assert byte_level_decode('ã') == '�'
 
 
 def test_bpe_train_hand_computed(spark):

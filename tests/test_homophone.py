@@ -36,7 +36,7 @@ def mine():
 
 
 @pytest.mark.skipif(not os.path.isdir(REF_DICTS),
-                    reason='full dictionaries unavailable')
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_homophone_parity_vs_reference(jio, mine):
     from jionlp.textaug.homophone_substitution import HomophoneSubstitution \
         as RefHomophone
@@ -108,7 +108,7 @@ def test_oov_char_fallback(mine):
 
 
 @pytest.mark.skipif(not os.path.isdir(REF_DICTS),
-                    reason='full dictionaries unavailable')
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_homophone_fuzz_parity(jio, mine):
     """100 random Chinese texts × random seeds — byte-identical outputs
     vs the reference with segmentation shared (cut stubbed to FMM)."""

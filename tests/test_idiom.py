@@ -1,6 +1,8 @@
 """Idiom-solitaire parity vs the live reference: same seeded RNG streams,
 same chaining state, same flag combinations."""
 
+import hashlib
+import os
 import random
 
 import numpy as np
@@ -69,17 +71,26 @@ def test_idiom_solitaire_parity(jio):
     assert r3 == g3
 
 
-def test_idiom_vendored_equals_full():
+def _idioms_digest(entries):
+    """Digest of an idiom table as list-of-dicts equality sees it."""
+    return hashlib.sha256(repr([sorted(e.items()) for e in entries])
+                          .encode()).hexdigest()
+
+
+def test_idiom_vendored_equals_full(reference):
+    """The vendored idiom table is the full reference table: live, against
+    the reference dictionary; in golden mode, against the digest of the
+    full table certified when this equality held with it present."""
     from jionlp_spark import lexicons
-    vend = lexicons.load_idioms()
-    full = lexicons.load_idioms('/root/reference/jionlp/dictionary')
-    assert vend == full
+    reference.check(
+        'load_idioms digest', ['idiom.txt'],
+        ref=lambda jio, _: _idioms_digest(lexicons.load_idioms(
+            os.path.join(os.path.dirname(jio.__file__), 'dictionary'))),
+        ours=lambda _: _idioms_digest(lexicons.load_idioms()))
 
 
 def test_idiom_query_literals(jio):
     """Anchor the idiom_next oracle literals to the reference RNG stream."""
-    import sys
-    sys.path.insert(0, '/root/repo')
     import __spark_entry__ as entry
     ref = _fresh_ref(jio)
     ref('见异思迁')  # prepare

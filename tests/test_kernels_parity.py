@@ -17,55 +17,53 @@ def _spans(mentions):
     return [(m['text'], tuple(m['offset'])) for m in mentions]
 
 
-def test_clean_text_byte_identical(jio, sample_texts):
-    for t in sample_texts:
-        assert jio.clean_text(t) == clean_text(t), repr(t)
+def test_clean_text_byte_identical(reference, sample_texts):
+    reference.check('clean_text', sample_texts,
+                    ref=lambda jio, t: jio.clean_text(t), ours=clean_text)
 
 
-def test_clean_text_normalize_only_byte_identical(jio, sample_texts):
+def test_clean_text_normalize_only_byte_identical(reference, sample_texts):
     """The stage-2 extract_text variant must also match the reference with
     the same flags."""
     cleaner = get_cleaner()
-    for t in sample_texts:
-        ref = jio.clean_text(t, remove_parentheses=False, remove_url=False,
-                             remove_email=False, remove_phone_number=False)
-        got = cleaner.clean_text(t, remove_parentheses=False,
-                                 remove_url=False, remove_email=False,
-                                 remove_phone_number=False)
-        assert ref == got, repr(t)
+    flags = dict(remove_parentheses=False, remove_url=False,
+                 remove_email=False, remove_phone_number=False)
+    reference.check('clean_text', sample_texts,
+                    ref=lambda jio, t: jio.clean_text(t, **flags),
+                    ours=lambda t: cleaner.clean_text(t, **flags))
 
 
-def test_extractors_span_identical(jio, sample_texts):
+_EXTRACTORS = [  # (reference function, our method), all span-compared
+    ('extract_phone_number', 'extract_phone_number'),
+    ('extract_email', 'extract_email'),
+    ('extract_url', 'extract_url'),
+    ('extract_id_card', 'extract_id_card'),
+    ('extract_ip_address', 'extract_ip_address'),
+    ('extract_qq', 'extract_qq'),
+    ('extract_wechat_id', 'extract_wechat_id'),
+    ('extract_motor_vehicle_licence_plate', 'extract_licence_plate'),
+]
+
+
+def test_extractors_span_identical(reference, sample_texts):
     ex = get_extractor()
-    for t in sample_texts:
-        assert _spans(jio.extract_phone_number(t, detail=True)) == \
-            _spans(ex.extract_phone_number(t)), repr(t)
-        assert _spans(jio.extract_email(t, detail=True)) == \
-            _spans(ex.extract_email(t)), repr(t)
-        assert _spans(jio.extract_url(t, detail=True)) == \
-            _spans(ex.extract_url(t)), repr(t)
-        assert _spans(jio.extract_id_card(t, detail=True)) == \
-            _spans(ex.extract_id_card(t)), repr(t)
-        assert _spans(jio.extract_ip_address(t, detail=True)) == \
-            _spans(ex.extract_ip_address(t)), repr(t)
-        assert _spans(jio.extract_qq(t, detail=True)) == \
-            _spans(ex.extract_qq(t)), repr(t)
-        assert _spans(jio.extract_wechat_id(t, detail=True)) == \
-            _spans(ex.extract_wechat_id(t)), repr(t)
-        assert _spans(jio.extract_motor_vehicle_licence_plate(
-            t, detail=True)) == _spans(ex.extract_licence_plate(t)), repr(t)
+    for ref_fn, our_fn in _EXTRACTORS:
+        reference.check(
+            ref_fn, sample_texts,
+            ref=lambda jio, t: _spans(getattr(jio, ref_fn)(t, detail=True)),
+            ours=lambda t: _spans(getattr(ex, our_fn)(t)))
 
 
-def test_clean_html_identical(jio, sample_texts):
+def test_clean_html_identical(reference):
     from jionlp_spark.sources.pages import _Pools, _make_row
     pools = _Pools()
     htmls = [_make_row(i, 42, pools)[2].decode('utf-8') for i in range(100)]
-    for h in htmls:
-        assert jio.clean_html(h) == clean_html(h)
+    reference.check('clean_html', htmls,
+                    ref=lambda jio, h: jio.clean_html(h), ours=clean_html)
 
 
 @pytest.mark.skipif(not os.path.isdir(REF_DICTS),
-                    reason='full dictionaries unavailable')
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_phone_location_parity(jio, sample_texts):
     from jionlp_spark import lexicons
     from jionlp_spark.kernels.phone_loc import PhoneLocator
@@ -94,7 +92,7 @@ def test_phone_location_parity(jio, sample_texts):
 
 
 @pytest.mark.skipif(not os.path.isdir(REF_DICTS),
-                    reason='full dictionaries unavailable')
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_id_card_parity(jio, sample_texts):
     from jionlp_spark import lexicons
     from jionlp_spark.kernels.idcard import IdCardParser
@@ -138,6 +136,8 @@ def test_vendored_lexicons_self_consistent():
     assert phones > 50 and ids > 20
 
 
+@pytest.mark.skipif(not os.path.isdir(REF_DICTS),
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_phone_loc_unknown_prefix(jio):
     """Deliberate divergence (documented in kernels/phone_loc.py): the
     reference crashes on a cell prefix missing from its dictionary
@@ -163,7 +163,7 @@ def test_phone_loc_unknown_prefix(jio):
 
 
 @pytest.mark.skipif(not os.path.isdir(REF_DICTS),
-                    reason='full dictionaries unavailable')
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_env_full_dict_swap_in(monkeypatch):
     """JIONLP_SPARK_DICT_DIR swaps every loader to the full JioNLP
     dictionary tree (the production path): rare chars resolve, town/village
@@ -188,11 +188,17 @@ def test_env_full_dict_swap_in(monkeypatch):
 
 
 def test_missing_env_dict_dir_raises(monkeypatch, tmp_path):
-    """JIONLP_SPARK_DICT_DIR naming a missing directory fails loudly,
-    naming the path, instead of falling back to the vendored subsets."""
+    """JIONLP_SPARK_DICT_DIR, or an explicit dict_dir= argument, naming a
+    missing directory fails loudly, naming the path, instead of falling
+    back to the vendored subsets."""
     from jionlp_spark import lexicons
+    loaders = (lexicons.load_char_info, lexicons.load_phone_location)
+    monkeypatch.delenv('JIONLP_SPARK_DICT_DIR', raising=False)
+    for load in loaders:
+        with pytest.raises(FileNotFoundError, match='no-such-arg-dicts'):
+            load(str(tmp_path / 'no-such-arg-dicts'))
     monkeypatch.setenv('JIONLP_SPARK_DICT_DIR',
                        str(tmp_path / 'no-such-dicts'))
-    for load in (lexicons.load_char_info, lexicons.load_phone_location):
+    for load in loaders:
         with pytest.raises(FileNotFoundError, match='no-such-dicts'):
             load()

@@ -49,6 +49,8 @@ TS_CASES = [
     '憂鬱的臺灣烏龜尋釁滋事', '',
 ]
 
+REF_RAISES = ('raises', 'AssertionError')
+
 SENT_CASES = [
     '央视新闻消息，近日，特朗普老友皮尔斯·摩根喊话特朗普：“美国人的生命比你的选举更重要。'
     '如果你继续以自己为中心，继续玩弄愚蠢的政治……如果你意识不到自己的错误，你就做不对”。'
@@ -58,58 +60,78 @@ SENT_CASES = [
 ]
 
 
-def test_money_parser_parity(jio, sample_texts):
+def test_money_parser_parity(reference):
     from jionlp_spark.kernels.money import MoneyParseError, get_money_parser
     mp = get_money_parser()
-    for c in MONEY_CASES:
+
+    def ref(jio, c):
         try:
-            ref = jio.parse_money(c)
+            return jio.parse_money(c)
         except Exception:
-            ref = ('ERR',)
+            return ('ERR',)
+
+    def ours(c):
         try:
-            got = mp.parse(c)
+            return mp.parse(c)
         except MoneyParseError:
-            got = ('ERR',)
-        assert ref == got, (c, ref, got)
+            return ('ERR',)
+
+    reference.check('parse_money', MONEY_CASES, ref=ref, ours=ours)
 
 
-def test_money_extractor_parity(jio, sample_texts):
+def _money_spans(mentions):
+    return [(m['text'], tuple(m['offset']), str(m.get('detail')))
+            for m in mentions]
+
+
+def test_money_extractor_parity(reference, sample_texts):
     from jionlp_spark.kernels.money_extract import get_money_extractor
     me = get_money_extractor()
-    for t in MONEY_TEXTS + sample_texts[:120]:
-        ref = jio.ner.extract_money(t, with_parsing=True)
-        got = me.extract(t, with_parsing=True)
-        ra = [(m['text'], tuple(m['offset']), str(m.get('detail')))
-              for m in ref]
-        rb = [(m['text'], tuple(m['offset']), str(m.get('detail')))
-              for m in got]
-        assert ra == rb, (t, ra, rb)
+    reference.check(
+        'extract_money', MONEY_TEXTS + sample_texts[:120],
+        ref=lambda jio, t: _money_spans(
+            jio.ner.extract_money(t, with_parsing=True)),
+        ours=lambda t: _money_spans(me.extract(t, with_parsing=True)))
 
 
-def test_tsconv_parity(jio):
+def test_tsconv_parity(reference):
     from jionlp_spark import lexicons
     from jionlp_spark.kernels.tsconv import TSConverter
     ts = TSConverter(**lexicons.load_ts_tables())
-    for t in TS_CASES:
-        for mode in ('char', 'word'):
-            for fn in ('tra2sim', 'sim2tra'):
-                try:
-                    ref = getattr(jio, fn)(t, mode=mode)
-                except AssertionError:
-                    continue  # reference crashes on tra input to sim2tra
-                assert ref == getattr(ts, fn)(t, mode=mode), (fn, mode, t)
+    cases = [(t, mode, fn) for t in TS_CASES for mode in ('char', 'word')
+             for fn in ('tra2sim', 'sim2tra')]
+
+    def ours(case):
+        t, mode, fn = case
+        return getattr(ts, fn)(t, mode=mode)
+
+    def ref(jio, case):
+        t, mode, fn = case
+        try:
+            return getattr(jio, fn)(t, mode=mode)
+        except AssertionError:
+            return REF_RAISES  # reference crashes on tra input to sim2tra
+
+    # A golden captured from the certified tree holds its kernel output for
+    # every case (which of them the reference crashed on was not recorded),
+    # so golden mode checks those cases against that tree as well.
+    want = reference.outputs('ts_conversion', cases, ref=ref, ours=ours)
+    for case, w in zip(cases, want):
+        if w != REF_RAISES:
+            assert ours(case) == w, (case, w)
 
 
-def test_split_sentence_parity(jio):
+def test_split_sentence_parity(reference):
     from jionlp_spark.kernels.sentence import split_sentence
-    for t in SENT_CASES:
-        for cr in ('coarse', 'fine'):
-            assert jio.split_sentence(t, criterion=cr) == \
-                split_sentence(t, criterion=cr), (t, cr)
+    reference.check(
+        'split_sentence',
+        [(t, cr) for t in SENT_CASES for cr in ('coarse', 'fine')],
+        ref=lambda jio, c: jio.split_sentence(c[0], criterion=c[1]),
+        ours=lambda c: split_sentence(c[0], criterion=c[1]))
 
 
 @pytest.mark.skipif(not os.path.isdir(REF_DICTS),
-                    reason='full dictionaries unavailable')
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_location_parser_parity(jio):
     from jionlp_spark import lexicons
     from jionlp_spark.kernels.location import LocationParser
@@ -122,7 +144,11 @@ def test_location_parser_parity(jio):
             assert ref == got, (t, c2n, ref, got)
 
 
-def test_location_parser_vendored_subset(jio):
+def _region(res):
+    return (res['province'], res['city'], res['county'])
+
+
+def test_location_parser_vendored_subset(reference):
     """The vendored subset must agree with the reference on all fixture
     locations it covers."""
     from jionlp_spark import lexicons
@@ -132,15 +158,13 @@ def test_location_parser_vendored_subset(jio):
     covered = ['湖北省襄樊市小水街222号', '上海市嘉定区太原路99号',
                '贵州省贵阳市云岩区中华北路', '北京市朝阳区发布新政策',
                '广东省揭阳市榕城区', '湖南湘潭市湘潭县城塘社区']
-    for t in covered:
-        ref = jio.parse_location(t)
-        got = lp.parse(t)
-        assert (ref['province'], ref['city'], ref['county']) == \
-            (got['province'], got['city'], got['county']), (t, ref, got)
+    reference.check('parse_location', covered,
+                    ref=lambda jio, t: _region(jio.parse_location(t)),
+                    ours=lambda t: _region(lp.parse(t)))
 
 
 @pytest.mark.skipif(not os.path.isdir(REF_DICTS),
-                    reason='full dictionaries unavailable')
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_location_town_village_parity(jio):
     """town_village=True five-level parsing vs the reference (full dicts)."""
     from jionlp_spark import lexicons
@@ -165,7 +189,11 @@ def test_location_town_village_parity(jio):
     assert 'town' not in no_tv and 'village' not in no_tv
 
 
-def test_location_town_village_vendored(jio):
+def _town_village(res):
+    return (res['town'], res['village'])
+
+
+def test_location_town_village_vendored(reference):
     """The vendored town/village slice must agree with the reference on
     fixture addresses inside the vendored counties."""
     from jionlp_spark import lexicons
@@ -173,11 +201,10 @@ def test_location_town_village_vendored(jio):
     lp = LocationParser(lexicons.load_admin_divisions(),
                         lexicons.load_location_changes(),
                         lexicons.load_town_villages())
-    for t in ['上海市嘉定区华亭镇华亭村88号',
-              '上海市嘉定区南翔镇东园社区',
-              '北京市海淀区中关村街道']:
-        ref = jio.parse_location(t, town_village=True)
-        got = lp.parse(t, town_village=True)
-        assert (ref['town'], ref['village']) == (got['town'],
-                                                 got['village']), (t, ref,
-                                                                   got)
+    reference.check(
+        'parse_location', ['上海市嘉定区华亭镇华亭村88号',
+                           '上海市嘉定区南翔镇东园社区',
+                           '北京市海淀区中关村街道'],
+        ref=lambda jio, t: _town_village(
+            jio.parse_location(t, town_village=True)),
+        ours=lambda t: _town_village(lp.parse(t, town_village=True)))

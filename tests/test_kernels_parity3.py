@@ -15,35 +15,40 @@ EXTRA = [
 ]
 
 
-def test_remove_replace_checker_parity(jio, sample_texts):
+# (function name, keyword arguments): the same on both sides
+_FUNCS = [
+    ('remove_id_card', {}),
+    ('remove_ip_address', {}),
+    ('remove_qq', {}),
+    ('replace_email', {}),
+    ('replace_id_card', {}),
+    ('replace_ip_address', {}),
+    ('replace_phone_number', {}),
+    ('replace_qq', {}),
+    ('replace_url', {}),
+    ('replace_chinese', {}),
+    ('extract_parentheses', {}),
+    ('extract_parentheses', {'detail': True}),
+    ('check_any_chinese_char', {}),
+    ('check_all_chinese_char', {}),
+    ('check_any_arabic_num', {}),
+    ('check_all_arabic_num', {}),
+]
+
+
+def test_remove_replace_checker_parity(reference, sample_texts):
     from jionlp_spark.kernels.extractors import get_extractor
     ex = get_extractor()
-    pairs = [
-        (lambda t: jio.remove_id_card(t), ex.remove_id_card),
-        (lambda t: jio.remove_ip_address(t), ex.remove_ip_address),
-        (lambda t: jio.remove_qq(t), ex.remove_qq),
-        (lambda t: jio.replace_email(t), ex.replace_email),
-        (lambda t: jio.replace_id_card(t), ex.replace_id_card),
-        (lambda t: jio.replace_ip_address(t), ex.replace_ip_address),
-        (lambda t: jio.replace_phone_number(t), ex.replace_phone_number),
-        (lambda t: jio.replace_qq(t), ex.replace_qq),
-        (lambda t: jio.replace_url(t), ex.replace_url),
-        (lambda t: jio.replace_chinese(t), ex.replace_chinese),
-        (lambda t: jio.extract_parentheses(t), ex.extract_parentheses),
-        (lambda t: jio.extract_parentheses(t, detail=True),
-         lambda t: ex.extract_parentheses(t, detail=True)),
-        (lambda t: jio.check_any_chinese_char(t), ex.check_any_chinese_char),
-        (lambda t: jio.check_all_chinese_char(t), ex.check_all_chinese_char),
-        (lambda t: jio.check_any_arabic_num(t), ex.check_any_arabic_num),
-        (lambda t: jio.check_all_arabic_num(t), ex.check_all_arabic_num),
-    ]
-    for t in sample_texts[:100] + EXTRA:
-        for rf, gf in pairs:
-            assert rf(t) == gf(t), (rf, t)
+    for fn, kw in _FUNCS:
+        reference.check(
+            fn + ''.join(f',{k}={v}' for k, v in kw.items()),
+            sample_texts[:100] + EXTRA,
+            ref=lambda jio, t: getattr(jio, fn)(t, **kw),
+            ours=lambda t: getattr(ex, fn)(t, **kw))
 
 
 @pytest.mark.skipif(not os.path.isdir(REF_DICTS),
-                    reason='full dictionaries unavailable')
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_stopword_filter_parity(jio):
     from jionlp_spark import lexicons
     from jionlp_spark.kernels.stopwords import StopwordFilter

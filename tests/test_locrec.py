@@ -33,7 +33,7 @@ def mine_full():
 
 
 @pytest.mark.skipif(not os.path.isdir(REF_DICTS),
-                    reason='full dictionaries unavailable')
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_recognizer_parity_vs_reference(jio, mine_full):
     from jionlp.gadget.location_recognizer import LocationRecognizer \
         as RefRec
@@ -69,8 +69,6 @@ def test_recognizer_vendored_smoke():
 def test_query_literals():
     """Pin the kg_recognize_location_full oracle literals to the kernel
     over the vendored maps (the operator's runtime configuration)."""
-    import sys
-    sys.path.insert(0, '/root/repo')
     import __spark_entry__ as entry
     from jionlp_spark import lexicons
     from jionlp_spark.kernels.locrec import (LocationRecognizer,
@@ -92,7 +90,7 @@ def test_query_literals():
 
 
 @pytest.mark.skipif(not os.path.isdir(REF_DICTS),
-                    reason='full dictionaries unavailable')
+                    reason=f'reference dictionaries not found at {REF_DICTS}')
 def test_recognizer_fuzz_parity(jio, mine_full):
     """300 random word lists from a mixed pool (ambiguous aliases,
     直辖市, world cities that shadow china names, unknowns) — structure

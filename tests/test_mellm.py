@@ -25,36 +25,53 @@ def _ref_mellm(jio, n, m):
     return MELLM(names, [None] * n, questions)
 
 
+def _arrays(*arrays):
+    """Float-exact projection: lists of Python floats compare (and round-
+    trip through repr) exactly as np.array_equal compares the arrays."""
+    return tuple(np.asarray(a).tolist() for a in arrays)
+
+
 @pytest.mark.parametrize('seed', [0, 1, 2])
-def test_run_whole_parity(jio, seed):
+def test_run_whole_parity(reference, seed):
     from jionlp_spark.kernels.mellm import run_whole
     n, m = 4, 6
-    g = _synthetic_matrix(n, m, seed)
-    errs = np.zeros(n)
 
-    ref = _ref_mellm(jio, n, m)
-    ref.run_whole(g.copy(), errs.copy())
-    got = run_whole(g.copy(), errs.copy())
-    assert np.array_equal(ref.total_score, got['total_score'])
-    assert np.array_equal(ref.weight_matrix, got['weight'])
-    assert np.array_equal(ref.llm_average_scores, got['average_scores'])
-    assert np.array_equal(ref.llm_variance, got['variance'])
+    def ref(jio, seed):
+        g = _synthetic_matrix(n, m, seed)
+        r = _ref_mellm(jio, n, m)
+        r.run_whole(g, np.zeros(n))
+        return _arrays(r.total_score, r.weight_matrix, r.llm_average_scores,
+                       r.llm_variance)
+
+    def ours(seed):
+        got = run_whole(_synthetic_matrix(n, m, seed), np.zeros(n))
+        return _arrays(got['total_score'], got['weight'],
+                       got['average_scores'], got['variance'])
+
+    reference.check('run_whole', [seed], ref=ref, ours=ours)
 
 
 @pytest.mark.parametrize('seed', [0, 3])
-def test_run_singular_parity(jio, seed):
+def test_run_singular_parity(reference, seed):
     from jionlp_spark.kernels.mellm import run_singular
     n, m = 4, 5
-    g = _synthetic_matrix(n, m, seed)
-    errs = np.zeros(n)
 
-    ref = _ref_mellm(jio, n, m)
-    ref.max_epoch = 5  # singular mode never converges (reference :441
-    ref.run_singular(g.copy(), errs.copy())  # quirk) — cap the epochs
-    got = run_singular(g.copy(), errs.copy(), max_epoch=5)
-    assert np.array_equal(ref.total_score, got['total_score'])
-    assert np.array_equal(ref.weight_matrix, got['weight'])
-    assert np.array_equal(ref.llm_average_scores, got['average_scores'])
+    def ref(jio, seed):
+        g = _synthetic_matrix(n, m, seed)
+        r = _ref_mellm(jio, n, m)
+        r.max_epoch = 5  # singular mode never converges (reference :441
+        r.run_singular(g, np.zeros(n))  # quirk) — cap the epochs
+        return _arrays(r.total_score, r.weight_matrix, r.llm_average_scores)
+
+    def ours(seed):
+        got = run_singular(_synthetic_matrix(n, m, seed), np.zeros(n),
+                           max_epoch=5)
+        return _arrays(got['total_score'], got['weight'],
+                       got['average_scores'])
+
+    reference.check('run_singular', [seed], ref=ref, ours=ours)
+    got = run_singular(_synthetic_matrix(n, m, seed), np.zeros(n),
+                       max_epoch=5)
     assert got['epochs'] == 6  # max_epoch + 1: the quirk preserved
 
 
@@ -81,8 +98,6 @@ def test_query_literals():
     """Pin the mellm_scores oracle literals to the kernel: rebuild the
     deterministic grade matrix from the query's own row generator and
     re-run the EM without Spark."""
-    import sys
-    sys.path.insert(0, '/root/repo')
     import __spark_entry__ as entry
     from jionlp_spark.kernels.mellm import (normalize_grading_score,
                                             run_whole)

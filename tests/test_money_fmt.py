@@ -3,7 +3,7 @@
 import random
 
 
-def test_money_num2char_parity(jio):
+def test_money_num2char_parity(reference):
     from jionlp_spark.kernels.money_fmt import money_num2char
     random.seed(3)
     cases = [120402810.03, '38,009.0', 0, 10, 1000000, '999.99',
@@ -11,10 +11,10 @@ def test_money_num2char_parity(jio):
     cases += [random.randint(0, 10 ** random.randint(1, 11))
               for _ in range(100)]
     cases += [round(random.uniform(0, 10 ** 8), 2) for _ in range(60)]
-    for n in cases:
-        for st in ('sim', 'tra'):
-            assert jio.money_num2char(n, sim_or_tra=st) == \
-                money_num2char(n, sim_or_tra=st), (n, st)
+    reference.check(
+        'money_num2char', [(n, st) for n in cases for st in ('sim', 'tra')],
+        ref=lambda jio, c: jio.money_num2char(c[0], sim_or_tra=c[1]),
+        ours=lambda c: money_num2char(c[0], sim_or_tra=c[1]))
 
 
 def test_money_round_trip():

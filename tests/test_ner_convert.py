@@ -38,26 +38,30 @@ def _fixtures():
     return cases
 
 
-def test_entity2tag_tag2entity_parity(jio):
+def test_entity2tag_tag2entity_parity(reference):
     from jionlp_spark.kernels.ner_convert import entity2tag, tag2entity
-    for toks, ents in _fixtures():
-        ref_tags = jio.ner.entity2tag(toks, ents)
-        got_tags = entity2tag(toks, ents)
-        assert ref_tags == got_tags, (toks, ents)
-        assert jio.ner.tag2entity(toks, got_tags) == \
-            tag2entity(toks, got_tags), (toks, got_tags)
+    fixtures = _fixtures()
+    reference.check('entity2tag', fixtures,
+                    ref=lambda jio, f: jio.ner.entity2tag(*f),
+                    ours=lambda f: entity2tag(*f))
+    tagged = [(toks, entity2tag(toks, ents)) for toks, ents in fixtures]
+    reference.check('tag2entity', tagged,
+                    ref=lambda jio, f: jio.ner.tag2entity(*f),
+                    ours=lambda f: tag2entity(*f))
 
 
-def test_tag2entity_malformed_parity(jio):
+def test_tag2entity_malformed_parity(reference):
     from jionlp_spark.kernels.ner_convert import tag2entity
     toks = list('一二三四五')
-    for tags in itertools.product(
-            ['O', 'B-A', 'I-A', 'E-A', 'S-A'], repeat=5):
-        assert jio.ner.tag2entity(toks, list(tags)) == \
-            tag2entity(toks, list(tags)), tags
+    reference.check(
+        'tag2entity',
+        map(list, itertools.product(['O', 'B-A', 'I-A', 'E-A', 'S-A'],
+                                    repeat=5)),
+        ref=lambda jio, tags: jio.ner.tag2entity(toks, tags),
+        ours=lambda tags: tag2entity(toks, tags))
 
 
-def test_char2word_word2char_parity(jio):
+def test_char2word_word2char_parity(reference):
     from jionlp_spark.kernels.ner_convert import char2word, word2char
     char_ents = [{'text': '胡静静', 'offset': [0, 3], 'type': 'Person'},
                  {'text': '江西红叶建筑公司', 'offset': [5, 13],
@@ -66,8 +70,12 @@ def test_char2word_word2char_parity(jio):
                  {'text': '欢江', 'offset': [4, 6], 'type': 'X'}]
     words = ['胡静静', '喜欢', '江西', '红叶', '建筑', '公司']
     got = char2word(char_ents, words)
-    assert got == jio.ner.char2word(char_ents, words)
-    assert word2char(got, words) == jio.ner.word2char(got, words)
+    reference.check('char2word', [char_ents],
+                    ref=lambda jio, ents: jio.ner.char2word(ents, words),
+                    ours=lambda ents: char2word(ents, words))
+    reference.check('word2char', [got],
+                    ref=lambda jio, ents: jio.ner.word2char(ents, words),
+                    ours=lambda ents: word2char(ents, words))
     # round trip for non-conflicting entities
     assert [e['text'] for e in word2char(got, words)] == \
         ['胡静静', '江西红叶建筑公司']
@@ -81,7 +89,15 @@ def test_entity_f1():
     assert m['tp'] == 1 and m['precision'] == 0.5 and m['recall'] == 0.5
 
 
-def test_cws_converters_parity(jio):
+def _raises(fn, *args):
+    try:
+        fn(*args)
+    except Exception:
+        return True
+    return False
+
+
+def test_cws_converters_parity(reference):
     from jionlp_spark.kernels.ner_convert import cws_tag2word, cws_word2tag
     word_lists = [
         ['他', '指出', '：', '近', '几', '年', '来', '，', '足球场',
@@ -90,27 +106,29 @@ def test_cws_converters_parity(jio):
     ]
     # the reference word2tag crashes on numpy>=1.24 (np.unicode removed,
     # cws_data_converter.py:56); our port implements the documented
-    # semantics and must round-trip through the reference's tag2word
-    import pytest
-    with pytest.raises(Exception):
-        jio.cws.word2tag(word_lists[0])
+    # semantics and must round-trip through the reference's tag2word.
+    # The certified tree asserted that crash, so its golden is True.
+    assert reference.outputs(
+        'word2tag raises', [word_lists[0]],
+        ref=lambda jio, wl: _raises(jio.cws.word2tag, wl),
+        ours=lambda wl: True) == [True]
+    cases = []
     for wl in word_lists:
         chars, tags = cws_word2tag(wl)
         assert chars == ''.join(wl)
-        assert cws_tag2word(chars, tags) == \
-            jio.cws.tag2word(chars, tags) == wl
-
+        assert cws_tag2word(chars, tags) == wl
+        cases.append((chars, tags))
     # malformed BI sequences: replay the reference exactly
-    for tags in itertools.product('BI', repeat=6):
-        chars = '一二三四五六'
-        assert cws_tag2word(chars, list(tags)) == \
-            jio.cws.tag2word(chars, list(tags)), tags
+    cases += [('一二三四五六', list(tags))
+              for tags in itertools.product('BI', repeat=6)]
     # unknown tag → early return
-    assert cws_tag2word('一二三', ['B', 'X', 'B']) == \
-        jio.cws.tag2word('一二三', ['B', 'X', 'B'])
+    cases.append(('一二三', ['B', 'X', 'B']))
+    reference.check('tag2word', cases,
+                    ref=lambda jio, c: jio.cws.tag2word(*c),
+                    ours=lambda c: cws_tag2word(*c))
 
 
-def test_entity_compare_reference_fixture(jio):
+def test_entity_compare_reference_fixture(reference):
     from jionlp_spark.kernels.ner_convert import entity_compare
     text = '张三在西藏拉萨游玩！之后去新疆。'
     labeled = [
@@ -121,13 +139,15 @@ def test_entity_compare_reference_fixture(jio):
         {'text': '张三在', 'offset': [2, 15], 'type': 'Person'},
         {'text': '西藏拉萨', 'offset': [3, 7], 'type': 'Person'},
         {'text': '。', 'offset': [15, 16], 'type': 'Location'}]
-    for pad in (1, 3, 10):
-        assert entity_compare(text, labeled, predicted, context_pad=pad) \
-            == jio.ner.entity_compare(text, labeled, predicted,
-                                      context_pad=pad)
+    reference.check(
+        'entity_compare', [1, 3, 10],
+        ref=lambda jio, pad: jio.ner.entity_compare(text, labeled, predicted,
+                                                    context_pad=pad),
+        ours=lambda pad: entity_compare(text, labeled, predicted,
+                                        context_pad=pad))
 
 
-def test_entity_compare_fuzz_parity(jio):
+def test_entity_compare_fuzz_parity(reference):
     """Seeded random span sets through both implementations — pins the
     quirk branches (missing-after-all-preds never reported; leading
     spurious pred paired with the first labeled entity)."""
@@ -145,8 +165,9 @@ def test_entity_compare_fuzz_parity(jio):
                         'type': rng.choice(('A', 'B'))})
         return out
 
-    for _ in range(300):
-        gold, pred = spans(rng.randrange(0, 4)), spans(rng.randrange(0, 4))
-        assert entity_compare(text, gold, pred, context_pad=2) \
-            == jio.ner.entity_compare(text, gold, pred, context_pad=2), \
-            (gold, pred)
+    cases = [(spans(rng.randrange(0, 4)), spans(rng.randrange(0, 4)))
+             for _ in range(300)]
+    reference.check(
+        'entity_compare', cases,
+        ref=lambda jio, c: jio.ner.entity_compare(text, *c, context_pad=2),
+        ours=lambda c: entity_compare(text, *c, context_pad=2))

@@ -1,12 +1,11 @@
 """The norm_* driver queries hardcode expected outputs in their DuckDB
 oracles; this suite anchors every hardcoded literal to the live reference
-(and to our kernels), so the oracle can never drift from JioNLP semantics."""
+(and to our kernels), so the oracle can never drift from JioNLP semantics.
 
-import sys
+Live-only: the literals are checked against the reference alone, so a golden
+would only compare each literal with itself."""
 
-sys.path.insert(0, '/root/repo')
-
-import __spark_entry__ as entry  # noqa: E402
+import __spark_entry__ as entry
 
 
 def test_tra2sim_literals(jio):

@@ -42,8 +42,6 @@ def duck():
 
 def _entry():
     import importlib
-    import sys
-    sys.path.insert(0, '/root/repo')
     return importlib.import_module('__spark_entry__')
 
 

@@ -4,7 +4,7 @@
 import itertools
 
 
-def test_person_name_parity(jio):
+def test_person_name_parity(reference):
     from jionlp_spark.kernels.person import get_person_checker
     ck = get_person_checker()
 
@@ -24,8 +24,7 @@ def test_person_name_parity(jio):
     for a in pool:
         cases.append(a + '晓明')
 
-    checked = 0
-    for c in cases:
-        assert bool(jio.ner.check_person_name(c)) == ck(c), c
-        checked += 1
-    assert checked > 400
+    assert len(cases) > 400
+    reference.check('check_person_name', cases,
+                    ref=lambda jio, c: bool(jio.ner.check_person_name(c)),
+                    ours=ck)

@@ -90,18 +90,21 @@ def test_mention_precision_recall_vs_reference(jio, pipeline_result):
         assert recall >= 0.95, (mtype, recall, expected - got)
 
 
-def test_clean_text_column_byte_identical(jio, pipeline_result):
+def test_clean_text_column_byte_identical(reference, pipeline_result):
     """Per-url byte identity of the redacted clean column vs reference
     clean_html→clean_text on the raw page html."""
     pages, res = pipeline_result
-    raw = {r['url']: bytes(r['html']).decode('utf-8')
-           for r in pages.collect() if r['lang'] == 'zh'}
+    raw = sorted((r['url'], bytes(r['html']).decode('utf-8'))
+                 for r in pages.collect() if r['lang'] == 'zh')
     ours = {r['url']: r['clean'] for r in res['clean'].collect()}
-    assert set(raw) == set(ours)
-    for url, html in raw.items():
-        body, _meta = jio.clean_html(html)
-        ref_clean = jio.clean_text(body, remove_html_tag=False)
-        assert ref_clean == ours[url], url
+    assert {url for url, _html in raw} == set(ours)
+
+    def ref(jio, page):
+        body, _meta = jio.clean_html(page[1])
+        return jio.clean_text(body, remove_html_tag=False)
+
+    reference.check('clean column', raw, ref=ref,
+                    ours=lambda page: ours[page[0]])
 
 
 def _digest(df):

@@ -10,9 +10,9 @@ CASES = ['川A·23047B', '京A12345', '沪AD12345', '粤B·D12345', '津A12345B'
          '川A·2304', '晋蒙A1234', '京A　12345', '粤Z·1234港']
 
 
-def test_plate_parity(jio):
+def test_plate_parity(reference):
     from jionlp_spark.kernels.plate import parse_licence_plate
-    for c in CASES:
-        ref = jio.parse_motor_vehicle_licence_plate(c)
-        got = parse_licence_plate(c)
-        assert ref == got, (c, ref, got)
+    reference.check(
+        'parse_motor_vehicle_licence_plate', CASES,
+        ref=lambda jio, c: jio.parse_motor_vehicle_licence_plate(c),
+        ours=parse_licence_plate)

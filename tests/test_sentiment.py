@@ -1,8 +1,6 @@
 """Sentiment kernel parity vs the live reference (full dictionaries) and
 vendored-subset consistency on the driver-query fixtures."""
 
-import sys
-
 TEXTS = ['14岁女孩坠亡生前遭强奸致孕。',
          '今天天气真好，心情舒畅，非常开心。',
          '这部电影不好看，情节拖沓，令人失望。',
@@ -34,17 +32,24 @@ def test_sentiment_parity_full_dicts(jio):
         assert abs(ref(t) - ours(t)) < 1e-12, t
 
 
-def test_sentiment_vendored_matches_full_on_fixtures(jio):
+def test_sentiment_vendored_matches_full_on_fixtures(reference):
     """The vendored subset must reproduce full-dict scores on the driver
     query fixtures (guaranteed by vendoring every full-dict word that is a
     substring of a fixture sentence)."""
-    sys.path.insert(0, '/root/repo')
     import __spark_entry__ as entry
     from jionlp_spark import lexicons
     from jionlp_spark.kernels.sentiment import SentimentAnalyzer
-    from jionlp.algorithm.sentiment.sentiment_analysis import LexiconSentiment
-    ref = LexiconSentiment()
     vend = SentimentAnalyzer(*lexicons.load_sentiment_lexicons())
-    for t, expect in zip(entry._SENTI_IN, entry._SENTI_OUT):
-        assert round(ref(t), 6) == expect, t
+
+    def ref(jio, t):
+        from jionlp.algorithm.sentiment.sentiment_analysis import \
+            LexiconSentiment
+        return round(float(LexiconSentiment()(t)), 6)
+
+    # the certified tree asserted round(vend(t), 6) == the reference's
+    # rounded score == the query literal, for every fixture sentence
+    want = reference.outputs('LexiconSentiment rounded', entry._SENTI_IN,
+                             ref=ref, ours=lambda t: round(vend(t), 6))
+    for t, w, expect in zip(entry._SENTI_IN, want, entry._SENTI_OUT):
+        assert w == expect, t
         assert round(vend(t), 6) == expect, t

@@ -2,6 +2,8 @@
 identically, our ports must consume the exact same RNG stream as the
 reference and emit identical augmentations."""
 
+import hashlib
+
 import numpy as np
 
 
@@ -11,47 +13,71 @@ TEXTS = ['民盟发言人：昂山素季目前情况良好',
          '短']
 
 
-def test_swap_char_position_parity(jio):
+def _seeded(seed, fn, *args, **kw):
+    np.random.seed(seed)
+    return fn(*args, **kw)
+
+
+def test_swap_char_position_parity(reference):
     from jionlp_spark.kernels.textaug import SwapCharPosition
     ours = SwapCharPosition(swap_ratio=0.08, scale=1.0, seed=1)
-    for t in TEXTS:
-        np.random.seed(101)
-        ref = jio.swap_char_position(t, augmentation_num=3, swap_ratio=0.08,
-                                     seed=1, scale=1.0)
-        np.random.seed(101)
-        got = ours(t, augmentation_num=3)
-        assert ref == got, (t, ref, got)
+    reference.check(
+        'swap_char_position', TEXTS,
+        ref=lambda jio, t: _seeded(101, jio.swap_char_position, t,
+                                   augmentation_num=3, swap_ratio=0.08,
+                                   seed=1, scale=1.0),
+        ours=lambda t: _seeded(101, ours, t, augmentation_num=3))
 
 
-def test_random_add_delete_parity(jio):
+def _dist_digest(dist):
+    """Order-free digest of a char distribution (dict equality)."""
+    return hashlib.sha256(repr(sorted(
+        (c, sorted(v.items())) for c, v in dist.items())).encode()).hexdigest()
+
+
+def _ref_dist_digest(jio, _):
     from jionlp.dictionary import char_distribution_loader
-
-    from jionlp_spark.kernels.textaug import RandomAddDelete
-    dist = char_distribution_loader()
-    ours = RandomAddDelete(dist, add_ratio=0.05, delete_ratio=0.05, seed=0)
-    # reference lazy-_prepares on first call (seed=0 skips reseeding)
-    jio.random_add_delete(TEXTS[0], augmentation_num=1, seed=0,
-                          add_ratio=0.05, delete_ratio=0.05)
-    for t in TEXTS:
-        np.random.seed(202)
-        ref = jio.random_add_delete(t, augmentation_num=3, seed=0,
-                                    add_ratio=0.05, delete_ratio=0.05)
-        np.random.seed(202)
-        got = ours(t, augmentation_num=3)
-        assert ref == got, (t, ref, got)
+    return _dist_digest(char_distribution_loader())
 
 
-def test_random_add_delete_vendored_dict(jio):
-    """The vendored char_distribution must equal the reference's."""
-    from jionlp.dictionary import char_distribution_loader
-
+def test_random_add_delete_parity(reference):
     from jionlp_spark import lexicons
-    assert lexicons.load_char_distribution() == char_distribution_loader()
+    from jionlp_spark.kernels.textaug import RandomAddDelete
+    # our side runs on the vendored distribution, once it is shown equal to
+    # the reference's
+    dist = lexicons.load_char_distribution()
+    assert reference.outputs(
+        'char_distribution digest', ['char_distribution'],
+        ref=_ref_dist_digest, ours=lambda _: _dist_digest(dist)) == \
+        [_dist_digest(dist)]
+    ours = RandomAddDelete(dist, add_ratio=0.05, delete_ratio=0.05, seed=0)
+
+    def ref(jio, t):
+        # reference lazy-_prepares on first call (seed=0 skips reseeding)
+        jio.random_add_delete(TEXTS[0], augmentation_num=1, seed=0,
+                              add_ratio=0.05, delete_ratio=0.05)
+        return _seeded(202, jio.random_add_delete, t, augmentation_num=3,
+                       seed=0, add_ratio=0.05, delete_ratio=0.05)
+
+    reference.check('random_add_delete', TEXTS, ref=ref,
+                    ours=lambda t: _seeded(202, ours, t, augmentation_num=3))
 
 
-def test_replace_entity_parity(jio):
-    from jionlp.textaug import ReplaceEntity as RefReplaceEntity
+def test_random_add_delete_vendored_dict(reference):
+    """The vendored char_distribution must equal the reference's."""
+    from jionlp_spark import lexicons
+    reference.check(
+        'char_distribution digest', ['char_distribution'],
+        ref=_ref_dist_digest,
+        ours=lambda _: _dist_digest(lexicons.load_char_distribution()))
 
+
+def _replaced(res):
+    texts, entity_lists = res
+    return texts, [[dict(e) for e in lst] for lst in entity_lists]
+
+
+def test_replace_entity_parity(reference):
     from jionlp_spark.kernels.textaug import ReplaceEntity
     entities_dict = {
         'Person': {'张三': None, '李雷雷': None, '王五': None},
@@ -60,22 +86,21 @@ def test_replace_entity_parity(jio):
     text = '张三在红叶公司上班。'
     entities = [{'text': '张三', 'offset': [0, 2], 'type': 'Person'},
                 {'text': '红叶公司', 'offset': [3, 7], 'type': 'Company'}]
-    ref_obj = RefReplaceEntity(entities_dict)
-    our_obj = ReplaceEntity(entities_dict)
-    np.random.seed(303)
-    ref = ref_obj(text, entities, augmentation_num=3)
-    np.random.seed(303)
-    got = our_obj(text, entities, augmentation_num=3)
-    assert ref[0] == got[0], (ref, got)
-    assert [[dict(e) for e in lst] for lst in ref[1]] == \
-        [[dict(e) for e in lst] for lst in got[1]]
+
+    def ref(jio, t):
+        from jionlp.textaug import ReplaceEntity as RefReplaceEntity
+        return _replaced(_seeded(303, RefReplaceEntity(entities_dict), t,
+                                 entities, augmentation_num=3))
+
+    reference.check(
+        'ReplaceEntity', [text], ref=ref,
+        ours=lambda t: _replaced(_seeded(303, ReplaceEntity(entities_dict),
+                                         t, entities, augmentation_num=3)))
 
 
 def test_swap_query_literals(jio):
     """Anchor the textaug_swap oracle literals to the reference's RNG
     stream (np.random.seed(s) ≡ RandomState(s))."""
-    import sys
-    sys.path.insert(0, '/root/repo')
     import __spark_entry__ as entry
     for i, (t, expect) in enumerate(zip(entry._AUG_IN, entry._AUG_OUT)):
         np.random.seed(i)

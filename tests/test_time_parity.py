@@ -85,20 +85,20 @@ EXTRACT_TEXTS = [
 ]
 
 
-def test_time_parser_parity(jio):
+def _parse_or_err(parse, text, base):
+    try:
+        return parse(text, time_base=base)
+    except Exception:
+        return ('ERR',)
+
+
+def test_time_parser_parity(reference):
     from jionlp_spark.kernels.timeparse import get_time_parser
     tp = get_time_parser()
-    for c in PARSE_CASES:
-        for base in BASES:
-            try:
-                ref = jio.parse_time(c, time_base=base)
-            except Exception:
-                ref = ('ERR',)
-            try:
-                got = tp.parse(c, time_base=base)
-            except Exception:
-                got = ('ERR',)
-            assert ref == got, (c, base, ref, got)
+    reference.check(
+        'parse_time', [(c, base) for c in PARSE_CASES for base in BASES],
+        ref=lambda jio, cb: _parse_or_err(jio.parse_time, *cb),
+        ours=lambda cb: _parse_or_err(tp.parse, *cb))
 
 
 def test_reference_golden_time_file(jio):
@@ -153,15 +153,17 @@ def test_reference_golden_time_file(jio):
     assert not mismatches, mismatches[:5]
 
 
-def test_time_extractor_parity(jio, sample_texts):
+def _time_spans(mentions):
+    return [(m['text'], tuple(m['offset']), m['type'], str(m.get('detail')))
+            for m in mentions]
+
+
+def test_time_extractor_parity(reference, sample_texts):
     from jionlp_spark.kernels.time_extract import get_time_extractor
     te = get_time_extractor()
     base = BASES[0]
-    for t in EXTRACT_TEXTS + sample_texts[:80]:
-        ref = jio.ner.extract_time(t, time_base=base, with_parsing=True)
-        got = te.extract(t, base, with_parsing=True)
-        ra = [(m['text'], tuple(m['offset']), m['type'],
-               str(m.get('detail'))) for m in ref]
-        rb = [(m['text'], tuple(m['offset']), m['type'],
-               str(m.get('detail'))) for m in got]
-        assert ra == rb, (t, ra, rb)
+    reference.check(
+        'extract_time', EXTRACT_TEXTS + sample_texts[:80],
+        ref=lambda jio, t: _time_spans(
+            jio.ner.extract_time(t, time_base=base, with_parsing=True)),
+        ours=lambda t: _time_spans(te.extract(t, base, with_parsing=True)))
