@@ -238,7 +238,11 @@ def _mentions_linked(linker: Linker, trie, text: str, ts) -> list:
 def make_mentions_udf(trie_broadcast=None):
     """(extract_text, warc_ts) → array<mention>: kernels.mentions.mentions
     per row.  ``warc_ts`` is the time base for time parsing; lexicon NER
-    runs only when a broadcast CharTrie is given."""
+    runs only when a broadcast CharTrie is given.
+
+    extract_mentions' UDF in the reference chain, kept for perfbench's
+    correctness check and for the tests; the pipelines run the fused
+    make_linked_mentions_udf / make_page_udf instead."""
     @_ndet
     @pandas_udf(MENTIONS_ARRAY)
     def mentions_udf(text: pd.Series, warc_ts: pd.Series) -> pd.Series:
@@ -252,7 +256,11 @@ def make_mentions_udf(trie_broadcast=None):
 
 def make_link_udf(bundle_broadcast):
     """(mention_type, text, norm_in) → (obj, obj_type, norm-json):
-    Linker.link per row (canonical keys listed there)."""
+    Linker.link per row (canonical keys listed there).
+
+    link_mentions' UDF in the reference chain, kept for perfbench's
+    correctness check and for the tests; the pipelines link inside the
+    fused make_linked_mentions_udf / make_page_udf instead."""
     @_ndet
     @pandas_udf(LINK_RESULT)
     def link_udf(mention_type: pd.Series, text: pd.Series,

@@ -41,6 +41,7 @@ def main() -> None:
     from jionlp_spark.config import get_spark
     from jionlp_spark.operators.triples import write_triples
     from jionlp_spark.plans.pipeline import run_pipeline
+    from jionlp_spark.sources.catalog import parquet_rows
     from jionlp_spark.sources.pages import generate_pages
 
     spark = get_spark('kg-pipeline')
@@ -61,7 +62,7 @@ def main() -> None:
 
     triples_path = os.path.join(args.output, 'triples_by_pred')
     write_triples(res['triples'], triples_path)
-    n = spark.read.parquet(triples_path).count()
+    n = parquet_rows(triples_path)
     wall = time.time() - t0
     print(json.dumps({'triples': n, 'sec': round(wall, 2),
                       'triples_per_sec': round(n / wall, 1),

@@ -36,6 +36,11 @@ def clean_pages(pages: DataFrame, lang: str | None = 'zh',
     ``clean`` is the reference clean_text output (redacted, byte-identical
     per url); ``extract_text`` keeps urls/emails/phones/brackets for the
     stage-2 mention sweep.
+
+    The lazy pipeline's ``clean`` table, and the first step of the
+    reference chain (clean_pages → extract_mentions → link_mentions),
+    kept for perfbench's correctness check and for the tests; the
+    published pipeline projects S1 from its page frame instead.
     """
     df, source, column = page_source(pages, lang, use_html)
     keep = ['url'] + (['warc_ts'] if 'warc_ts' in df.columns else [])

@@ -33,6 +33,13 @@ def build_bundle(spark: SparkSession, dict_dir: str | None = None):
 
 
 def link_mentions(mentions: DataFrame, bundle_broadcast) -> DataFrame:
+    """Mention rows → the same rows with (obj, obj_type, norm) from a
+    link UDF per mention.
+
+    The last step of the reference chain (clean_pages → extract_mentions →
+    link_mentions): no pipeline runs it; it is kept for perfbench's
+    correctness check and for the tests, which hold the fused passes to
+    its rows."""
     link_udf = make_link_udf(bundle_broadcast)
     norm_in = F.col('norm') if 'norm' in mentions.columns \
         else F.lit(None).cast('string')

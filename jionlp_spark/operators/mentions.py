@@ -37,6 +37,12 @@ def _explode(df: DataFrame, mention_array, keep_cols) -> DataFrame:
 
 def extract_mentions(clean_df: DataFrame,
                      lexicon_trie_broadcast=None) -> DataFrame:
+    """clean_pages rows → one row per mention (url, warc_ts, then the
+    MENTION_TYPE fields), from a mentions UDF over ``extract_text``.
+
+    The reference chain (clean_pages → extract_mentions → link_mentions):
+    no pipeline runs it; it is kept for perfbench's correctness check and
+    for the tests, which hold the fused passes to its rows."""
     mention_array = make_mentions_udf(lexicon_trie_broadcast)(
         F.col('extract_text'), _time_base(clean_df))
     return _explode(clean_df, mention_array, ('url', 'warc_ts'))

@@ -1,10 +1,22 @@
-"""Structured Streaming variant of the mention pipeline.
+"""Structured Streaming operators over an unbounded crawl.
 
 The reference is batch-only (no streaming anywhere in JioNLP); this module
 exists because a crawl is naturally a stream: pages arrive, mentions are
-extracted incrementally, and per-entity counts are maintained with
-watermarked windows.  The same stage-1/2 UDFs run unchanged — the pipeline
-is declared once and bound to either a batch or a streaming source.
+extracted incrementally, and per-key state (dedup memory, LSH buckets,
+vote tallies, open fact runs, user sessions) crosses micro-batches.
+
+The mention stream is the lazy pipeline's own plan
+(``plans/pipeline.run_pipeline`` without ``out_dir``) bound to a streaming
+page source: one fused ``linked_mentions_udf`` pass, lexicon NER included,
+giving the rows batch gives on the same pages.
+
+The keyed operators share one event-time TTL protocol (``_keyed_state``):
+each key's rows of a micro-batch reach an operator step as one frame
+(so the step orders the whole micro-batch, not each Arrow chunk) together
+with the key's prior state, and the state expires one TTL past the key's
+last event time.  Only ``streaming_sessions`` drives its own state,
+because its timeout emits the closing session and its clock is the
+session gap.
 """
 
 from __future__ import annotations
@@ -12,9 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jionlp_spark.operators.clean import clean_pages
-from jionlp_spark.operators.mentions import extract_mentions
 from jionlp_spark.functions.ndet import ndet as _ndet
+from jionlp_spark.plans.pipeline import run_pipeline
 
 _INTERVAL_MS = {'second': 1000, 'minute': 60_000, 'hour': 3600_000,
                 'day': 86_400_000, 'week': 604_800_000}
@@ -52,12 +63,64 @@ def _epoch_ms(ts, tz: str) -> int:
     return int(ts.timestamp() * 1000)
 
 
-def streaming_mentions(pages_stream: DataFrame,
-                       lexicon_trie_broadcast=None) -> DataFrame:
-    """pages stream → mention stream (same operators as batch)."""
-    clean = clean_pages(pages_stream, lang='zh', use_html=True)
-    return extract_mentions(clean,
-                            lexicon_trie_broadcast=lexicon_trie_broadcast)
+def _keyed_state(frame: DataFrame, keys, step, out_schema: str,
+                 state_schema: str, watermark: str,
+                 ttl: str | None = None) -> DataFrame:
+    """Group ``frame`` (watermarked on ``warc_ts``) by ``keys`` and run
+    ``step`` per key and micro-batch under event-time state.
+
+    ``step(key, rows, prior)`` gets the key's Arrow chunks joined into one
+    pandas frame and its state tuple (None for a new key), and returns
+    ``(new_state, out_rows)``, out_rows being tuples in ``out_schema``
+    order.  A key whose state times out loses it and emits nothing; a key
+    whose chunks are all empty is skipped.  The timeout is the key's max
+    ``warc_ts`` plus ``ttl`` (default one ``watermark``), anchored to the
+    key's own event time: the watermark is 0 during the first batch, so a
+    watermark-relative timeout would land in 1970 and the restored
+    watermark of the next run would purge every key at once.
+    """
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    ttl_ms = _interval_ms(ttl if ttl is not None else watermark)
+    tz = frame.sparkSession.conf.get('spark.sql.session.timeZone')
+    cols = [f.split()[0] for f in out_schema.split(',')]
+
+    def run(key, chunks, state: GroupState):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        parts = [p for p in chunks if len(p)]
+        if not parts:
+            return
+        rows = pd.concat(parts, ignore_index=True)
+        new_state, out = step(key, rows,
+                              state.get if state.exists else None)
+        state.update(new_state)
+        state.setTimeoutTimestamp(_epoch_ms(rows['warc_ts'].max(), tz)
+                                  + ttl_ms)
+        if out:
+            yield pd.DataFrame(out, columns=cols)
+
+    return (frame.withWatermark('warc_ts', watermark).groupBy(*keys)
+            .applyInPandasWithState(run, out_schema, state_schema, 'append',
+                                    GroupStateTimeout.EventTimeTimeout))
+
+
+def _first_arrival(key, rows, prior):
+    """Exact-dedup step, state (n_seen): the key's rows in (warc_ts,
+    doc_id) order get its arrival indices, 0 for its first arrival ever."""
+    rows = rows.sort_values(['warc_ts', 'doc_id'])
+    n0 = prior[0] if prior is not None else 0
+    return (n0 + len(rows),), [
+        (key[0], d, ts, n0 + i)
+        for i, (d, ts) in enumerate(zip(rows['doc_id'], rows['warc_ts']))]
+
+
+def streaming_mentions(pages_stream: DataFrame) -> DataFrame:
+    """pages stream → mention stream: the lazy pipeline's mentions
+    (``run_pipeline(spark, pages)['mentions']``) over a streaming source."""
+    return run_pipeline(pages_stream.sparkSession, pages_stream)['mentions']
 
 
 def windowed_entity_counts(mentions_stream: DataFrame,
@@ -75,14 +138,13 @@ def windowed_entity_counts(mentions_stream: DataFrame,
 
 
 def run_file_stream(spark: SparkSession, source_dir: str, out_dir: str,
-                    checkpoint_dir: str, trie_broadcast=None):
+                    checkpoint_dir: str):
     """File-source streaming job: watch a directory of page parquet drops,
     write mention deltas — the local stand-in for a Kafka crawl feed."""
     from jionlp_spark.sources.pages import PAGES_SCHEMA
     pages = (spark.readStream.schema(PAGES_SCHEMA)
              .parquet(source_dir))
-    mentions = streaming_mentions(pages, trie_broadcast)
-    return (mentions.writeStream
+    return (streaming_mentions(pages).writeStream
             .format('parquet')
             .option('path', out_dir)
             .option('checkpointLocation', checkpoint_dir)
@@ -109,54 +171,15 @@ def stateful_dedup_stream(docs_stream: DataFrame,
 
     Input: (doc_id long, text string, warc_ts timestamp) stream.
     Output: (content_hash, doc_id, warc_ts, dup_index) — dup_index 0 for
-    the first arrival (kept), >0 for dropped repeats (emitted for audit).
+    the first arrival (kept), >0 for dropped repeats (emitted for audit);
+    within a micro-batch, arrival order is (warc_ts, doc_id).
     """
-    import hashlib
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
     hashed = docs_stream.select(
-        F.md5(F.col('text')).alias('content_hash'),
-        'doc_id', 'warc_ts').withWatermark('warc_ts', watermark)
-    ttl_ms = _interval_ms(ttl if ttl is not None else watermark)
-    session_tz = docs_stream.sparkSession.conf.get(
-        'spark.sql.session.timeZone')
-
-    out_schema = ('content_hash string, doc_id long, warc_ts timestamp, '
-                  'dup_index int')
-    state_schema = 'n_seen int'
-
-    def dedup_fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n_seen = state.get[0] if state.exists else 0
-        out = []
-        max_ts = None
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(['warc_ts', 'doc_id'])
-            for row in pdf.itertuples():
-                out.append((key[0], row.doc_id, row.warc_ts, n_seen))
-                n_seen += 1
-                if max_ts is None or row.warc_ts > max_ts:
-                    max_ts = row.warc_ts
-        state.update((n_seen,))
-        # TTL anchored to the group's own event time: the current watermark
-        # is 0 during the first batch, so watermark-relative timeouts would
-        # land in 1970 and the restored watermark of the next run would
-        # purge every key immediately.  _epoch_ms localizes the naive
-        # Arrow timestamp to the session tz first (naive .timestamp()
-        # assumes UTC and shifts the TTL by the tz offset).
-        state.setTimeoutTimestamp(_epoch_ms(max_ts, session_tz) + ttl_ms)
-        yield pd.DataFrame(out, columns=['content_hash', 'doc_id',
-                                         'warc_ts', 'dup_index'])
-
-    return (hashed.groupBy('content_hash')
-            .applyInPandasWithState(dedup_fn, out_schema, state_schema,
-                                    'append',
-                                    GroupStateTimeout.EventTimeTimeout))
+        F.md5(F.col('text')).alias('content_hash'), 'doc_id', 'warc_ts')
+    return _keyed_state(
+        hashed, ['content_hash'], _first_arrival,
+        'content_hash string, doc_id long, warc_ts timestamp, dup_index int',
+        'n_seen int', watermark, ttl)
 
 
 def streaming_lsh_pairs(docs_stream: DataFrame, n: int = 3,
@@ -177,23 +200,22 @@ def streaming_lsh_pairs(docs_stream: DataFrame, n: int = 3,
 
     Pairs may be emitted once per shared band — at-least-once emission,
     exactly like the batch join pre-distinct; dedupe downstream.  State
-    per bucket holds ≤ max_bucket doc ids: overflow docs in a hot bucket
+    per bucket holds ≤ max_bucket doc ids, stored in (warc_ts, doc_id)
+    order within a micro-batch: overflow docs in a hot bucket
     (boilerplate shingles — capped in batch by the max_df/stop-shingle
     logic) emit nothing and are not stored, and the bucket's event-time
     TTL expires it one ``watermark`` interval past its last arrival —
-    pairs spanning a longer event-time gap than the watermark are BY
-    DESIGN not found (the retention/recall trade every streaming dedup
-    makes); size the watermark above the pairing horizon you need.
-    Replayed doc_ids (at-least-once sources) neither self-pair nor burn
-    a second state slot.
+    every arrival counts, stored or not, so a full bucket or one seeing
+    only replays stays alive while its traffic lasts.  Pairs spanning a
+    longer event-time gap than the watermark are BY DESIGN not found
+    (the retention/recall trade every streaming dedup makes); size the
+    watermark above the pairing horizon you need.  Replayed doc_ids
+    (at-least-once sources) neither self-pair nor burn a second state
+    slot.
 
     Input: (doc_id long, text string, warc_ts timestamp).
     Output: (doc_a, doc_b, band_id) with doc_a < doc_b strictly.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
     if num_hashes % bands:
         raise ValueError(f'num_hashes={num_hashes} must divide into '
                          f'bands={bands} (trailing hashes would be '
@@ -220,58 +242,39 @@ def streaming_lsh_pairs(docs_stream: DataFrame, n: int = 3,
               .select('doc_id', 'warc_ts',
                       F.explode(F.array(*band_exprs)).alias('band'))
               .select('doc_id', 'warc_ts',
-                      'band.band_id', 'band.band_hash')
-              .withWatermark('warc_ts', watermark))
+                      'band.band_id', 'band.band_hash'))
 
-    out_schema = 'doc_a long, doc_b long, band_id int'
-    state_schema = 'ids array<long>'
-    ttl_ms = _interval_ms(watermark)
-    session_tz = docs_stream.sparkSession.conf.get(
-        'spark.sql.session.timeZone')
-
-    def pair_fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        ids = list(state.get[0]) if state.exists else []
+    def pair_step(key, rows, prior):
+        ids = list(prior[0]) if prior is not None else []
         out = []
-        max_ts = None
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(['warc_ts', 'doc_id'])
-            for row in pdf.itertuples():
-                # EVERY arriving row refreshes the TTL clock (advisor
-                # finding r5): a hot bucket at max_bucket, or one seeing
-                # only replays, is still ACTIVE — aging it off
-                # one-watermark-after-its-last-STORED doc would silently
-                # drop its pairing history mid-traffic
-                if max_ts is None or row.warc_ts > max_ts:
-                    max_ts = row.warc_ts
-                d = int(row.doc_id)
-                if d in ids:
-                    continue  # at-least-once replay: no self-pair, no slot
-                if len(ids) >= max_bucket:
-                    continue
-                for prior in ids:
-                    a, b = (prior, d) if prior < d else (d, prior)
-                    out.append((a, b, int(key[0])))
-                ids.append(d)
-        state.update((ids,))
-        if max_ts is not None:
-            # tz-correct epoch (see _epoch_ms) + watermark-derived TTL
-            state.setTimeoutTimestamp(_epoch_ms(max_ts, session_tz)
-                                      + ttl_ms)
-        yield pd.DataFrame(out, columns=['doc_a', 'doc_b', 'band_id'])
+        for d in rows.sort_values(['warc_ts', 'doc_id'])['doc_id']:
+            d = int(d)
+            if d in ids or len(ids) >= max_bucket:
+                continue  # a replay or a full bucket: no pairs, no slot
+            out += [(min(p, d), max(p, d), int(key[0])) for p in ids]
+            ids.append(d)
+        return (ids,), out
 
-    return (banded.groupBy('band_id', 'band_hash')
-            .applyInPandasWithState(pair_fn, out_schema, state_schema,
-                                    'append',
-                                    GroupStateTimeout.EventTimeTimeout))
+    return _keyed_state(banded, ['band_id', 'band_hash'], pair_step,
+                        'doc_a long, doc_b long, band_id int',
+                        'ids array<long>', watermark)
+
+
+def _dedup_verdicts(survivors: DataFrame, rejected: DataFrame,
+                    watermark: str) -> DataFrame:
+    """The admission tail of streaming_curate and streaming_ingest: the
+    gate survivors through stateful_dedup_stream as kept / dropped_exact,
+    unioned with the gate's own (doc_id, warc_ts, status) rejections."""
+    return (stateful_dedup_stream(survivors, watermark=watermark)
+            .select('doc_id', 'warc_ts',
+                    F.when(F.col('dup_index') == 0, F.lit('kept'))
+                    .otherwise(F.lit('dropped_exact')).alias('status'))
+            .unionByName(rejected))
 
 
 def streaming_curate(docs_stream: DataFrame, langs=None,
                      min_quality: float = 0.35,
-                     watermark: str = '1 hour',
-                     ttl: str | None = None) -> DataFrame:
+                     watermark: str = '1 hour') -> DataFrame:
     """Streaming admission verdicts — the streaming analog of
     operators/curate.curate_corpus over an unbounded crawl:
 
@@ -312,20 +315,13 @@ def streaming_curate(docs_stream: DataFrame, langs=None,
                         F.col('_status').alias('status')))
     survivors = gated.filter(F.col('_status').isNull()) \
         .select('doc_id', 'text', 'warc_ts')
-    deduped = stateful_dedup_stream(survivors, watermark=watermark,
-                                    ttl=ttl)
-    verdicts = deduped.select(
-        'doc_id', 'warc_ts',
-        F.when(F.col('dup_index') == 0, F.lit('kept'))
-        .otherwise(F.lit('dropped_exact')).alias('status'))
-    return verdicts.unionByName(rejected)
+    return _dedup_verdicts(survivors, rejected, watermark)
 
 
 def streaming_ingest(pages_stream: DataFrame, min_len: int = 30,
                      link_num: int = 1, link_den: int = 2,
                      gopher_kwargs: dict | None = None,
-                     watermark: str = '1 hour',
-                     ttl: str | None = None) -> DataFrame:
+                     watermark: str = '1 hour') -> DataFrame:
     """Streaming crawl-INGEST admission — the streaming analog of the
     batch ``web_ingest_pipeline`` composition, completing the pair the
     way ``streaming_curate`` mirrors ``curate_corpus``: raw page HTML →
@@ -377,13 +373,7 @@ def streaming_ingest(pages_stream: DataFrame, min_len: int = 30,
                         F.lit('dropped_quality').alias('status')))
     survivors = (g.filter(F.col('gopher_pass'))
                  .select('doc_id', 'text', 'warc_ts'))
-    deduped = stateful_dedup_stream(survivors, watermark=watermark,
-                                    ttl=ttl)
-    verdicts = deduped.select(
-        'doc_id', 'warc_ts',
-        F.when(F.col('dup_index') == 0, F.lit('kept'))
-        .otherwise(F.lit('dropped_exact')).alias('status'))
-    return verdicts.unionByName(rejected)
+    return _dedup_verdicts(survivors, rejected, watermark)
 
 
 def streaming_sessions(events_stream: DataFrame,
@@ -468,8 +458,7 @@ def streaming_sessions(events_stream: DataFrame,
 
 
 def streaming_url_dedup(pages_stream: DataFrame,
-                        watermark: str = '1 hour',
-                        ttl: str | None = None) -> DataFrame:
+                        watermark: str = '1 hour') -> DataFrame:
     """Streaming canonical-URL dedup — the ONLINE crawl-frontier shape
     of operators/weblinks.url_dedup: each arriving URL canonicalizes
     (kernels/urlnorm, one pandas-UDF stage feeding the state key), the
@@ -479,17 +468,16 @@ def streaming_url_dedup(pages_stream: DataFrame,
     URLs (mailto:, fragments) drop before the state shuffle, so junk
     never occupies state.
 
-    State = one row per canon_url {n_seen}, event-time TTL (default one
-    watermark interval) bounds state to recently-seen URLs — the
-    frontier's recrawl-suppression window.
+    State = one row per canon_url {n_seen}, the same first-arrival step
+    as stateful_dedup_stream; an event-time TTL of one watermark
+    interval bounds state to recently-seen URLs — the frontier's
+    recrawl-suppression window.
 
     Input: (doc_id long, url string, warc_ts timestamp) stream.
     Output: (canon_url, doc_id, warc_ts, dup_index).
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
 
     from jionlp_spark.kernels import urlnorm
 
@@ -505,44 +493,16 @@ def streaming_url_dedup(pages_stream: DataFrame,
     canoned = (pages_stream
                .select(_canon(F.col('url')).alias('canon_url'),
                        'doc_id', 'warc_ts')
-               .filter(F.col('canon_url').isNotNull())
-               .withWatermark('warc_ts', watermark))
-    ttl_ms = _interval_ms(ttl if ttl is not None else watermark)
-    session_tz = pages_stream.sparkSession.conf.get(
-        'spark.sql.session.timeZone')
-
-    out_schema = ('canon_url string, doc_id long, warc_ts timestamp, '
-                  'dup_index int')
-
-    def dedup_fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n_seen = state.get[0] if state.exists else 0
-        out = []
-        max_ts = None
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(['warc_ts', 'doc_id'])
-            for row in pdf.itertuples():
-                out.append((key[0], row.doc_id, row.warc_ts, n_seen))
-                n_seen += 1
-                if max_ts is None or row.warc_ts > max_ts:
-                    max_ts = row.warc_ts
-        state.update((n_seen,))
-        state.setTimeoutTimestamp(_epoch_ms(max_ts, session_tz) + ttl_ms)
-        yield pd.DataFrame(out, columns=['canon_url', 'doc_id',
-                                         'warc_ts', 'dup_index'])
-
-    return (canoned.groupBy('canon_url')
-            .applyInPandasWithState(dedup_fn, out_schema, 'n_seen int',
-                                    'append',
-                                    GroupStateTimeout.EventTimeTimeout))
+               .filter(F.col('canon_url').isNotNull()))
+    return _keyed_state(
+        canoned, ['canon_url'], _first_arrival,
+        'canon_url string, doc_id long, warc_ts timestamp, dup_index int',
+        'n_seen int', watermark)
 
 
 def streaming_conflicts(triples_stream: DataFrame,
                         watermark: str = '1 hour',
-                        max_objs: int = 16,
-                        ttl: str | None = None) -> DataFrame:
+                        max_objs: int = 16) -> DataFrame:
     """Streaming majority-vote conflict tracking — the fusion-tier
     analog of ``operators/graph.conflict_resolution`` the way
     streaming_curate mirrors curate_corpus: assertions arrive as a
@@ -560,8 +520,8 @@ def streaming_conflicts(triples_stream: DataFrame,
     — the containment df-cap honesty rule).  Slots go to first
     arrivals: a real conflict's contenders appear early, and the cap
     exists for adversarial/hot keys, not the common case.  An
-    event-time TTL expires subjects quiet for ``ttl`` (default one
-    ``watermark``), bounding total state on an unbounded crawl.
+    event-time TTL expires subjects quiet for one ``watermark``,
+    bounding total state on an unbounded crawl.
 
     The batch operator's functionality gate (near-functional
     predicates only) is corpus-global and stays a batch-side decision:
@@ -570,72 +530,37 @@ def streaming_conflicts(triples_stream: DataFrame,
     Output: (pred, subj, obj, votes, n_alternatives, is_winner,
     overflow) in append mode.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    t = (triples_stream
-         .select('pred', 'subj', 'obj', 'warc_ts')
-         .withWatermark('warc_ts', watermark))
-    ttl_ms = _interval_ms(ttl if ttl is not None else watermark)
-    session_tz = triples_stream.sparkSession.conf.get(
-        'spark.sql.session.timeZone')
-
-    out_schema = ('pred string, subj string, obj string, votes long, '
-                  'n_alternatives int, is_winner boolean, overflow long')
-    state_schema = 'objs array<string>, votes array<long>, overflow long'
-    cols = ['pred', 'subj', 'obj', 'votes', 'n_alternatives',
-            'is_winner', 'overflow']
-
-    def vote_fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        # scope_fn's empty-input guard, mirrored (ADVICE r7): a key whose
-        # batch delivers only empty chunks would leave max_ts None and
-        # crash _epoch_ms mid-micro-batch
-        parts = [p for p in pdf_iter if len(p)]
-        if not parts:
-            return
-        if state.exists:
-            objs, votes, overflow = state.get
-            objs, votes = list(objs), list(votes)
-        else:
-            objs, votes, overflow = [], [], 0
+    def vote_step(key, rows, prior):
+        objs, votes, overflow = ((list(prior[0]), list(prior[1]), prior[2])
+                                 if prior is not None else ([], [], 0))
         idx = {o: i for i, o in enumerate(objs)}
-        max_ts = None
-        for pdf in parts:
-            for row in pdf.itertuples():
-                o = row.obj
-                if o in idx:
-                    votes[idx[o]] += 1
-                elif len(objs) < max_objs:
-                    idx[o] = len(objs)
-                    objs.append(o)
-                    votes.append(1)
-                else:
-                    overflow += 1
-                if max_ts is None or row.warc_ts > max_ts:
-                    max_ts = row.warc_ts
-        state.update((objs, votes, overflow))
-        state.setTimeoutTimestamp(_epoch_ms(max_ts, session_tz) + ttl_ms)
+        for o in rows['obj']:
+            if o in idx:
+                votes[idx[o]] += 1
+            elif len(objs) < max_objs:
+                idx[o] = len(objs)
+                objs.append(o)
+                votes.append(1)
+            else:
+                overflow += 1
+        out = []
         if len(objs) >= 2:
             win = min(range(len(objs)),
                       key=lambda i: (-votes[i], objs[i]))
-            yield pd.DataFrame(
-                [(key[0], key[1], objs[i], votes[i], len(objs),
-                  i == win, overflow) for i in range(len(objs))],
-                columns=cols)
+            out = [(key[0], key[1], objs[i], votes[i], len(objs),
+                    i == win, overflow) for i in range(len(objs))]
+        return (objs, votes, overflow), out
 
-    return (t.groupBy('pred', 'subj')
-            .applyInPandasWithState(vote_fn, out_schema, state_schema,
-                                    'append',
-                                    GroupStateTimeout.EventTimeTimeout))
+    return _keyed_state(
+        triples_stream.select('pred', 'subj', 'obj', 'warc_ts'),
+        ['pred', 'subj'], vote_step,
+        'pred string, subj string, obj string, votes long, '
+        'n_alternatives int, is_winner boolean, overflow long',
+        'objs array<string>, votes array<long>, overflow long', watermark)
 
 
 def streaming_fact_intervals(triples_stream: DataFrame,
-                             watermark: str = '1 hour',
-                             ttl: str | None = None) -> DataFrame:
+                             watermark: str = '1 hour') -> DataFrame:
     """Streaming temporal scoping — the batch/stream pair of
     ``operators/graph.temporal_scoping`` the way streaming_conflicts
     pairs conflict_resolution: timestamped (pred, subj, obj, warc_ts)
@@ -656,67 +581,34 @@ def streaming_fact_intervals(triples_stream: DataFrame,
     anywhere in the output.
 
     State = ONE row per (pred, subj): (cur_obj, valid_from_us, n) —
-    BOUNDED regardless of history length.  An event-time TTL
-    (default one ``watermark``) expires subjects quiet past it; the
-    expired subject's open run is dropped with it — the documented
-    price of bounded state on an unbounded crawl (a re-appearing
-    object then opens a fresh run, exactly like a first sighting).
+    BOUNDED regardless of history length.  An event-time TTL of one
+    ``watermark`` expires subjects quiet past it; the expired
+    subject's open run is dropped with it — the documented price of
+    bounded state on an unbounded crawl (a re-appearing object then
+    opens a fresh run, exactly like a first sighting).
 
     Output: (pred, subj, obj, valid_from_us, valid_to_us,
     n_assertions) in append mode.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    t = (triples_stream
-         .select('pred', 'subj', 'obj', 'warc_ts')
-         .withWatermark('warc_ts', watermark)
-         .withColumn('ts_us', F.unix_micros('warc_ts')))
-    ttl_ms = _interval_ms(ttl if ttl is not None else watermark)
-    session_tz = triples_stream.sparkSession.conf.get(
-        'spark.sql.session.timeZone')
-
-    out_schema = ('pred string, subj string, obj string, '
-                  'valid_from_us long, valid_to_us long, '
-                  'n_assertions long')
-    state_schema = 'cur_obj string, valid_from_us long, n long'
-    cols = ['pred', 'subj', 'obj', 'valid_from_us', 'valid_to_us',
-            'n_assertions']
-
-    def scope_fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        parts = [p for p in pdf_iter if len(p)]
-        if not parts:
-            return
-        rows = (pd.concat(parts, ignore_index=True)
-                if len(parts) > 1 else parts[0])
-        rows = rows.sort_values(['ts_us', 'obj'], kind='mergesort')
-        if state.exists:
-            cur, vf, n = state.get
-        else:
-            cur = None
-            vf = n = 0
+    def scope_step(key, rows, prior):
+        cur, vf, n = prior if prior is not None else (None, 0, 0)
         out = []
-        max_ts = None
-        for r in rows.itertuples():
+        rows = rows.sort_values(['ts_us', 'obj'], kind='mergesort')
+        for o, ts in zip(rows['obj'], rows['ts_us']):
+            ts = int(ts)
             if cur is None:
-                cur, vf, n = r.obj, int(r.ts_us), 1
-            elif r.obj == cur:
+                cur, vf, n = o, ts, 1
+            elif o == cur:
                 n += 1
             else:
-                out.append((key[0], key[1], cur, vf, int(r.ts_us), n))
-                cur, vf, n = r.obj, int(r.ts_us), 1
-            if max_ts is None or r.warc_ts > max_ts:
-                max_ts = r.warc_ts
-        state.update((cur, vf, n))
-        state.setTimeoutTimestamp(_epoch_ms(max_ts, session_tz) + ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+                out.append((key[0], key[1], cur, vf, ts, n))
+                cur, vf, n = o, ts, 1
+        return (cur, vf, n), out
 
-    return (t.groupBy('pred', 'subj')
-            .applyInPandasWithState(scope_fn, out_schema, state_schema,
-                                    'append',
-                                    GroupStateTimeout.EventTimeTimeout))
+    return _keyed_state(
+        triples_stream.select('pred', 'subj', 'obj', 'warc_ts')
+        .withColumn('ts_us', F.unix_micros('warc_ts')),
+        ['pred', 'subj'], scope_step,
+        'pred string, subj string, obj string, valid_from_us long, '
+        'valid_to_us long, n_assertions long',
+        'cur_obj string, valid_from_us long, n long', watermark)

@@ -184,10 +184,11 @@ def test_multimodal_plumbing(spark):
 
 
 def test_streaming_mentions(spark, tmp_path):
-    """Structured Streaming variant: file source → mention deltas."""
+    """Structured Streaming variant: file source → mention deltas, row for
+    row the lazy batch pipeline's mentions over the same pages."""
     import os
 
-    from jionlp_spark.functions.udfs import build_location_trie
+    from jionlp_spark.plans.pipeline import run_pipeline
     from jionlp_spark.sources.pages import generate_pages
     from jionlp_spark.streaming.stream import run_file_stream
 
@@ -195,18 +196,13 @@ def test_streaming_mentions(spark, tmp_path):
     out = str(tmp_path / 'out')
     ckpt = str(tmp_path / 'ckpt')
     generate_pages(spark, 50, num_partitions=2).write.parquet(src)
-    q = run_file_stream(spark, src, out, ckpt,
-                        trie_broadcast=build_location_trie(spark))
+    q = run_file_stream(spark, src, out, ckpt)
     q.awaitTermination(120)
-    n = spark.read.parquet(out).count()
-    assert n > 0
-    # batch pipeline on the same pages gives the same mention count
-    from jionlp_spark.operators.clean import clean_pages
-    from jionlp_spark.operators.mentions import extract_mentions
-    batch = extract_mentions(
-        clean_pages(spark.read.parquet(src)),
-        lexicon_trie_broadcast=build_location_trie(spark)).count()
-    assert n == batch
+    streamed = spark.read.parquet(out)
+    batch = run_pipeline(spark, spark.read.parquet(src))['mentions']
+    assert streamed.count() > 0
+    assert streamed.exceptAll(batch).count() == 0
+    assert batch.exceptAll(streamed).count() == 0
     assert os.path.exists(ckpt)
 
 
@@ -248,6 +244,38 @@ def test_stateful_dedup_stream(spark, tmp_path):
     # 0,1 in run 1 (order by ts,doc_id) and 2 in run 2 (state survived)
     assert sorted([rows[0].dup_index, rows[2].dup_index]) == [0, 1]
     assert rows[3].dup_index == 2
+
+
+def test_stateful_dedup_stream_orders_whole_micro_batch(spark, tmp_path):
+    """dup_index follows (warc_ts, doc_id) over a key's whole micro-batch,
+    not over each Arrow chunk: with one record per chunk, one hash whose
+    rows sit in descending warc_ts in the source file still gives
+    dup_index 0 to its earliest row."""
+    import datetime
+
+    from jionlp_spark.streaming.stream import stateful_dedup_stream
+
+    schema = 'doc_id long, text string, warc_ts timestamp'
+    src, out = str(tmp_path / 'src'), str(tmp_path / 'out')
+    ts = datetime.datetime(2021, 9, 1)
+    spark.createDataFrame(
+        [(d, 'same text', ts - datetime.timedelta(minutes=d))
+         for d in range(4)], schema).coalesce(1).write.parquet(src)
+    conf = 'spark.sql.execution.arrow.maxRecordsPerBatch'
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, '1')
+    try:
+        q = (stateful_dedup_stream(spark.readStream.schema(schema)
+                                   .parquet(src))
+             .writeStream.format('parquet').option('path', out)
+             .option('checkpointLocation', str(tmp_path / 'ckpt'))
+             .outputMode('append').trigger(availableNow=True).start())
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(conf, old)
+    got = {r.doc_id: r.dup_index for r in spark.read.parquet(out).collect()}
+    # doc 3 carries the earliest warc_ts
+    assert got == {3: 0, 2: 1, 1: 2, 0: 3}, got
 
 
 def test_multimodal_resize_and_aug_add_delete(spark):

@@ -339,10 +339,11 @@ def test_lazy_pipeline_is_one_fused_python_pass(spark, use_html):
 
 
 def test_extract_mentions_adds_one_python_node(spark):
-    """Stage 2 of the published path is one mentions UDF over the stage-1
-    table: stacked on clean_pages it adds exactly one ArrowEvalPython
-    node to the plan (the clean UDF's own node stays separate, because
-    the mention UDF reads a field of its struct)."""
+    """The reference chain (clean_pages → extract_mentions, kept for
+    perfbench's correctness check and the tests) stacks one mentions UDF
+    on the clean UDF: it adds exactly one ArrowEvalPython node to the
+    plan (the clean UDF's own node stays separate, because the mention
+    UDF reads a field of its struct)."""
     from jionlp_spark.functions.udfs import build_location_trie
     from jionlp_spark.operators.clean import clean_pages
     from jionlp_spark.operators.mentions import extract_mentions
@@ -354,6 +355,18 @@ def test_extract_mentions_adds_one_python_node(spark):
     assert len(before) == 1, before
     assert len(after) == 2, after
     assert sum(n.startswith('mentions_udf(') for n in after) == 1, after
+
+
+def test_streaming_mentions_is_the_lazy_python_pass(spark):
+    """The mention stream is the lazy pipeline's plan: over a batch page
+    frame it has exactly one ArrowEvalPython node, the fused
+    linked_mentions_udf, not the clean → mentions reference chain."""
+    from jionlp_spark.sources.pages import generate_pages
+    from jionlp_spark.streaming.stream import streaming_mentions
+    nodes = _python_nodes(streaming_mentions(
+        generate_pages(spark, 20, num_partitions=2)))
+    assert len(nodes) == 1, nodes
+    assert nodes[0].startswith('linked_mentions_udf('), nodes
 
 
 def _python_nodes_run(df):
