@@ -27,6 +27,7 @@ import time as _time
 
 from . import patterns as P
 from .money import MoneyParseError, get_money_parser
+from .regex_gate import longest_match, required_chars, widen
 
 _b, _ba, _a, I = P._b, P._ba, P._a, P.TP_I
 
@@ -327,7 +328,6 @@ class TimeDeltaParser:
                  (self.law_delta, self._normalize_law),
                  (self.special_delta, self._normalize_special)]
         if self._delta_req is None:
-            from .regex_gate import required_chars
             self._delta_req = [required_chars(p) for p, _f in funcs]
         chars = set(time_string)
         cur_func, cur_string = None, ''
@@ -539,7 +539,6 @@ class TimeParser:
         # pattern whose every match provably contains a char the string
         # lacks cannot match — skip its search (kernels/regex_gate.py;
         # None = unprovable, always search)
-        from .regex_gate import required_chars
         self._ymd_req = [required_chars(p) for p, _f in self.ymd_funcs]
         self._hms_req = [required_chars(p) for p, _f in self.hms_funcs]
 
@@ -1175,8 +1174,13 @@ class TimeParser:
         return res
 
     def _parse_span_2_2_point(self, time_string):
-        time_string = self._seg_or_not_first(time_string)
+        return self._split_span(self._seg_or_not_first(time_string))
 
+    def _split_span(self, time_string):
+        """The span split proper, after the '-' seg control.  Its patterns
+        hold no digit class short of a whole script, so it splits a digit
+        shape exactly like the string the shape came from (StrictParseGate
+        relies on it; test_shape_keyed_patterns_are_invariant checks)."""
         if self.first_1_span.search(time_string):
             first_res = self.first_1_span.search(time_string)
         elif self.first_2_span.search(time_string):
@@ -3172,6 +3176,110 @@ class TimeParser:
             if fp.hour == -1:
                 raise TimeParseError(time_string)
         return fp.handler(), sp.handler(), 'time_point', 'blur', day_bias
+
+
+# ---------------------------------------------------------------------------
+# strict-parse proof on digit shapes
+
+GATE_MEMO_MAX = 1 << 16
+_COMPENSATIONS = ('年', '月', '日', '时')
+
+
+class StrictParseGate:
+    """``gate(digit_shape(s))`` is False only when ``parser.parse(s,
+    strict=True)`` raises for every time base (default flags; s stripped as
+    parse strips it).  Decided from the parser's own compiled patterns,
+    widened by regex_gate.widen, following parse's control flow:
+
+    - period: needs a period_time match;
+    - delta: the whole string, or when the delta split finds two sides
+      the second side, must be one delta-pattern match (the split
+      patterns are shape-invariant, so they run on the shape exactly);
+    - span/point: some string parse_time_point is handed must be
+      *covered* — a ymd match plus an hms match at least as long as the
+      string, or strict mode raises.  Those strings are the string itself
+      (the no-span path and every span fallback), ``+'日'`` when
+      num_month_num may match, and the side a span split must parse
+      first, with every suffix the two compensations may append.  The
+      split is the parser's own ``_split_span`` run on the shape, with and
+      without the digit-reading '-' seg control.
+
+    A widened pattern's longest match bounds the original's match length
+    on every piece of the string, so a string no combination covers
+    cannot parse.  Verdicts are memoized by shape (bounded); a crawl's
+    failing digit strings fall into a few hundred shapes.  Backed by
+    tests/test_grid_search_equivalence.py (the real parser on every trial
+    the gate rejects; the shape invariance of the split patterns) and
+    tests/test_regex_gate.py (widening and longest_match on the real
+    batteries)."""
+
+    def __init__(self, parser: 'TimeParser') -> None:
+        self.parser = parser
+        d = parser.delta
+        self.delta = [widen(p) for p in (d.standard_delta, d.law_delta,
+                                         d.special_delta)]
+        self.ymd = [widen(p) for p, _f in parser.ymd_funcs]
+        self.hms = [widen(p) for p, _f in parser.hms_funcs]
+        self.period, self.num_month_num, self.compensation = (
+            widen(p).pattern for p in (parser.period_time,
+                                       parser.num_month_num,
+                                       parser.span_point_compensation))
+        self._memo: dict = {}
+
+    def __call__(self, shape: str) -> bool:
+        v = self._memo.get(shape)
+        if v is None:
+            v = self._decide(shape)
+            if len(self._memo) < GATE_MEMO_MAX:
+                self._memo[shape] = v
+        return v
+
+    def _decide(self, s: str) -> bool:
+        s = s.strip()
+        if not s:
+            return True             # parse's own failure path; not proven
+        if self.period.search(s) is not None or self._delta(s):
+            return True
+        s = s.replace('的', '')
+        if self._covered(s):
+            return True
+        if self.num_month_num.search(s) is not None and \
+                self._covered(s + '日'):
+            return True
+        return any(self._covered(side) for side in self._sides(s))
+
+    def _delta(self, s: str) -> bool:
+        d = self.parser.delta
+        first = _search(d.first_span, s) or None
+        second = (_search(d.second_1_span, s) or
+                  _search(d.second_2_span, s) or None)
+        whole = second if first is not None and second is not None else s
+        return any(longest_match(w, whole, len(whole)) for w in self.delta)
+
+    def _sides(self, s: str):
+        p = self.parser
+        compensated = self.compensation.search(s) is not None
+        for v in {s, s.replace('-', '䶵')}:
+            first, second = map(p._seg_or_not_second, p._split_span(v))
+            side = first if first is not None else second
+            if side is None:
+                continue
+            ends = ['']
+            if self.num_month_num.search(side) is not None:
+                ends.append('日')
+            if first is not None and second is not None and compensated:
+                ends += [e + c for e in list(ends) for c in _COMPENSATIONS]
+            for e in ends:
+                yield side + e
+
+    def _covered(self, t: str) -> bool:
+        n = len(t.replace(' ', ''))
+        if n == 0:
+            return False
+        h = max(longest_match(w, t) for w in self.hms)
+        if h >= n:
+            return True
+        return any(longest_match(w, t, n - h) for w in self.ymd)
 
 
 _PARSER: TimeParser | None = None

@@ -28,9 +28,9 @@ def _spans(mentions):
     return [(m['text'], tuple(m['offset'])) for m in mentions]
 
 
-def test_time_parse_fuzz(reference):
-    from jionlp_spark.kernels.timeparse import get_time_parser
-    tp = get_time_parser()
+def time_parse_fuzz_cases() -> list:
+    """Random date/time compositions (also the parse gate's soundness
+    inputs, tests/test_grid_search_equivalence.py)."""
     rng = random.Random(12345)
     Y = ['2019年', '今年', '去年', '明年', '1997年', '二〇二一年', '98年', '']
     M = ['1月', '12月', '三月', '正月', '腊月', '上个月', '这个月', '']
@@ -43,6 +43,13 @@ def test_time_parse_fuzz(reference):
              + rng.choice(EXTRA))
         if s:
             cases.append(s)
+    return cases
+
+
+def test_time_parse_fuzz(reference):
+    from jionlp_spark.kernels.timeparse import get_time_parser
+    tp = get_time_parser()
+    cases = time_parse_fuzz_cases()
     assert len(cases) > 1000
     reference.check(
         'parse_time', cases,
@@ -124,13 +131,8 @@ def test_location_parse_fuzz(jio):
     assert checked > 700
 
 
-def test_grid_extractor_fuzz(reference):
-    """Random compositions of time/money phrases + adversarial filler
-    through BOTH grid-search extractors (with parsing); spans, types and
-    parse details must match."""
-    from jionlp_spark.kernels.money_extract import get_money_extractor
-    from jionlp_spark.kernels.time_extract import get_time_extractor
-    tex, mex = get_time_extractor(), get_money_extractor()
+def grid_extractor_fuzz_cases() -> list:
+    """Random compositions of time/money phrases + adversarial filler."""
     rng = random.Random(31337)
     timey = ['2019年3月', '去年夏天', '下周三下午3点', '8点半', '三天后',
              '1997年', '腊月初八', '中秋节', '第二季度', '30分钟', '每周五',
@@ -140,10 +142,6 @@ def test_grid_extractor_fuzz(reference):
     fill = ['该项目', '于', '举行，预计', '完成。', '情况良好', '无关内容',
             '，', '。', '一点也不', '24点5度', '三块砖', 'ID110108', '87.53']
 
-    def spans(lst):
-        return [(m['text'], tuple(m['offset']), m.get('type'),
-                 str(m.get('detail'))) for m in lst]
-
     cases = []
     for _ in range(500):
         parts = []
@@ -152,6 +150,22 @@ def test_grid_extractor_fuzz(reference):
             parts.append(rng.choice(timey) if r < 0.3 else
                          rng.choice(moneyy) if r < 0.5 else rng.choice(fill))
         cases.append(''.join(parts))
+    return cases
+
+
+def test_grid_extractor_fuzz(reference):
+    """Random compositions of time/money phrases + adversarial filler
+    through BOTH grid-search extractors (with parsing); spans, types and
+    parse details must match."""
+    from jionlp_spark.kernels.money_extract import get_money_extractor
+    from jionlp_spark.kernels.time_extract import get_time_extractor
+    tex, mex = get_time_extractor(), get_money_extractor()
+
+    def spans(lst):
+        return [(m['text'], tuple(m['offset']), m.get('type'),
+                 str(m.get('detail'))) for m in lst]
+
+    cases = grid_extractor_fuzz_cases()
     reference.check(
         'extract_time', cases,
         ref=lambda jio, s: spans(jio.ner.extract_time(s, time_base=TB,
