@@ -121,17 +121,12 @@ def _page_body(raw, source: str):
     return clean_html(raw)
 
 
-_KEEP_SPANS = dict(remove_parentheses=False, remove_url=False,
-                  remove_email=False, remove_phone_number=False)
-
-
-def _clean_body(cleaner, body: str, source: str, redact: bool = False) -> str:
-    """The reference clean_text chain over a page body.  ``redact`` gives
-    the `clean` deliverable; without it brackets/urls/emails/phones stay
-    for the stage-2 sweep.  Tags are stripped from a plain body only:
-    CleanHTML already removed an html page's."""
-    return cleaner.clean_text(body, remove_html_tag=source == 'plain',
-                              **({} if redact else _KEEP_SPANS))
+def _clean_body(cleaner, body: str, source: str) -> str:
+    """extract_text: the reference clean_text chain's normalization steps
+    over a page body — brackets/urls/emails/phones stay for the stage-2
+    sweep.  Tags are stripped from a plain body only: CleanHTML already
+    removed an html page's."""
+    return cleaner.normalize(body, remove_html_tag=source == 'plain')
 
 
 def _page_text(cleaner, raw, source: str) -> str:
@@ -140,11 +135,12 @@ def _page_text(cleaner, raw, source: str) -> str:
 
 
 def _clean_row(cleaner, raw, source: str) -> tuple:
-    """Page cell → (clean, extract_text, meta json).  Both text variants
-    come from one body, so the expensive html pass runs once per row."""
+    """Page cell → (clean, extract_text, meta json).  clean_text runs its
+    span removal strictly after its normalization, so `clean` is
+    extract_text redacted: each page is normalized once."""
     body, meta = _page_body(raw, source)
-    return (_clean_body(cleaner, body, source, redact=True),
-            _clean_body(cleaner, body, source),
+    text = _clean_body(cleaner, body, source)
+    return (cleaner.redact(text), text,
             json.dumps(meta, ensure_ascii=False) if meta else None)
 
 

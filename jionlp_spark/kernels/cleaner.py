@@ -76,6 +76,44 @@ class TextCleaner:
 
     # -- fused chain ---------------------------------------------------------
 
+    def normalize(
+        self,
+        text: str,
+        remove_html_tag: bool = True,
+        convert_full2half: bool = True,
+        remove_exception_char: bool = True,
+        remove_redundant_char: bool = True,
+    ) -> str:
+        """The chain's normalization steps, in the chain's order."""
+        if remove_html_tag:
+            text = self.remove_html_tag(text)
+        if remove_exception_char:
+            text = self.remove_exception_char(text)
+        if convert_full2half:
+            text = self.convert_full2half(text)
+        if remove_redundant_char:
+            text = self.remove_redundant_char(text)
+        return text
+
+    def redact(
+        self,
+        text: str,
+        remove_parentheses: bool = True,
+        remove_url: bool = True,
+        remove_email: bool = True,
+        remove_phone_number: bool = True,
+    ) -> str:
+        """The chain's span-removal steps, in the chain's order."""
+        if remove_parentheses:
+            text = self.remove_parentheses(text)
+        if remove_url:
+            text = self.remove_url(text)
+        if remove_email:
+            text = self.remove_email(text)
+        if remove_phone_number:
+            text = self.remove_phone_number(text)
+        return text
+
     def clean_text(
         self,
         text: str,
@@ -88,23 +126,16 @@ class TextCleaner:
         remove_email: bool = True,
         remove_phone_number: bool = True,
     ) -> str:
-        if remove_html_tag:
-            text = self.remove_html_tag(text)
-        if remove_exception_char:
-            text = self.remove_exception_char(text)
-        if convert_full2half:
-            text = self.convert_full2half(text)
-        if remove_redundant_char:
-            text = self.remove_redundant_char(text)
-        if remove_parentheses:
-            text = self.remove_parentheses(text)
-        if remove_url:
-            text = self.remove_url(text)
-        if remove_email:
-            text = self.remove_email(text)
-        if remove_phone_number:
-            text = self.remove_phone_number(text)
-        return text
+        """Every normalization step, then every span-removal step."""
+        text = self.normalize(
+            text, remove_html_tag=remove_html_tag,
+            convert_full2half=convert_full2half,
+            remove_exception_char=remove_exception_char,
+            remove_redundant_char=remove_redundant_char)
+        return self.redact(
+            text, remove_parentheses=remove_parentheses,
+            remove_url=remove_url, remove_email=remove_email,
+            remove_phone_number=remove_phone_number)
 
 
 _SINGLETON: TextCleaner | None = None

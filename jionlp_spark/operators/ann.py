@@ -4,7 +4,10 @@ Brute-force cosine top-k (the exactness baseline) and an IVF-style
 bucketed variant for scale: assign every vector to its nearest of K
 centroids (sampled deterministically), then search only within the probe's
 bucket(s) — turning the O(N·Q) cross join into a bucket-partitioned join.
-All vector math is JVM-side (aggregate/zip_with over array<float>).
+Every dot product folds its dims left to right: Catalyst `aggregate` where
+the math stays JVM-side (norms, LSH signatures, ADC parts), numpy Arrow
+kernels for pair cosines and nearest-centroid/code assignment — the same
+IEEE op sequence either way, so the DuckDB oracles reproduce every double.
 """
 
 from __future__ import annotations
@@ -22,20 +25,12 @@ def _norm_col(vec_col: str):
     return F.expr(_NORM.format(a=vec_col))
 
 
-def _cosine_pre(a_vec: str, b_vec: str, a_nrm: str, b_nrm: str):
-    """Cosine with precomputed norms — the higher-order aggregate lambdas
-    run interpreted (no codegen), so folding each side's norm per PAIR
-    triples the work; computing it once per vector is numerically identical
-    (same fold, same doubles) and ~3× cheaper on pair joins."""
-    return F.expr(f"{_DOT.format(a=a_vec, b=b_vec)} / ({a_nrm} * {b_nrm})")
-
-
 def _cosine_pairs_arrow():
-    """Vectorized Arrow cosine for the candidate-pair verify join — the
-    production path: the per-pair `aggregate(zip_with(...))` fold runs as
-    interpreted Catalyst lambdas (no codegen) and dominates CPU once LSH/
-    IVF candidate volume grows; a numpy kernel over the join's Arrow
-    batches is ~10× cheaper and **bit-identical**:
+    """Vectorized Arrow cosine for the candidate-pair verify join: the
+    per-pair `aggregate(zip_with(...))` fold runs as interpreted Catalyst
+    lambdas (no codegen) and dominates CPU once LSH/IVF candidate volume
+    grows; a numpy kernel over the join's Arrow batches is ~10× cheaper
+    and **bit-identical** to that fold:
 
     - float32→float64 widening and the per-element double product are
       single IEEE ops in both paths;
@@ -64,7 +59,7 @@ def _cosine_pairs_arrow():
         dot = np.zeros(len(a))
         if av.shape[1] > 0:
             # += is the fold's +0.0 seed: canonicalizes -0.0 like the
-            # expression path's trailing `+ 0.0`
+            # Catalyst fold's trailing `+ 0.0`
             dot += np.cumsum(av * bv, axis=1)[:, -1]
         den = na.to_numpy(dtype=np.float64) * nb.to_numpy(dtype=np.float64)
         return pd.Series(dot / den)
@@ -77,43 +72,43 @@ def _cosine_pairs_arrow():
     return pandas_udf(_cos, 'double')
 
 
-def _pair_cosine(a_vec: str, b_vec: str, a_nrm: str, b_nrm: str,
-                 use_arrow: bool):
-    """Round-6 pair cosine: Arrow kernel (production) or the pure-
-    expression fold (kept as the plan-transparent baseline; both emit the
-    same doubles — see _cosine_pairs_arrow)."""
-    if use_arrow:
-        cos = _cosine_pairs_arrow()
-        return F.round(cos(F.col(a_vec), F.col(b_vec),
-                           F.col(a_nrm), F.col(b_nrm)), 6)
-    return F.round(_cosine_pre(a_vec, b_vec, a_nrm, b_nrm), 6)
+def _pair_cosine(a_vec: str, b_vec: str, a_nrm: str, b_nrm: str):
+    """Round-6 pair cosine over precomputed norms (_cosine_pairs_arrow)."""
+    cos = _cosine_pairs_arrow()
+    return F.round(cos(F.col(a_vec), F.col(b_vec),
+                       F.col(a_nrm), F.col(b_nrm)), 6)
+
+
+def _window_topk(scored: DataFrame, score: str, k: int,
+                 id_col: str) -> DataFrame:
+    """Per-query top-k of (qid, id_col, score) rows: score desc, ties to
+    the smaller id — the row_number window every search operator ends
+    with."""
+    from pyspark.sql.window import Window
+    w = Window.partitionBy('qid').orderBy(F.desc(score), F.col(id_col))
+    return (scored.withColumn('rn', F.row_number().over(w))
+            .filter(F.col('rn') <= k).drop('rn'))
 
 
 def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
                      vec_col: str = 'embedding',
-                     id_col: str = 'vec_id',
-                     use_arrow: bool = True) -> DataFrame:
+                     id_col: str = 'vec_id') -> DataFrame:
     """Exact cosine top-k: queries(qid, qe) × emb → (qid, vec_id, cos)."""
-    from pyspark.sql.window import Window
     emb = emb.withColumn('_nrm_e', _norm_col(vec_col))
     queries = queries.withColumn('_nrm_q', _norm_col('qe'))
     joined = (
         queries.crossJoin(emb)
         .filter(F.col('qid') != F.col(id_col))
         .select('qid', id_col,
-                _pair_cosine('qe', vec_col, '_nrm_q', '_nrm_e',
-                             use_arrow).alias('cos'))
+                _pair_cosine('qe', vec_col, '_nrm_q', '_nrm_e').alias('cos'))
     )
-    w = Window.partitionBy('qid').orderBy(F.desc('cos'), F.col(id_col))
-    return (joined.withColumn('rn', F.row_number().over(w))
-            .filter(F.col('rn') <= k).drop('rn'))
+    return _window_topk(joined, 'cos', k, id_col)
 
 
 def kmeans_centroids(emb: DataFrame, k: int = 8, iters: int = 1,
                      vec_col: str = 'embedding',
                      id_col: str = 'vec_id',
-                     train_cap: int | None = None,
-                     impl: str = 'arrow') -> DataFrame:
+                     train_cap: int | None = None) -> DataFrame:
     """Deterministic Lloyd k-means over cosine assignment.
 
     Init = the k vectors with the smallest md5(vec_id) (a deterministic
@@ -123,8 +118,8 @@ def kmeans_centroids(emb: DataFrame, k: int = 8, iters: int = 1,
     sums so centroids are bit-identical run-to-run and engine-to-engine
     (double addition is order-sensitive under shuffle).
 
-    Scale shape per iteration: one broadcast crossJoin (N·k row expressions,
-    whole-stage codegen), one shuffle keyed (bucket, dim) with partial aggs.
+    Scale shape per iteration: one narrow Arrow assign pass (see _assign),
+    one shuffle keyed (bucket, dim) with partial aggs.
     Returns (centroid_id, centroid array<double>).
 
     ``train_cap``: train on a deterministic md5 subsample of ~train_cap
@@ -134,7 +129,6 @@ def kmeans_centroids(emb: DataFrame, k: int = 8, iters: int = 1,
     (centroid quality needs ~10²-10³ points per centroid, not N/k).
     Opt-in (None = train on everything): the cap adds one count() job
     and changes centroid VALUES, so oracle-gated paths leave it unset.
-    ``impl='arrow'`` vectorizes the training assign pass (see _assign).
     """
     train = emb
     if train_cap is not None:
@@ -157,7 +151,7 @@ def kmeans_centroids(emb: DataFrame, k: int = 8, iters: int = 1,
         return centroids.localCheckpoint(eager=False)
     for _ in range(iters):
         assigned = _assign(train, centroids, probes=1, vec_col=vec_col,
-                           id_col=id_col, impl=impl)
+                           id_col=id_col)
         dim = (assigned
                .select('bucket', F.posexplode(
                    F.expr(f'transform({vec_col}, x -> cast(x as double))'))
@@ -191,57 +185,30 @@ def _hash_seed_centroids(emb: DataFrame, k: int, vec_col: str,
                     .alias('centroid')))
 
 
-def _assign(emb: DataFrame, centroids: DataFrame, probes: int,
-            vec_col: str, id_col: str, impl: str = 'arrow') -> DataFrame:
-    """Top-`probes` buckets per vector by cosine (round-6 before ranking —
-    deterministic across engines; ties by centroid_id).  Output keeps the
-    per-vector norm in ``_nrm`` so downstream pair joins reuse it.
-
-    impl='arrow' replaces the N·k interpreted-lambda crossJoin with a
-    vectorized mapInPandas kernel — the coarse-assignment stage dominates
-    IVF cost once k follows the n_centroids ∝ N rule (measured 99 s →
-    ~8 s at 200k vectors × k=800, scripts/scale_bench.py --families dedup).  The
-    kernel folds dims left-to-right exactly like the Catalyst aggregate
-    (bit-identical sims; see _cosine_pairs_arrow) and applies HALF_UP
-    rounding.  Default since r6 — it is the only assignment that survives
-    the k ∝ N rule at corpus scale, and it now runs under the driver's
-    DuckDB gate (ann_ivf_topk / dedup_embedding_pairs) plus the
-    row-identity parity test; ``impl='expr'`` keeps the plan-transparent
-    expression path for A/B audits (the two can differ only on an exact
-    .5e-6 representation tie, never observed on real doubles)."""
-    if impl == 'arrow':
-        return _assign_arrow(emb, centroids, probes, vec_col, id_col)
-    from pyspark.sql.window import Window
-    cents = centroids.withColumn('_nrm_c', _norm_col('centroid'))
-    sims = (emb.withColumn('_nrm', _norm_col(vec_col))
-            .crossJoin(F.broadcast(cents))
-            .select(id_col, vec_col, '_nrm', 'centroid_id',
-                    F.round(_cosine_pre(vec_col, 'centroid',
-                                        '_nrm', '_nrm_c'), 6).alias('sim')))
-    w = Window.partitionBy(id_col).orderBy(F.desc('sim'), 'centroid_id')
-    return (sims.withColumn('_rn', F.row_number().over(w))
-            .filter(F.col('_rn') <= probes)
-            .select(id_col, vec_col, '_nrm',
-                    F.col('centroid_id').alias('bucket')))
-
-
 def _half_up6(x):
     """HALF_UP rounding to 6 decimals over a numpy array — Spark's
     round() semantics (DuckDB's round is half-even; ties at an exact
-    .5e-6 double representation have never been observed on real data,
-    see _assign)."""
+    .5e-6 double representation have never been observed on real data)."""
     import numpy as np
     scaled = x * 1e6
     return np.where(x >= 0, np.floor(scaled + 0.5),
                     np.ceil(scaled - 0.5)) / 1e6
 
 
-def _assign_arrow(emb: DataFrame, centroids: DataFrame, probes: int,
-                  vec_col: str, id_col: str) -> DataFrame:
-    """Vectorized coarse assignment (see _assign impl='arrow').  The
-    centroid matrix is collected once (k tiny rows) and closed over; each
-    Arrow batch computes all k sims via sequential-dim outer-product
-    accumulation — the same left-to-right fold as the expression path."""
+def _assign(emb: DataFrame, centroids: DataFrame, probes: int,
+            vec_col: str, id_col: str) -> DataFrame:
+    """Top-`probes` buckets per vector by cosine (round-6 before ranking —
+    deterministic across engines; ties by centroid_id).  Output keeps the
+    per-vector norm in ``_nrm`` so downstream pair joins reuse it.
+
+    One mapInPandas pass: the centroid matrix is collected once (k tiny
+    rows) and closed over; each Arrow batch computes all k sims via
+    sequential-dim outer-product accumulation — the left-to-right fold of
+    the Catalyst aggregate, so sims are bit-identical to the DuckDB
+    oracle's (see _cosine_pairs_arrow) — with HALF_UP rounding.  An N·k
+    interpreted-lambda crossJoin would dominate IVF cost once k follows
+    the n_centroids ∝ N rule (measured 99 s → ~8 s at 200k vectors ×
+    k=800, scripts/scale_bench.py --families dedup)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -255,15 +222,13 @@ def _assign_arrow(emb: DataFrame, centroids: DataFrame, probes: int,
         acc += C[:, d] * C[:, d]
     cnrm = np.sqrt(acc)
     if (cnrm == 0.0).any():
-        # crash-for-crash with the expression path (see the vector-norm
-        # guard below): a caller-supplied all-zero centroid must raise
-        # like ANSI DIVIDE_BY_ZERO, not silently yield inf/nan sims
+        # crash-for-crash with ANSI Spark's DIVIDE_BY_ZERO on a
+        # zero-norm cosine (see the vector-norm guard below): a caller-
+        # supplied all-zero centroid must not yield inf/nan sims
         bad = cids[cnrm == 0.0][0]
         raise ArithmeticError(
-            f'zero-norm centroid (centroid_id {bad}) — the expression '
-            f'path raises DIVIDE_BY_ZERO here; fix the centroid input')
-
-    half_up6 = _half_up6
+            f'zero-norm centroid (centroid_id {bad}) — a Catalyst '
+            f'cosine raises DIVIDE_BY_ZERO here; fix the centroid input')
 
     vec_field = emb.schema[vec_col].dataType
 
@@ -280,23 +245,22 @@ def _assign_arrow(emb: DataFrame, centroids: DataFrame, probes: int,
                 S += np.outer(V[:, d], C[:, d])
             nrm = np.sqrt(vacc)
             if (nrm == 0.0).any():
-                # crash-for-crash with the expression path: ANSI-mode
-                # Spark raises DIVIDE_BY_ZERO on a zero-norm vector's
-                # cosine, so the vectorized path must not silently
-                # bucket what the expression plan rejects
+                # crash-for-crash with ANSI-mode Spark, which raises
+                # DIVIDE_BY_ZERO on a zero-norm vector's cosine: never
+                # silently bucket what a Catalyst cosine rejects
                 bad = pdf[id_col].to_numpy()[nrm == 0.0][0]
                 raise ArithmeticError(
-                    f'zero-norm vector (id {bad}) — the expression '
-                    f'path raises DIVIDE_BY_ZERO here; filter or '
+                    f'zero-norm vector (id {bad}) — a Catalyst '
+                    f'cosine raises DIVIDE_BY_ZERO here; filter or '
                     f'normalize degenerate vectors upstream')
-            sims = half_up6(S / np.outer(nrm, cnrm))
+            sims = _half_up6(S / np.outer(nrm, cnrm))
             # per row: top-`probes` by (sim desc, centroid_id asc) —
             # lexsort's last key is primary.  Spark orders NaN as
             # GREATEST under desc (NaN vector COMPONENTS propagate NaN
             # sims through the fold without a zero division), while
             # lexsort puts NaN last — map NaN to -inf in the negated
             # key so NaN rows rank first, ties falling to centroid_id,
-            # exactly like the expression path's row_number window
+            # exactly like a (sim desc, centroid_id) row_number window
             key = np.where(np.isnan(sims), -np.inf, -sims)
             order = np.lexsort(
                 (np.broadcast_to(cids, sims.shape), key), axis=1)
@@ -313,7 +277,7 @@ def _assign_arrow(emb: DataFrame, centroids: DataFrame, probes: int,
         emb.schema[id_col],
         T.StructField(vec_col, vec_field),
         T.StructField('_nrm', T.DoubleType()),
-        # match the expression path: centroid_id is a row_number int
+        # centroid_id is a row_number int (_hash_seed_centroids)
         T.StructField('bucket', T.IntegerType()),
     ])
     return emb.select(id_col, vec_col).mapInPandas(kernel, schema)
@@ -322,24 +286,22 @@ def _assign_arrow(emb: DataFrame, centroids: DataFrame, probes: int,
 def ivf_assign(emb: DataFrame, n_centroids: int = 16,
                vec_col: str = 'embedding', id_col: str = 'vec_id',
                centroids: DataFrame | None = None,
-               probes: int = 1, impl: str = 'arrow') -> tuple:
+               probes: int = 1) -> tuple:
     """IVF bucketing against `centroids` (default: deterministic
     hash-sampled vectors; pass kmeans_centroids(...) output for trained
     buckets).  probes > 1 emits one row per (vector, probed bucket) — used
-    on the query side for multi-probe recall.  impl='arrow' vectorizes
-    the coarse assignment (see _assign) — use for large N·k."""
+    on the query side for multi-probe recall."""
     if centroids is None:
         centroids = _hash_seed_centroids(emb, n_centroids, vec_col, id_col)
-    assigned = _assign(emb, centroids, probes, vec_col, id_col, impl)
+    assigned = _assign(emb, centroids, probes, vec_col, id_col)
     return assigned, centroids
 
 
 def ivf_topk(assigned: DataFrame, queries_assigned: DataFrame,
              k: int = 5, vec_col: str = 'embedding',
-             id_col: str = 'vec_id', use_arrow: bool = True) -> DataFrame:
+             id_col: str = 'vec_id') -> DataFrame:
     """Search only the probed bucket(s); multi-probe queries contribute one
     row per probe and the distinct() collapses duplicates."""
-    from pyspark.sql.window import Window
     joined = (
         queries_assigned.alias('q')
         .join(assigned.alias('e'), 'bucket')
@@ -347,12 +309,10 @@ def ivf_topk(assigned: DataFrame, queries_assigned: DataFrame,
         .select(F.col(f'q.{id_col}').alias('qid'),
                 F.col(f'e.{id_col}').alias(id_col),
                 _pair_cosine(f'q.{vec_col}', f'e.{vec_col}',
-                             'q._nrm', 'e._nrm', use_arrow).alias('cos'))
+                             'q._nrm', 'e._nrm').alias('cos'))
         .distinct()
     )
-    w = Window.partitionBy('qid').orderBy(F.desc('cos'), F.col(id_col))
-    return (joined.withColumn('rn', F.row_number().over(w))
-            .filter(F.col('rn') <= k).drop('rn'))
+    return _window_topk(joined, 'cos', k, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -394,8 +354,7 @@ def lsh_assign(emb: DataFrame, planes: list,
 
 def lsh_topk(emb: DataFrame, n_bits: int = 6, k: int = 3,
              n_queries: int = 3, vec_col: str = 'embedding',
-             id_col: str = 'vec_id', dim: int | None = None,
-             use_arrow: bool = True) -> DataFrame:
+             id_col: str = 'vec_id', dim: int | None = None) -> DataFrame:
     """Cosine top-k within the query's LSH bucket (single-table variant;
     more tables / fewer bits trade recall vs candidate volume exactly like
     minhash banding).
@@ -403,7 +362,6 @@ def lsh_topk(emb: DataFrame, n_bits: int = 6, k: int = 3,
     Pass ``dim`` (the embedding dimensionality) so building the query plan
     launches no Spark job; the ``first()`` fallback exists only for ad-hoc
     exploration."""
-    from pyspark.sql.window import Window
     if dim is None:  # convenience fallback — runs a job at build time
         dim = len(emb.select(vec_col).first()[0])
     assigned = lsh_assign(emb, random_hyperplanes(n_bits, dim),
@@ -415,11 +373,8 @@ def lsh_topk(emb: DataFrame, n_bits: int = 6, k: int = 3,
               .select(F.col(f'q.{id_col}').alias('qid'),
                       F.col(f'e.{id_col}').alias(id_col),
                       _pair_cosine(f'q.{vec_col}', f'e.{vec_col}',
-                                   'q._nrm', 'e._nrm', use_arrow)
-                      .alias('cos')))
-    w = Window.partitionBy('qid').orderBy(F.desc('cos'), F.col(id_col))
-    return (joined.withColumn('rn', F.row_number().over(w))
-            .filter(F.col('rn') <= k).drop('rn'))
+                                   'q._nrm', 'e._nrm').alias('cos')))
+    return _window_topk(joined, 'cos', k, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -536,28 +491,6 @@ def _pq_subvectors(emb: DataFrame, m: int, sub_d: int,
                f'sub_id * {sub_d} + 1, {sub_d})').alias('sv'))
 
 
-_PQ_SCORE = ("round(" + _DOT.format(a='sv', b='code')
-             + " - 0.5 * " + _DOT.format(a='code', b='code') + ", 6)")
-
-
-def _pq_assign(esub: DataFrame, codebooks: DataFrame,
-               id_col: str) -> DataFrame:
-    """Nearest code per (vector, subspace) — argmin L2 expressed with
-    dot folds only: argmin ‖x−c‖² = argmax (x·c − ‖c‖²/2), so the score
-    tree is the proven engine-identical list_dot_product fold and no
-    (x−y)² zip (which DuckDB 1.0 cannot fold sequentially) is needed.
-    Ties (score, then code_id) are deterministic across engines."""
-    from pyspark.sql.window import Window
-    scored = (esub.join(F.broadcast(codebooks), 'sub_id')
-              .select(id_col, 'sub_id', 'sv', 'code_id',
-                      F.expr(_PQ_SCORE).alias('sc')))
-    w = Window.partitionBy(id_col, 'sub_id').orderBy(
-        F.desc('sc'), 'code_id')
-    return (scored.withColumn('_rn', F.row_number().over(w))
-            .filter(F.col('_rn') <= 1)
-            .select(id_col, 'sub_id', 'sv', 'code_id'))
-
-
 def _collect_pq_codebooks(codebooks: DataFrame, m: int) -> list:
     """Collect the m·k tiny codebook rows into per-subspace
     (code_ids, code matrix, ‖c‖² via the sequential fold) triples for
@@ -579,14 +512,30 @@ def _collect_pq_codebooks(codebooks: DataFrame, m: int) -> list:
     return subs
 
 
-def _pq_assign_arrow(emb: DataFrame, codebooks: DataFrame, m: int,
-                     sub_d: int, vec_col: str,
-                     id_col: str) -> DataFrame:
-    """Vectorized training assignment: (id, sub_id, sv, code_id), m rows
-    per vector, same scores/ties as _pq_assign (sequential-dim fold,
-    HALF_UP, code_id tiebreak — the _assign_arrow equivalence class).
-    Replaces the N·m·k interpreted-lambda broadcast join + window that
-    dominates training once the corpus grows (the r5 IVF lesson)."""
+def _pq_nearest_codes(Vs, cids, C, cc):
+    """Nearest code id per row of one subspace block ``Vs`` — argmin L2
+    written with dot folds only: argmin ‖x−c‖² = argmax (x·c − ‖c‖²/2),
+    so the DuckDB oracle scores with its engine-identical list dot
+    product and needs no (x−y)² zip (which DuckDB 1.0 cannot fold
+    sequentially).  The dot folds dims left to right (sequential outer-
+    product accumulation, see _cosine_pairs_arrow), the score is rounded
+    HALF_UP to 6 decimals, and ties order by (score desc, code_id asc)."""
+    import numpy as np
+    S = np.zeros((len(Vs), len(C)))
+    for d in range(C.shape[1]):
+        S += np.outer(Vs[:, d], C[:, d])
+    sc = _half_up6(S - 0.5 * cc)
+    order = np.lexsort((np.broadcast_to(cids, sc.shape), -sc), axis=1)
+    return cids[order[:, 0]]
+
+
+def _pq_assign(emb: DataFrame, codebooks: DataFrame, m: int,
+               sub_d: int, vec_col: str, id_col: str) -> DataFrame:
+    """Training assignment: (id, sub_id, sv, code_id), m rows per vector,
+    each sub-vector's nearest code (_pq_nearest_codes) in one narrow
+    Arrow pass — an N·m·k interpreted-lambda broadcast join + window
+    would dominate training once the corpus grows (measured 57 s → 4.4 s
+    at x100 = 200k vectors, BENCH/PLANS.md)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -603,13 +552,7 @@ def _pq_assign_arrow(emb: DataFrame, codebooks: DataFrame, m: int,
             out_sv, out_code, out_sub = [], [], []
             for s, (cids, C, cc) in enumerate(subs):
                 Vs = V[:, s * sub_d:(s + 1) * sub_d]
-                S = np.zeros((len(V), len(C)))
-                for d in range(C.shape[1]):
-                    S += np.outer(Vs[:, d], C[:, d])
-                sc = _half_up6(S - 0.5 * cc)
-                order = np.lexsort(
-                    (np.broadcast_to(cids, sc.shape), -sc), axis=1)
-                out_code.append(cids[order[:, 0]])
+                out_code.append(_pq_nearest_codes(Vs, cids, C, cc))
                 out_sub.append(np.full(len(V), s))
                 out_sv.append(Vs)
             yield pd.DataFrame({
@@ -628,11 +571,42 @@ def _pq_assign_arrow(emb: DataFrame, codebooks: DataFrame, m: int,
     return emb.select(id_col, vec_col).mapInPandas(kernel, schema)
 
 
+def _pq_seed_codebooks(emb: DataFrame, m: int, k: int, sub_d: int,
+                       vec_col: str, id_col: str) -> DataFrame:
+    """The untrained codebooks: the k hash-sampled seed vectors
+    (_hash_seed_centroids) sliced per subspace."""
+    subs = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias('sub_id')
+    seeds = _hash_seed_centroids(emb, k, vec_col, id_col)
+    return (seeds.select(F.col('centroid_id').alias('code_id'), 'centroid')
+            .select('code_id', subs, 'centroid')
+            .select('sub_id', 'code_id',
+                    F.expr(f'slice(centroid, sub_id * {sub_d} + 1, {sub_d})')
+                    .alias('code'))
+            .localCheckpoint(eager=False))
+
+
+def _pq_code_means(assigned: DataFrame) -> DataFrame:
+    """One Lloyd update: each code becomes the decimal-exact element mean
+    of the sub-vectors assigned to it (rows of _pq_assign)."""
+    dims = (assigned
+            .select('sub_id', 'code_id',
+                    F.posexplode('sv').alias('pos', 'v'))
+            .groupBy('sub_id', 'code_id', 'pos')
+            .agg((F.sum(F.col('v').cast('string')
+                        .cast('decimal(38,18)'))
+                  .cast('double') / F.count('*')).alias('mv')))
+    return (dims.groupBy('sub_id', 'code_id')
+            .agg(F.array_sort(F.collect_list(F.struct('pos', 'mv')))
+                 .alias('s'))
+            .select('sub_id', 'code_id',
+                    F.expr('transform(s, x -> x.mv)').alias('code'))
+            .localCheckpoint(eager=False))
+
+
 def pq_codebooks(emb: DataFrame, m: int = 8, k: int = 64,
                  dim: int = 64, iters: int = 1,
                  vec_col: str = 'embedding',
-                 id_col: str = 'vec_id',
-                 impl: str = 'arrow') -> DataFrame:
+                 id_col: str = 'vec_id') -> DataFrame:
     """Train per-subspace PQ codebooks: (sub_id, code_id, code double[]).
 
     Init = the k vectors with the smallest md5(id) (the same
@@ -642,81 +616,29 @@ def pq_codebooks(emb: DataFrame, m: int = 8, k: int = 64,
     bit-identical run-to-run and engine-to-engine.  A code that loses
     all members drops out (both engines: the mean groupBy only emits
     assigned codes).  Codebooks are m·k tiny rows; training cost per
-    iteration is one assignment pass over N·m sub-rows plus one
+    iteration is one Arrow assignment pass over the N vectors plus one
     (sub, code, pos)-keyed shuffle — localCheckpoint'ed per round so
-    downstream encode/query plans start from k rows, not the corpus.
-
-    impl='arrow' (default, gate-certified through ann_pq_topk)
-    vectorizes the assignment pass — the expression path's N·m·k
-    interpreted dot folds dominate training at corpus scale (the r5
-    IVF-assigner lesson; measured 57 s → 4.4 s at x100 = 200k vectors,
-    BENCH/PLANS.md); impl='expr' keeps the plan-transparent path,
-    value-identical by the parity test."""
+    downstream encode/query plans start from k rows, not the corpus."""
     sub_d = dim // m
-    subs = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias('sub_id')
-    seeds = _hash_seed_centroids(emb, k, vec_col, id_col)
-    cb = (seeds.select(F.col('centroid_id').alias('code_id'), 'centroid')
-          .select('code_id', subs, 'centroid')
-          .select('sub_id', 'code_id',
-                  F.expr(f'slice(centroid, sub_id * {sub_d} + 1, {sub_d})')
-                  .alias('code'))
-          .localCheckpoint(eager=False))
-    if iters == 0:
-        return cb
-    esub = (None if impl == 'arrow'
-            else _pq_subvectors(emb, m, sub_d, vec_col, id_col))
+    cb = _pq_seed_codebooks(emb, m, k, sub_d, vec_col, id_col)
     for _ in range(iters):
-        if impl == 'arrow':
-            assigned = _pq_assign_arrow(emb, cb, m, sub_d,
-                                        vec_col, id_col)
-        else:
-            assigned = _pq_assign(esub, cb, id_col)
-        dims = (assigned
-                .select('sub_id', 'code_id',
-                        F.posexplode('sv').alias('pos', 'v'))
-                .groupBy('sub_id', 'code_id', 'pos')
-                .agg((F.sum(F.col('v').cast('string')
-                            .cast('decimal(38,18)'))
-                      .cast('double') / F.count('*')).alias('mv')))
-        cb = (dims.groupBy('sub_id', 'code_id')
-              .agg(F.array_sort(F.collect_list(F.struct('pos', 'mv')))
-                   .alias('s'))
-              .select('sub_id', 'code_id',
-                      F.expr('transform(s, x -> x.mv)').alias('code'))
-              .localCheckpoint(eager=False))
+        cb = _pq_code_means(_pq_assign(emb, cb, m, sub_d, vec_col, id_col))
     return cb
 
 
 def pq_encode(emb: DataFrame, codebooks: DataFrame, m: int = 8,
               dim: int = 64, vec_col: str = 'embedding',
-              id_col: str = 'vec_id', impl: str = 'arrow') -> DataFrame:
+              id_col: str = 'vec_id') -> DataFrame:
     """Encode each vector as its m nearest-code ids: (id, codes int[]).
 
-    impl='arrow' (default — the production path, and the one the DuckDB
-    gate certifies per the r6 arrow-assigner principle): the codebook is
-    collected once (m·k tiny rows) and closed over; each Arrow batch
-    scores all subspaces via sequential-dim outer-product accumulation —
-    the same left-to-right fold as the Catalyst aggregate, so scores are
-    bit-identical (see _cosine_pairs_arrow) — with HALF_UP rounding and
-    (score desc, code_id asc) tie order.  Zero shuffle: one narrow map
-    over the corpus.  impl='expr' keeps the plan-transparent broadcast-
-    join + window path for A/B audits (one N·m-row shuffle)."""
-    sub_d = dim // m
-    if impl != 'arrow':
-        assigned = _pq_assign(
-            _pq_subvectors(emb, m, sub_d, vec_col, id_col),
-            codebooks, id_col)
-        return (assigned.groupBy(id_col)
-                .agg(F.array_sort(F.collect_list(
-                    F.struct('sub_id', 'code_id'))).alias('s'))
-                .select(id_col,
-                        F.expr('transform(s, x -> x.code_id)')
-                        .alias('codes')))
-
+    The codebook is collected once (m·k tiny rows) and closed over; each
+    Arrow batch takes every subspace's nearest code (_pq_nearest_codes).
+    Zero shuffle: one narrow map over the corpus."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
+    sub_d = dim // m
     subs = _collect_pq_codebooks(codebooks, m)
 
     def kernel(batches):
@@ -727,14 +649,8 @@ def pq_encode(emb: DataFrame, codebooks: DataFrame, m: int = 8,
                           for v in pdf[vec_col]])
             codes = np.zeros((len(V), m), dtype=np.int64)
             for s, (cids, C, cc) in enumerate(subs):
-                Vs = V[:, s * sub_d:(s + 1) * sub_d]
-                S = np.zeros((len(V), len(C)))
-                for d in range(C.shape[1]):
-                    S += np.outer(Vs[:, d], C[:, d])
-                sc = _half_up6(S - 0.5 * cc)
-                order = np.lexsort(
-                    (np.broadcast_to(cids, sc.shape), -sc), axis=1)
-                codes[:, s] = cids[order[:, 0]]
+                codes[:, s] = _pq_nearest_codes(
+                    V[:, s * sub_d:(s + 1) * sub_d], cids, C, cc)
             yield pd.DataFrame({id_col: pdf[id_col].to_numpy(),
                                 'codes': list(codes)})
 
@@ -748,8 +664,8 @@ def pq_encode(emb: DataFrame, codebooks: DataFrame, m: int = 8,
 def pq_topk(emb: DataFrame, k: int = 3, n_queries: int = 3,
             m: int = 8, n_codes: int = 64, dim: int = 64,
             iters: int = 1, codebooks: DataFrame | None = None,
-            vec_col: str = 'embedding', id_col: str = 'vec_id',
-            impl: str = 'arrow') -> DataFrame:
+            vec_col: str = 'embedding',
+            id_col: str = 'vec_id') -> DataFrame:
     """PQ-ADC top-k by approximate inner product: (qid, vec_id, adc).
 
     The encoded corpus carries ONLY (id, codes) — at 100 TB the index
@@ -761,14 +677,13 @@ def pq_topk(emb: DataFrame, k: int = 3, n_queries: int = 3,
     Ranking (adc desc, vec_id) per query via window top-k like the
     sibling operators.  Queries score themselves approximately too —
     the qid==vec_id row is excluded like brute_force_topk."""
-    from pyspark.sql.window import Window
     sub_d = dim // m
     if codebooks is None:
         codebooks = pq_codebooks(emb, m=m, k=n_codes, dim=dim,
                                  iters=iters, vec_col=vec_col,
                                  id_col=id_col)
     enc = pq_encode(emb, codebooks, m=m, dim=dim, vec_col=vec_col,
-                    id_col=id_col, impl=impl)
+                    id_col=id_col)
     qsub = (_pq_subvectors(emb.filter(F.col(id_col) < n_queries),
                            m, sub_d, vec_col, id_col)
             .select(F.col(id_col).alias('qid'), 'sub_id',
@@ -781,7 +696,6 @@ def _pq_adc_topk(enc: DataFrame, codebooks: DataFrame, qsub: DataFrame,
     """ADC scoring core over an encoded corpus: explode codes, attach
     code vectors (broadcast m·k rows) and query subvectors (broadcast
     q·m rows), per-sub round-6 dots decimal-summed, window top-k."""
-    from pyspark.sql.window import Window
     parts = (enc
              .select(id_col, F.posexplode('codes')
                      .alias('sub_id', 'code_id'))
@@ -794,9 +708,7 @@ def _pq_adc_topk(enc: DataFrame, codebooks: DataFrame, qsub: DataFrame,
     adc = (parts.groupBy('qid', id_col)
            .agg(F.sum(F.col('part').cast('string').cast('decimal(38,18)'))
                 .cast('string').cast('double').alias('adc')))
-    w = Window.partitionBy('qid').orderBy(F.desc('adc'), F.col(id_col))
-    return (adc.withColumn('rn', F.row_number().over(w))
-            .filter(F.col('rn') <= k).drop('rn'))
+    return _window_topk(adc, 'adc', k, id_col)
 
 
 # ---------------------------------------------------------------------------

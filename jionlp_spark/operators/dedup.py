@@ -52,42 +52,19 @@ def shingles(docs: DataFrame, text_col: str = 'text',
     return docs.select(F.col(id_col).alias('doc_id'), sh.alias('shingles'))
 
 
-def minhash_signatures(shingle_df: DataFrame, num_hashes: int = 16,
-                       hash_fn: str = 'md5') -> DataFrame:
+def minhash_signatures(shingle_df: DataFrame,
+                       num_hashes: int = 16) -> DataFrame:
     """k minhashes per doc from salted md5 SLICES: one md5 yields four
     independent 32-bit (8-hex-char) hashes, so 16 signatures cost 4 md5
     evaluations per shingle instead of 16 — md5 dominates the minhash
     stage's CPU.  md5 keeps signatures engine-portable (the DuckDB oracle
     reproduces them bit-for-bit).
 
-    hash_fn='xxhash64' is the native alternative: each salted xxhash64
-    (whole-stage codegen, no hex-string materialization) yields two
-    independent 32-bit halves, and signatures come back as longs (8
-    bytes/hash vs 8-char strings).  Not oracle-gated (DuckDB has no
-    xxhash64) — every driver query stays on md5.
-
-    Shape: per-row array transforms + array_min — ONE pass over each
-    doc's shingle array, no shuffle.  Measured 10× faster than the
-    explode→groupBy formulation at the 100× scale point (1.5 s vs 16 s:
-    the groupBy pays per-exploded-row hashmap updates for k partial
-    mins — 2.4G updates at 150M shingle rows × 16 — while outputs are
-    identical, min over the same hash set).  Docs with empty shingle
-    arrays are dropped, matching the explode formulation's semantics."""
-    if hash_fn not in ('md5', 'xxhash64'):
-        raise ValueError(f'hash_fn must be md5 or xxhash64, got {hash_fn!r}')
-    if hash_fn == 'xxhash64':
-        base = shingle_df.filter(F.size('shingles') > 0)
-        salt_cols = [
-            F.expr(f"transform(shingles, s -> xxhash64('{g}', s))")
-            .alias(f'_h{g}') for g in range((num_hashes + 1) // 2)]
-        hashed = base.select('doc_id', *salt_cols)
-        mh = [F.expr(
-            f"array_min(transform(_h{k // 2}, x -> "
-            + (f"shiftrightunsigned(x, 32)))" if k % 2 == 0
-               else f"x & 4294967295))")).alias(f'mh{k}')
-            for k in range(num_hashes)]
-        return hashed.select('doc_id', *mh)
-    # md5 path: ONE Arrow batch pass (hashlib md5 == Spark md5 over the
+    Shape: ONE per-row pass over each doc's shingle array, no shuffle
+    (an explode→groupBy formulation pays per-exploded-row hashmap
+    updates for k partial mins — measured 10× slower at the 100× scale
+    point).  Docs with null or empty shingle arrays are dropped."""
+    # ONE Arrow batch pass (hashlib md5 == Spark md5 over the
     # same UTF-8 bytes; ASCII-hex min == UTF8String binary array_min, with
     # the same null-skipping).  Replaces the per-row higher-order
     # expression tree, which (a) ran interpreted — array lambdas are
@@ -155,21 +132,15 @@ def minhash_signatures(shingle_df: DataFrame, num_hashes: int = 16,
 def lsh_bands(signatures: DataFrame, bands: int = 4) -> DataFrame:
     """→ (doc_id, band_id, band_hash): the banded signature table — the
     joinable representation behind candidate generation AND the
-    persistent index of incremental_lsh_dedup.  String signatures (md5
-    mode) band via md5-of-concat — byte-identical to the DuckDB oracle;
-    long signatures (xxhash64 mode) band via a native xxhash64 over the
-    columns, cast to string so both forms share one index schema."""
+    persistent index of incremental_lsh_dedup.  Each band hashes as the
+    md5 of its concatenated signature strings — byte-identical to the
+    DuckDB oracle."""
     sig_cols = [c for c in signatures.columns if c.startswith('mh')]
     rows_per_band = len(sig_cols) // bands
-    string_sigs = isinstance(signatures.schema[sig_cols[0]].dataType,
-                             T.StringType)
     band_exprs = []
     for b in range(bands):
         cols = sig_cols[b * rows_per_band:(b + 1) * rows_per_band]
-        if string_sigs:
-            bh = F.md5(F.concat(*[F.col(c) for c in cols]))
-        else:
-            bh = F.xxhash64(*[F.col(c) for c in cols]).cast('string')
+        bh = F.md5(F.concat(*[F.col(c) for c in cols]))
         band_exprs.append(
             F.struct(F.lit(b).alias('band_id'), bh.alias('band_hash')))
     return signatures.select(
@@ -366,10 +337,8 @@ def winnow_near_dups(docs: DataFrame, min_shared: int = 12,
     hot_broadcast_limit=None to skip the count and always broadcast.
     """
     from jionlp_spark.operators.textstats import winnow_fingerprints
-    # arrow impl: fingerprinting dominates this job; the vectorized kernel
-    # is integer-identical to the expression path (parity-tested)
     fps = (winnow_fingerprints(docs, k=k, w=w, text_col=text_col,
-                               id_col=id_col, impl='arrow')
+                               id_col=id_col)
            .select(id_col, 'fp').distinct())
     fps = fps.persist()  # consumed by df-count AND both join sides
     hot = (fps.groupBy('fp').agg(F.count('*').alias('df'))
@@ -525,64 +494,29 @@ def publish_stream_survivors(spark, index_path: str, docs: DataFrame,
 
 def dedup_components(pairs: DataFrame, a_col: str = 'doc_a',
                      b_col: str = 'doc_b',
-                     max_iter: int = 20,
-                     impl: str = 'star') -> DataFrame:
+                     max_iter: int = 20) -> DataFrame:
     """Connected components over near-dup candidate pairs → per-doc
     cluster labels — the step a training-data pipeline needs between
     pair generation (LSH/simhash/winnow/embedding) and "keep one doc per
     cluster": transitively-linked docs form ONE cluster even when not
     directly paired.
 
-    impl='star' (default): alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — converges in O(log n)-ish rounds INDEPENDENT
-    of component diameter, so adversarial boilerplate chains (page
-    series that near-dup pairwise into a path graph) cost ~log2(chain)
-    rounds instead of one round per hop.  Each round is four shuffles
-    over the (monotonically star-collapsing) edge table.
-
-    impl='propagate': min-label propagation — label(v) starts as v;
-    each round every vertex takes the min of its own and its neighbors'
-    labels; converges in O(component diameter) rounds (fine for the
-    dense clusters real near-dup graphs produce, kept for A/B parity).
-
-    Both raise on non-convergence instead of returning fragmented
-    clusters (which would let dups survive), localCheckpoint every
-    round so lineage stays flat, and produce identical output:
+    Edge sets up to _SMALL_COMPONENTS_CUTOFF resolve on the driver
+    (_components_driver); larger ones run alternating large-star/small-
+    star contraction (Kiveris et al., "Connected Components in MapReduce
+    and Beyond", SoCC 2014), which converges in O(log n)-ish rounds
+    INDEPENDENT of component diameter, so adversarial boilerplate chains
+    (page series that near-dup pairwise into a path graph) cost
+    ~log2(chain) rounds instead of one round per hop.  Each round is four
+    shuffles over the (monotonically star-collapsing) edge table,
+    localCheckpoint'ed so lineage stays flat; non-convergence within
+    max_iter rounds raises instead of returning fragmented clusters
+    (which would let dups survive).
     → (doc_id, cluster) where cluster = min doc_id of the component.
     """
-    if impl not in ('star', 'propagate'):
-        raise ValueError(f"impl must be 'star' or 'propagate', got {impl!r}")
     edges = (pairs.select(F.col(a_col).alias('a'), F.col(b_col).alias('b'))
              .filter(F.col('a') != F.col('b')))
-    if impl == 'star':
-        return _components_star(edges, max_iter)
-    edges = (edges.union(edges.select(F.col('b').alias('a'),
-                                      F.col('a').alias('b')))
-             .distinct().persist())
-    labels = (edges.select(F.col('a').alias('v')).distinct()
-              .withColumn('label', F.col('v')).localCheckpoint(eager=False))
-    converged = False
-    for _ in range(max_iter):
-        neigh = (edges.join(labels, edges['a'] == labels['v'])
-                 .select(F.col('b').alias('v'), 'label'))
-        new = (labels.select('v', 'label').union(neigh)
-               .groupBy('v').agg(F.min('label').alias('label'))
-               .localCheckpoint(eager=False))
-        changed = (new.alias('n')
-                   .join(labels.alias('o'), 'v')
-                   .filter(F.col('n.label') != F.col('o.label')).count())
-        labels = new
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f'dedup_components did not converge in {max_iter} rounds — '
-            f'a component chain is longer than max_iter; raise max_iter '
-            f"or use impl='star' (diameter-independent)")
-    return labels.select(F.col('v').alias('doc_id'),
-                         F.col('label').alias('cluster'))
+    return _components_star(edges, max_iter)
 
 
 # pair sets at or under this size short-circuit to driver union-find
@@ -700,13 +634,13 @@ def _components_star(edges: DataFrame, max_iter: int) -> DataFrame:
 
 def dedup_keep_list(pairs: DataFrame, a_col: str = 'doc_a',
                     b_col: str = 'doc_b',
-                    max_iter: int = 20, impl: str = 'star') -> DataFrame:
+                    max_iter: int = 20) -> DataFrame:
     """Cluster summary over dedup_components: one row per near-dup
     cluster with its size, the kept doc (min id — deterministic), and
     the dropped count.  Docs in no pair are implicitly kept and don't
     appear (joining this against the corpus as an anti-join on
     non-keep members IS the dedup filter)."""
-    comp = dedup_components(pairs, a_col, b_col, max_iter, impl)
+    comp = dedup_components(pairs, a_col, b_col, max_iter)
     return (comp.groupBy('cluster')
             .agg(F.count('*').cast('long').alias('cluster_size'),
                  F.min('doc_id').cast('long').alias('keep_doc_id'))
@@ -717,9 +651,7 @@ def dedup_keep_list(pairs: DataFrame, a_col: str = 'doc_a',
 def embedding_near_dups(emb: DataFrame, threshold: float = 0.9,
                         n_centroids: int = 8, probes: int = 2,
                         vec_col: str = 'embedding',
-                        id_col: str = 'vec_id',
-                        use_arrow: bool = True,
-                        assign_impl: str = 'arrow') -> DataFrame:
+                        id_col: str = 'vec_id') -> DataFrame:
     """Embedding-cosine near-dup pairs: IVF-bucketed candidate generation
     (hash-seeded centroids, top-`probes` buckets per vector) + exact cosine
     verify within buckets.  The all-pairs O(N²) scan becomes a
@@ -727,42 +659,25 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.9,
     crawl corpus; recall is governed by probes (pair found iff the probed
     bucket sets intersect).
 
-    The verify runs per BUCKET in an applyInPandas kernel by default
-    (use_arrow=True): each vector crosses the Arrow boundary once per
-    probe (not once per candidate pair — a pair-join kernel re-serializes
-    both vectors for every pair, ~0.5 GB at 10⁶ candidates), and the
-    pairwise dot is an outer-product accumulation that folds over dims in
-    the SAME left-to-right order as the Catalyst `aggregate`, so every
-    cosine is bit-identical to the expression path (use_arrow=False, kept
-    for plan-transparent parity).  One task owns one bucket — safe while
-    bucket occupancy is bounded (n_centroids ∝ N, the IVF design rule);
-    for genuinely hot buckets fall back to the pair join + AQE skew-split.
+    The verify runs per BUCKET in an applyInPandas kernel: each vector
+    crosses the Arrow boundary once per probe (not once per candidate
+    pair — a pair-join kernel re-serializes both vectors for every pair,
+    ~0.5 GB at 10⁶ candidates), and the pairwise dot is an outer-product
+    accumulation that folds over dims in the SAME left-to-right order as
+    the Catalyst `aggregate`, so every cosine is bit-identical to the
+    DuckDB oracle's fold.  One task owns one bucket; the IVF design rule
+    n_centroids ∝ N bounds bucket occupancy.
     """
-    from jionlp_spark.operators.ann import _cosine_pre, ivf_assign
+    from jionlp_spark.operators.ann import ivf_assign
 
     assigned, _ = ivf_assign(emb, n_centroids=n_centroids, probes=probes,
-                             vec_col=vec_col, id_col=id_col,
-                             impl=assign_impl)
+                             vec_col=vec_col, id_col=id_col)
     assigned = assigned.persist()  # caller-owned (see lsh note)
-    if use_arrow:
-        pairs = _bucket_pairs_grouped(assigned, threshold, vec_col, id_col)
-        return (pairs
-                .select('vec_a', 'vec_b', F.round('cos', 6).alias('cos'))
-                .distinct()
-                .filter(F.col('cos') >= threshold))
-    a, b = assigned.alias('a'), assigned.alias('b')
-    return (
-        a.join(b, 'bucket')
-        .filter(F.col(f'a.{id_col}') < F.col(f'b.{id_col}'))
-        .select(F.col(f'a.{id_col}').alias('vec_a'),
-                F.col(f'b.{id_col}').alias('vec_b'),
-                # norms precomputed per vector in _assign — computed once
-                # per vector, reused across every candidate pair
-                F.round(_cosine_pre(f'a.{vec_col}', f'b.{vec_col}',
-                                    'a._nrm', 'b._nrm'), 6).alias('cos'))
-        .distinct()
-        .filter(F.col('cos') >= threshold)
-    )
+    pairs = _bucket_pairs_grouped(assigned, threshold, vec_col, id_col)
+    return (pairs
+            .select('vec_a', 'vec_b', F.round('cos', 6).alias('cos'))
+            .distinct()
+            .filter(F.col('cos') >= threshold))
 
 
 def _bucket_pairs_grouped(assigned: DataFrame, threshold: float,
@@ -780,8 +695,7 @@ def _bucket_pairs_grouped(assigned: DataFrame, threshold: float,
     import numpy as np
     import pandas as pd
 
-    # pair ids keep the input id column's type (string keys etc. work
-    # the same as in the expression path)
+    # pair ids keep the input id column's type (string keys work too)
     id_type = assigned.schema[id_col].dataType.simpleString()
     guard = threshold - 1e-6
 

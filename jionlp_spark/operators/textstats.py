@@ -166,10 +166,11 @@ def dataset_split_stats(docs: DataFrame, class_col: str = 'lang',
 
 
 def _winnow_arrow_udf(k: int, w: int):
-    """Vectorized winnowing kernel: numpy int64 modular arithmetic is
-    bit-equal to the JVM fold (per-step mod == closed-form mod once; all
-    intermediates < 2^63).  ~10× the interpreted higher-order-fold path —
-    the production choice at corpus scale."""
+    """Vectorized winnowing kernel.  Each k-gram hash is the rolling fold
+    acc = (acc·31 + code point) mod p seeded with 7, computed in closed
+    form with numpy int64 (per-step mod == closed-form mod once; all
+    intermediates < 2^63) — the form the DuckDB oracle writes too.  ~10×
+    cheaper than the same fold as interpreted higher-order expressions."""
     from pyspark.sql.functions import pandas_udf
 
     import numpy as np
@@ -211,53 +212,21 @@ def _winnow_arrow_udf(k: int, w: int):
 
 def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 4,
                         text_col: str = 'text',
-                        id_col: str = 'doc_id',
-                        impl: str = 'expr') -> DataFrame:
+                        id_col: str = 'doc_id') -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD'03 —
     the MOSS scheme): hash every k-gram with the polynomial rolling hash,
     slide a w-window over the hash sequence and keep the RIGHTMOST minimum
     per window; consecutive windows selecting the same position collapse.
     Guarantees any match of length ≥ k+w-1 shares a fingerprint — the
-    standard substring-level near-dup primitive.
-
-    ``impl='expr'``: pure JVM expressions (transform/aggregate — no UDF,
-    but higher-order folds run interpreted).  ``impl='arrow'``: vectorized
-    numpy pandas UDF with identical integer semantics (see
-    _winnow_arrow_udf) — the faster choice when fingerprinting dominates
-    a job.  → (doc_id, pos, fp) rows, identical under both impls
-    (tests/test_operators parity).
+    standard substring-level near-dup primitive.  One vectorized pass
+    (_winnow_arrow_udf).  → (doc_id, pos, fp) rows.
     """
-    if impl == 'arrow':
-        udf = _winnow_arrow_udf(k, w)
-        return (docs
-                .filter(F.expr(f'length({text_col}) >= {k + w - 1}'))
-                .select(id_col,
-                        F.explode(udf(F.col(text_col))).alias('s'))
-                .select(F.col(id_col),
-                        F.col('s.p').alias('pos'),
-                        F.col('s.v').alias('fp')))
-    mod = 1_000_000_007
-    hashes = (
-        f"transform(sequence(0, length({text_col}) - {k}), i -> "
-        f"aggregate(split(substring({text_col}, i + 1, {k}), ''), "
-        f"cast(7 as bigint), (acc, x) -> (acc * 31 + ascii(x)) % {mod}))"
-    )
-    # fold left→right keeping (min, pos) with <= → rightmost minimal hash
-    sel = (
-        f"transform(sequence(0, size(h) - {w}), j -> "
-        f"aggregate(sequence(j, j + {w} - 1), "
-        "named_struct('v', cast(9223372036854775807 as bigint), "
-        "'p', cast(-1 as bigint)), "
-        "(acc, p) -> case when h[p] <= acc.v "
-        "then named_struct('v', h[p], 'p', cast(p as bigint)) "
-        "else acc end))"
-    )
+    udf = _winnow_arrow_udf(k, w)
     return (docs
             .filter(F.expr(f'length({text_col}) >= {k + w - 1}'))
-            .select(id_col, F.expr(hashes).alias('h'))
             .select(id_col,
-                    F.explode(F.expr(f'array_distinct({sel})')).alias('s'))
+                    F.explode(udf(F.col(text_col))).alias('s'))
             .select(F.col(id_col),
                     F.col('s.p').alias('pos'),
                     F.col('s.v').alias('fp')))

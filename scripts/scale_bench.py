@@ -217,9 +217,6 @@ def family_dedup(spark, factors, run):
         run(f'dedup_embedding_pairs@x{factor} (k={k})',
             lambda e=emb_df, k=k: embedding_near_dups(
                 e, threshold=0.4, n_centroids=k))
-        run(f'dedup_embedding_pairs@x{factor} (k={k}, arrow-assign)',
-            lambda e=emb_df, k=k: embedding_near_dups(
-                e, threshold=0.4, n_centroids=k, assign_impl='arrow'))
 
         # incremental dedup vs a factor-sized HISTORY index: only the
         # index SCAN grows with history (columnar I/O), never the

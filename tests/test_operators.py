@@ -145,25 +145,25 @@ def test_ann_brute_vs_ivf(spark):
 
 def test_arrow_cosine_bit_equal(spark):
     """The vectorized Arrow pair-cosine must be BIT-identical to the
-    expression-fold path (same doubles pre-round): the DuckDB oracle
-    reproduces the sequential fold, so any last-ulp drift (e.g. np.dot's
-    pairwise summation) would surface as round-6 hash mismatches."""
+    expression fold (same doubles pre-round; tests/expr_reference.py):
+    the DuckDB oracle reproduces the sequential fold, so any last-ulp
+    drift (e.g. np.dot's pairwise summation) would surface as round-6
+    hash mismatches."""
+    import expr_reference as ref
     from jionlp_spark.operators.ann import ivf_assign, ivf_topk
     from jionlp_spark.operators.dedup import embedding_near_dups
     emb = spark.read.parquet('/root/testdata/sf0.001/embeddings.parquet')
 
     assigned, _ = ivf_assign(emb, n_centroids=4, probes=2)
     q = assigned.filter('vec_id < 8')
-    expr_rows = sorted(map(tuple, ivf_topk(assigned, q, k=5,
-                                           use_arrow=False).collect()))
-    arrow_rows = sorted(map(tuple, ivf_topk(assigned, q, k=5,
-                                            use_arrow=True).collect()))
+    expr_rows = sorted(map(tuple, ref.ivf_topk(assigned, q, k=5).collect()))
+    arrow_rows = sorted(map(tuple, ivf_topk(assigned, q, k=5).collect()))
     assert expr_rows == arrow_rows and len(arrow_rows) > 0
 
-    e = sorted(map(tuple, embedding_near_dups(
-        emb, threshold=-1.0, use_arrow=False).collect()))
+    e = sorted(map(tuple, ref.embedding_near_dups(
+        emb, threshold=-1.0).collect()))
     a = sorted(map(tuple, embedding_near_dups(
-        emb, threshold=-1.0, use_arrow=True).collect()))
+        emb, threshold=-1.0).collect()))
     assert e == a and len(a) > 0
 
 
@@ -319,12 +319,14 @@ def test_multimodal_resize_and_aug_add_delete(spark):
 
 def test_winnow_impls_identical(spark):
     """The vectorized arrow winnowing kernel must match the JVM expression
-    path row-for-row (same modular integer semantics)."""
+    fold (tests/expr_reference.py) row-for-row (same modular integer
+    semantics)."""
+    import expr_reference as ref
     from jionlp_spark.operators.textstats import winnow_fingerprints
     docs = spark.read.parquet('/root/testdata/sf0.001/documents.parquet') \
         .limit(80).cache()
-    a = sorted(map(tuple, winnow_fingerprints(docs, impl='expr').collect()))
-    b = sorted(map(tuple, winnow_fingerprints(docs, impl='arrow').collect()))
+    a = sorted(map(tuple, ref.winnow_fingerprints(docs).collect()))
+    b = sorted(map(tuple, winnow_fingerprints(docs).collect()))
     assert a == b and len(a) > 0
 
 
@@ -605,15 +607,18 @@ def test_jpeg_fill_bytes_and_eoi():
         is None
 
 
-def test_dedup_components_property_vs_union_find(spark):
-    """Property check: on random graphs the distributed min-label
-    propagation equals a plain Python union-find relabeled to component
-    minima."""
+def test_dedup_components_property_vs_union_find(spark, monkeypatch):
+    """Property check: on random graphs both component paths — the
+    driver union-find every pair set this small takes, and the star
+    rounds forced by a negative cutoff — equal a plain Python union-find
+    relabeled to component minima."""
     import random
 
+    from jionlp_spark.operators import dedup as dd
     from jionlp_spark.operators.dedup import dedup_components
 
     rng = random.Random(11)
+    driver_cutoff = dd._SMALL_COMPONENTS_CUTOFF
     for trial in range(3):
         n = 40
         edges = sorted({tuple(sorted(rng.sample(range(n), 2)))
@@ -637,30 +642,33 @@ def test_dedup_components_property_vs_union_find(spark):
 
         pairs = spark.createDataFrame(
             [(a, b) for a, b in edges], 'doc_a long, doc_b long')
-        for impl in ('star', 'propagate'):
+        for cutoff in (driver_cutoff, -1):
+            monkeypatch.setattr(dd, '_SMALL_COMPONENTS_CUTOFF', cutoff)
             got = {r['doc_id']: r['cluster']
-                   for r in dedup_components(pairs, max_iter=50,
-                                             impl=impl).collect()}
-            assert got == want, (impl, trial, edges)
+                   for r in dedup_components(pairs, max_iter=50).collect()}
+            assert got == want, (cutoff, trial, edges)
 
 
-def test_dedup_components_adversarial_chain(spark):
+def test_dedup_components_adversarial_chain(spark, monkeypatch):
     """A 1000-node path graph (boilerplate page series that near-dup
-    pairwise): star contraction converges in O(log n) rounds and labels
-    everything 0; diameter-bound propagation provably can NOT finish in
-    few rounds (raises instead of returning fragmented clusters)."""
+    pairwise), with the star rounds forced past the driver cutoff: star
+    contraction converges in O(log n) rounds and labels everything 0,
+    and a max_iter below what the chain needs raises instead of
+    returning fragmented clusters."""
     import pytest
 
+    from jionlp_spark.operators import dedup as dd
     from jionlp_spark.operators.dedup import dedup_components
 
+    monkeypatch.setattr(dd, '_SMALL_COMPONENTS_CUTOFF', -1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(999)],
         'doc_a long, doc_b long').coalesce(4)
-    comp = dedup_components(pairs, max_iter=16, impl='star').collect()
+    comp = dedup_components(pairs, max_iter=16).collect()
     assert len(comp) == 1000
     assert all(r['cluster'] == 0 for r in comp)
     with pytest.raises(RuntimeError, match='did not converge'):
-        dedup_components(pairs, max_iter=3, impl='propagate').collect()
+        dedup_components(pairs, max_iter=2).collect()
 
 
 def test_streaming_lsh_pairs_cross_batch_and_cap(spark, tmp_path):
@@ -709,22 +717,6 @@ def test_streaming_lsh_pairs_cross_batch_and_cap(spark, tmp_path):
     # C(5,2) = 10 of the C(8,2) = 28 — overflow emits nothing
     boiler_pairs = {(a, b) for a, b in pairs if a >= 100 and b >= 100}
     assert len(boiler_pairs) == 10
-
-
-def test_minhash_xxhash64_mode(docs):
-    """The production xxhash64 signature path: exact dups always collide
-    in every band (identical shingle sets → identical signatures), and
-    unrelated docs don't all collide; 16 long-typed signature columns."""
-    from jionlp_spark.operators.dedup import (lsh_candidate_pairs,
-                                              minhash_signatures, shingles)
-    sigs = minhash_signatures(shingles(docs, n=1), num_hashes=16,
-                              hash_fn='xxhash64')
-    assert len([c for c in sigs.columns if c.startswith('mh')]) == 16
-    assert dict(sigs.dtypes)['mh0'] == 'bigint'
-    pairs = {(r['doc_a'], r['doc_b'])
-             for r in lsh_candidate_pairs(sigs, bands=4).collect()}
-    assert (0, 1) in pairs          # exact dups collide
-    assert (0, 5) not in pairs      # unrelated languages don't
 
 
 def test_interval_ms_validation():

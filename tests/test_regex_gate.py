@@ -52,13 +52,12 @@ def test_battery_differential():
     pats = ([p for p, _f in tp.ymd_funcs] + [p for p, _f in tp.hms_funcs]
             + [tp.delta.standard_delta, tp.delta.law_delta,
                tp.delta.special_delta, tp.period_time])
+    gated = [(p, req) for p in pats
+             if (req := required_chars(p)) is not None]
     checked = skipped = 0
     for s in _sample_strings():
         chars = set(s)
-        for p in pats:
-            req = required_chars(p)
-            if req is None:
-                continue
+        for p, req in gated:
             checked += 1
             if req.isdisjoint(chars):
                 skipped += 1
